@@ -1401,32 +1401,12 @@ class Engine:
         )
         return point_lookup_fast(self.spark, table, key, value)
 
-    def merge_init(self, df: DataFrame, target_dir: str, key: str,
-                   n_buckets: int = 32) -> None:
-        """(Re)build a keyed MERGE target layout (merge.py)."""
-        from data_ingestion_challenge_spark import merge
-        merge.init_keyed(df, target_dir, key, n_buckets)
-
-    def merge_upsert(self, target_dir: str, updates: DataFrame,
-                     key: str, n_buckets: int = 32,
-                     deletes: DataFrame | None = None) -> None:
-        """Copy-on-write MERGE INTO the keyed layout: update/insert
-        `updates`, drop `deletes` — rewrites only touched buckets."""
-        from data_ingestion_challenge_spark import merge
-        merge.merge_into_keyed(self.spark, target_dir, updates, key,
-                               n_buckets, deletes)
-
-    def merged(self, target_dir: str) -> DataFrame:
-        """Read back a MERGE target as a DataFrame."""
-        from data_ingestion_challenge_spark import merge
-        return merge.read_merged(self.spark, target_dir)
-
     def txn_create(self, df: DataFrame, path: str, key: str,
                    n_buckets: int = 32):
         """Create a TRANSACTIONAL keyed table (txn.py commit log):
-        snapshot reads, time travel, optimistic multi-writer MERGE —
-        the ACID upgrade of merge_init's single-writer layout.
-        Returns the TxnTable handle."""
+        snapshot reads, time travel, optimistic multi-writer MERGE
+        (upsert + delete via merge_into).  Returns the TxnTable
+        handle."""
         from data_ingestion_challenge_spark.txn import TxnTable
         return TxnTable.create(self.spark, path, df, key, n_buckets)
 

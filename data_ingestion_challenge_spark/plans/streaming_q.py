@@ -174,35 +174,15 @@ def serving_point_lookup_fast(cat: Catalog) -> DataFrame:
     return cat.spark.createDataFrame(rows, schema=schema)
 
 
-@query(
-    "merge_upsert_rollup",
-    # MERGE INTO end-to-end: the target starts as the pre-cutoff
-    # per-user rollup; the post-cutoff users' FULL totals are merged
-    # in (update for returning users, insert for new ones).  Users
-    # with no post-cutoff activity keep their pre-cutoff totals —
-    # which ARE their full totals — so the merged table must equal
-    # the one-shot per-user aggregate over all events, bit-for-bit.
-    oracle="""
-    SELECT user_id, count(*) AS n_events,
-           CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT)
-               AS value_sum_micros
-    FROM events GROUP BY user_id
-    """,
-)
-def merge_upsert_rollup(cat: Catalog) -> DataFrame:
-    """Gates the copy-on-write MERGE sink (merge.py) under the driver:
-    init the bucket-partitioned layout, merge an update batch that
-    exercises both WHEN MATCHED (returning users) and WHEN NOT MATCHED
-    (new users), read the table back.  Only touched bucket partitions
-    rewrite (tests/test_merge.py pins untouched files by mtime)."""
-    from data_ingestion_challenge_spark.scratch import scratch_dir
-
+def _cutoff_rollups(cat: Catalog):
+    """(base, updates, top_user): the per-user rollup of the events
+    before the mid-span cutoff, the FULL per-user totals of every
+    user active after it, and the largest user_id in events."""
     from pyspark.sql import functions as F
 
-    from data_ingestion_challenge_spark import merge
-
     events = cat.events
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).collect()[0]
+    lo, hi, top_user = events.agg(F.min("ts"), F.max("ts"),
+                                  F.max("user_id")).collect()[0]
     cutoff = lo + (hi - lo) / 2
     micros = F.sum(F.round(F.col("value") * 1000000).cast("bigint")) \
         .alias("value_sum_micros")
@@ -215,12 +195,46 @@ def merge_upsert_rollup(cat: Catalog) -> DataFrame:
     updates = (events.join(F.broadcast(post_users), "user_id")
                .groupBy("user_id")
                .agg(F.count("*").alias("n_events"), micros))
+    return base, updates, top_user
 
+
+@query(
+    "merge_upsert_rollup",
+    # MERGE INTO end-to-end: the target starts as the pre-cutoff
+    # per-user rollup; the post-cutoff users' FULL totals are merged
+    # in (update for returning users, insert for new ones) and the
+    # phantom users seeded into the target are deleted in the same
+    # commit.  Users with no post-cutoff activity keep their
+    # pre-cutoff totals — which ARE their full totals — so the merged
+    # table must equal the one-shot per-user aggregate over all
+    # events, bit-for-bit.
+    oracle="""
+    SELECT user_id, count(*) AS n_events,
+           CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS BIGINT)
+               AS value_sum_micros
+    FROM events GROUP BY user_id
+    """,
+)
+def merge_upsert_rollup(cat: Catalog) -> DataFrame:
+    """Gates TxnTable.merge_into's delete arm end to end: v1 is the
+    pre-cutoff rollup plus three phantom users that never occur in
+    events; ONE merge then upserts the post-cutoff totals (WHEN
+    MATCHED for returning users, WHEN NOT MATCHED for new ones) and
+    deletes the phantoms.  A surviving phantom, or a delete that
+    drops a real user, changes the row set and mismatches."""
+    from data_ingestion_challenge_spark.scratch import scratch_dir
+
+    from data_ingestion_challenge_spark.txn import TxnTable
+
+    base, updates, top_user = _cutoff_rollups(cat)
+    phantoms = cat.spark.createDataFrame(
+        [(top_user + i, i, i * 1000) for i in (1, 2, 3)], base.schema)
     out = scratch_dir("merge_gate_")
-    merge.init_keyed(base, out, key="user_id", n_buckets=8)
-    merge.merge_into_keyed(cat.spark, out, updates, key="user_id",
-                           n_buckets=8)
-    return merge.read_merged(cat.spark, out)
+    t = TxnTable.create(cat.spark, out, base.unionByName(phantoms),
+                        key="user_id", n_buckets=8)
+    v = t.merge_into(updates, deletes=phantoms.select("user_id"))
+    assert v == 2 and t.version() == 2
+    return t.read()
 
 
 @query(
@@ -238,20 +252,22 @@ def merge_upsert_rollup(cat: Catalog) -> DataFrame:
     """,
 )
 def streaming_keyed_upsert(cat: Catalog) -> DataFrame:
-    """Gates merge.run_keyed_upsert end-to-end under the driver: the
-    streaming engine drains the events source, each micro-batch
-    sum-merges per-user counters into the bucket-partitioned layout
-    (touched buckets only, per-bucket batch-id replay gate), and the
-    final state is read back against the batch oracle."""
+    """Gates txn.run_keyed_upsert with commit_mode="merge" end to end:
+    the streaming engine drains the events source and each micro-batch
+    read-modify-writes its touched buckets (read the current per-user
+    counters, re-sum with the batch increments, commit one atomic
+    MERGE tagged with the batch id); the final snapshot is read back
+    against the batch oracle.  streaming_txn_upsert gates the default
+    "delta" mode."""
     from data_ingestion_challenge_spark.scratch import scratch_dir
 
-    from data_ingestion_challenge_spark import merge
+    from data_ingestion_challenge_spark import txn
 
     out = scratch_dir("keyed_upsert_out_")
     ck = scratch_dir("keyed_upsert_ck_")
-    merge.run_keyed_upsert(cat.spark, f"{cat.sf_dir}/events.parquet",
-                           out, ck, n_buckets=8)
-    return (merge.read_merged(cat.spark, out)
+    t = txn.run_keyed_upsert(cat.spark, f"{cat.sf_dir}/events.parquet",
+                             out, ck, n_buckets=8, commit_mode="merge")
+    return (t.read()
             .select("user_id", "n_events", "value_sum_micros"))
 
 
@@ -341,30 +357,13 @@ def txn_merge_upsert_rollup(cat: Catalog) -> DataFrame:
     """Gates the transactional table end-to-end under the driver:
     create v1 from the pre-cutoff rollup, MERGE the post-cutoff
     users' full totals (update + insert through the optimistic commit
-    protocol), read the v2 snapshot back.  merge.py's copy-on-write
-    twin is gated by merge_upsert_rollup; this entry proves the ACID
-    upgrade path computes the identical table."""
+    protocol), read the v2 snapshot back.  merge_upsert_rollup gates
+    the same merge with a delete arm."""
     from data_ingestion_challenge_spark.scratch import scratch_dir
-
-    from pyspark.sql import functions as F
 
     from data_ingestion_challenge_spark.txn import TxnTable
 
-    events = cat.events
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).collect()[0]
-    cutoff = lo + (hi - lo) / 2
-    micros = F.sum(F.round(F.col("value") * 1000000).cast("bigint")) \
-        .alias("value_sum_micros")
-
-    base = (events.where(F.col("ts") < F.lit(cutoff))
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n_events"), micros))
-    post_users = (events.where(F.col("ts") >= F.lit(cutoff))
-                  .select("user_id").distinct())
-    updates = (events.join(F.broadcast(post_users), "user_id")
-               .groupBy("user_id")
-               .agg(F.count("*").alias("n_events"), micros))
-
+    base, updates, _ = _cutoff_rollups(cat)
     out = scratch_dir("txn_gate_")
     t = TxnTable.create(cat.spark, out, base, key="user_id",
                         n_buckets=8)
@@ -396,7 +395,7 @@ def streaming_txn_upsert(cat: Catalog) -> DataFrame:
     write I/O; reads sum-fold per key — value-identical because the
     integral-micro sums commute under any batching), so this gate
     drives the aggregate-merge LSM path end to end.
-    streaming_keyed_upsert gates the plain-layout twin."""
+    streaming_keyed_upsert gates the "merge" mode."""
     from data_ingestion_challenge_spark.scratch import scratch_dir
 
     from data_ingestion_challenge_spark import txn

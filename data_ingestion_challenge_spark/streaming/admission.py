@@ -56,19 +56,6 @@ _APP = "doc_admission"
 # default executor memory.
 _PAIR_BROADCAST_MAX_ROWS = 1_000_000
 
-# Screen-plan knobs (r18, guide §3.1/§5): defaults are the measured
-# winners of the interleaved drain A/B (scripts/r18_screen_ab.py);
-# module-level so the A/B harness can flip them in-process and so a
-# deployment that disagrees with the bench geometry can re-measure.
-# Both broadcast sides are BATCH-bounded — each is a subset/aggregate
-# of the batch posting table, strictly smaller than the batch shingle
-# set `bsh` that the screen already broadcasts unconditionally — so
-# neither grows with the corpus (the growing frames stay on shuffle
-# joins on purpose, see _screen_pairs).
-_BCAST_DFREQ = True       # rarity lookup join builds on dfreq
-_BCAST_PREFIX = True      # candidate join builds on the prefix side
-_FOLD_INTER_COUNT = True  # persist+count (1 job) vs checkpoint+count
-
 _META = "_admission_meta.json"
 
 _LEASE = "_admission_lease"
@@ -1052,11 +1039,14 @@ def _screen_pairs(new_post: DataFrame, batch_sizes: DataFrame,
     # therefore all batch-bounded.  The pre-r9 plan shuffled the
     # whole pruned corpus posting set by `s` twice per micro-batch
     # (candidate join + intersection join): at a 100 TB corpus those
-    # two exchanges dominate.  Downstream joins stay ordinary shuffle
-    # joins ON PURPOSE — broadcasting the growing prefix/candidate
-    # frames was measured SLOWER (serial driver collects of frames
-    # that grow with corpus overlap); the only other broadcast is the
-    # final ratify join, whose pair-table side is near-dup-sized.
+    # two exchanges dominate.  The other broadcasts build on small
+    # frames: the rarity lookup (dfreq) and the candidate join's
+    # prefix side are BATCH-bounded (each smaller than bsh), and the
+    # final ratify join's pair table is near-dup-sized (broadcast only
+    # under a row cap).  The frames that grow with corpus overlap
+    # (rel, pa, the pre-ratify pair table) stay on shuffle joins ON
+    # PURPOSE — broadcasting them was measured SLOWER (serial driver
+    # collects).
     # Value-identical: dfreq is only ever looked up for batch
     # shingles, and the candidate / intersection joins can only match
     # on batch shingles.
@@ -1079,9 +1069,9 @@ def _screen_pairs(new_post: DataFrame, batch_sizes: DataFrame,
     # join a frame bounded by the batch's DISTINCT shingles (smaller
     # than the bsh broadcast above).  Build on dfreq explicitly: the
     # batch posting table flows straight to its doc_id window
-    # exchange.  Measured win (scripts/r18_screen_ab.py).
-    if _BCAST_DFREQ:
-        dfreq = F.broadcast(dfreq)
+    # exchange — a scale-correct build side, wall-neutral at bench
+    # geometry.
+    dfreq = F.broadcast(dfreq)
     wspec = Window.partitionBy("doc_id").orderBy("_df", "s")
     ranked = (
         new_post.join(dfreq, "s", "left").fillna({"_df": 0})
@@ -1104,10 +1094,8 @@ def _screen_pairs(new_post: DataFrame, batch_sizes: DataFrame,
     # streams rel out of its cache with NO exchange by `s`; the old
     # shuffle join exchanged both sides.  The GROWING frames (rel, pa,
     # inter pre-ratify) stay on shuffle joins on purpose.
-    if _BCAST_PREFIX:
-        pre_side = F.broadcast(pre_side)
     cand = (
-        pre_side
+        F.broadcast(pre_side)
         .join(rel.select(col("doc_id").alias("_cid"), "s",
                          col("_corp").alias("_ccorp")), "s")
         .where(col("_ccorp") | (col("_nid") < col("_cid")))
@@ -1142,19 +1130,17 @@ def _screen_pairs(new_post: DataFrame, batch_sizes: DataFrame,
     # check is a count over cached partitions; above the threshold
     # the join falls back to an ordinary shuffle join.
     _sc.setJobDescription("admission screen: candidate intersection")
-    if _FOLD_INTER_COUNT:
-        # persist + count: ONE job materializes the pair table AND
-        # yields the guard cardinality (localCheckpoint's eager
-        # materialization plus a separate cache-scan count() is two).
-        # Lineage is kept, but every downstream consumer reads the
-        # InMemoryRelation, so nothing above this line re-executes.
-        inter = inter.persist()
-        n_pairs = inter.count()
-    else:
-        inter = inter.localCheckpoint()
-        n_pairs = inter.count()
+    # persist + count: ONE job materializes the pair table AND yields
+    # the guard cardinality (localCheckpoint's eager materialization
+    # plus a separate cache-scan count() is two).  Lineage is kept,
+    # but every downstream consumer reads the InMemoryRelation, so
+    # nothing above this line re-executes.  The handle joins `caches`
+    # BEFORE the count runs: a failed count must still leave the
+    # caller able to unpersist it.
+    inter = inter.persist()
     if caches is not None:
         caches.append(inter)
+    n_pairs = inter.count()
     pair_side = inter.join(F.broadcast(sz_new), "_nid")
     if n_pairs <= _PAIR_BROADCAST_MAX_ROWS:
         pair_side = F.broadcast(pair_side)
@@ -1173,7 +1159,6 @@ def document_admission_sink(spark: SparkSession, table_path: str,
                             tau: float = 0.8,
                             sizes_dir: str | None = None,
                             run_id: str | None = None,
-                            adaptive: bool = False,
                             compact_every: int | None = None,
                             commit_mode: str = "append",
                             bloom_sidecars: bool = True,
@@ -1199,20 +1184,11 @@ def document_admission_sink(spark: SparkSession, table_path: str,
     marker persisted in the checkpoint dir; direct callers that manage
     their own batch-id monotonicity may leave it None.
 
-    ``adaptive`` (default False) scopes spark.sql.adaptive.enabled
-    around each batch: the admission pipeline is ~25 batch-sized
-    shuffle stages per micro-batch, and AQE re-plans EVERY one of
-    them — measured 2.3× end-to-end overhead at bench scale (9.9 s →
-    4.2 s per batch) for zero benefit, since every intermediate is
-    batch-bounded (the corpus is only touched through pruned
-    bucket-equi-joins against batch-sized sets).  Pass True when the
-    corpus side needs runtime skew handling (very hot shingles at
-    very large corpus scale).  CAVEAT: spark.conf is SESSION-scoped,
-    so unrelated queries planned on this SparkSession from other
-    threads during a micro-batch also plan with AQE off for that
-    window — run the admission driver on its own SparkSession (the
-    deployment shape) or pass adaptive=True when sharing one with
-    concurrent analytical work.
+    Each batch runs with spark.sql.adaptive.enabled scoped OFF: AQE
+    re-plans every one of the ~25 batch-bounded shuffle stages per
+    micro-batch, measured as a 2.3× end-to-end overhead at bench
+    scale for no benefit.  spark.conf is SESSION-scoped, so run the
+    admission driver on its own SparkSession.
 
     ``compact_every`` auto-folds the posting store (and sizes store)
     whenever the number of per-batch increments reaches it, via
@@ -1303,8 +1279,7 @@ def document_admission_sink(spark: SparkSession, table_path: str,
             return  # crash-replayed batch: already committed whole
         _AQE = "spark.sql.adaptive.enabled"
         prev_aqe = spark.conf.get(_AQE, "true")
-        if not adaptive:
-            spark.conf.set(_AQE, "false")
+        spark.conf.set(_AQE, "false")
         try:
             _admit_body(batch_df, batch_id, tag)
             if compact_every:
@@ -1801,7 +1776,6 @@ def run_document_admission(spark: SparkSession, watch_dir: str,
                            n_buckets: int = 32, n: int = 3,
                            tau: float = 0.8,
                            sizes_dir: str | None = None,
-                           adaptive: bool = False,
                            compact_every: int | None = None,
                            commit_mode: str = "append",
                            max_files_per_trigger: int = 64,
@@ -1864,7 +1838,7 @@ def run_document_admission(spark: SparkSession, watch_dir: str,
         admit, table = document_admission_sink(
             spark, table_path, postings_dir, log_dir,
             n_buckets=n_buckets, n=n, tau=tau, sizes_dir=sizes_dir,
-            run_id=run_id, adaptive=adaptive,
+            run_id=run_id,
             compact_every=compact_every, commit_mode=commit_mode,
             shard_col=shard_col)
         q = (spark.readStream.schema(DOCS_SCHEMA)

@@ -4,10 +4,9 @@ OPTIMISTIC multi-writer MERGE — built from nothing but immutable
 uuid-named data files and an atomic version-file claim (tmp-write +
 hard-link: the record is either fully present or absent).
 
-merge.py's lockfile fences the plain layout to a SINGLE writer; this
-module is the upgrade path the round-4 verdict asked about ("ACID
-table format"): the same MERGE contract, but two concurrent writers
-both SUCCEED (serialized by the log) instead of one failing.
+This is the repo's one keyed MERGE (upsert + delete): two concurrent
+writers both SUCCEED, serialized by the log — the ACID table format a
+plain copy-on-write parquet layout cannot give without a writer lock.
 
 Layout:
 
@@ -84,7 +83,7 @@ def _version_file(path: str, v: int) -> str:
 class TxnTable:
     """A keyed, bucket-partitioned table with a commit log.
 
-    Like SQL MERGE (and merge.py), `merge_into` requires at most one
+    Like SQL MERGE, `merge_into` requires at most one
     update row per key; a key in both updates and deletes is an
     upsert (the update wins)."""
 
@@ -1311,10 +1310,9 @@ class TxnTable:
                 else:
                     current = self._read_buckets(active, touched,
                                                  added_at, run_files)
-                    # No checkpoint needed (unlike merge.py): data
-                    # files are immutable — the merge reads old files
-                    # and stages NEW ones, never overwriting what it
-                    # reads.
+                    # No checkpoint needed: data files are immutable —
+                    # the merge reads old files and stages NEW ones,
+                    # never overwriting what it reads.
                     merged = updates if current is None else (
                         current.join(drop_keys.distinct(), self.key,
                                      "left_anti")
@@ -1549,10 +1547,8 @@ def run_keyed_upsert(spark: SparkSession, events_path: str,
     engine, landing in the TRANSACTIONAL table: each micro-batch
     sum-accumulates per-user (n_events, value_sum_micros) through
     accumulate_batch — one atomic commit per batch, tagged with
-    (app, batch_id) so a crash-replayed batch is skipped whole.  The
-    merge.py twin (merge.run_keyed_upsert) needs a per-BUCKET replay
-    gate because its multi-partition overwrite isn't atomic; here the
-    commit is, so idempotence is a single log lookup.
+    (app, batch_id) so a crash-replayed batch is skipped whole —
+    idempotence is a single log lookup, no per-bucket bookkeeping.
 
     ``commit_mode="delta"`` (default since r10) commits each batch's
     increments as an append-delta run — O(batch) write I/O, vs the

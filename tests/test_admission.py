@@ -562,11 +562,12 @@ def test_fused_screen_equals_separate_pipelines(spark):
     tau = 0.8
     cp = _postings(corpus, 3)
     bp = _postings(batch, 3)
+    caches = [cp, bp]
     try:
         bs = bp.groupBy("doc_id").agg(F.count("*").alias("n"))
         cs = cp.groupBy("doc_id").agg(F.count("*").alias("n"))
         fused = _screen_pairs(bp, bs, cp.select("doc_id", "s"), cs,
-                              tau).collect()
+                              tau, caches=caches).collect()
         got_batch = {(r.doc_id, r.corpus_doc_id, r.jaccard)
                      for r in fused if not r._corp}
         got_corpus = {(r.doc_id, r.corpus_doc_id, r.jaccard)
@@ -578,8 +579,8 @@ def test_fused_screen_equals_separate_pipelines(spark):
             batch, cp.select("doc_id", "s"), n=3, tau=tau,
             sizes=cs, new_post=bp).collect()}
     finally:
-        cp.unpersist()
-        bp.unpersist()
+        for h in caches:
+            h.unpersist()
     assert got_batch == want_batch and want_batch  # planted pair found
     assert got_corpus == want_corpus and want_corpus
     # the same-id same-text collision surfaces as a corpus self-match
@@ -603,78 +604,23 @@ def test_ratify_broadcast_guard_falls_back_to_shuffle(spark,
         [(1, "a b c d e f"), (2, "a b c d e f g"), (3, "x y z w v")],
         "doc_id long, text string")
     bp = _postings(batch, 3)
+    caches = [bp]
     try:
         bs = bp.groupBy("doc_id").agg(F.count("*").alias("n"))
 
         def _pairs():
             return {(r.doc_id, r.corpus_doc_id, r.jaccard)
                     for r in admission._screen_pairs(
-                        bp, bs, None, None, 0.5).collect()}
+                        bp, bs, None, None, 0.5,
+                        caches=caches).collect()}
 
         want = _pairs()
         monkeypatch.setattr(admission,
                             "_PAIR_BROADCAST_MAX_ROWS", 0)
         assert _pairs() == want and want
     finally:
-        bp.unpersist()
-
-
-def test_screen_plan_knobs_value_identical(spark, monkeypatch):
-    """The r18 screen-plan knobs (_BCAST_DFREQ / _BCAST_PREFIX /
-    _FOLD_INTER_COUNT) are PLAN-ONLY: every combination must produce
-    bit-identical pair sets on a batch-plus-corpus screen exercising
-    all three touched joins (rarity lookup, candidate join, guarded
-    ratify)."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from data_ingestion_challenge_spark.operators.dedup import (
-        _postings,
-    )
-    from data_ingestion_challenge_spark.streaming import admission
-
-    rng = random.Random(7)
-    vocab = [f"w{i}" for i in range(30)]
-
-    def doc(n):
-        return " ".join(rng.choice(vocab) for _ in range(n))
-
-    corpus_rows = [(i, doc(rng.randint(8, 25))) for i in range(25)]
-    batch_rows = [(100 + j, doc(rng.randint(8, 25)))
-                  for j in range(20)]
-    batch_rows += [(200, corpus_rows[3][1] + " pad"),  # corpus near-dup
-                   (201, batch_rows[0][1])]            # in-batch dup
-    corpus = spark.createDataFrame(corpus_rows,
-                                   "doc_id long, text string")
-    batch = spark.createDataFrame(batch_rows,
-                                  "doc_id long, text string")
-    cp = _postings(corpus, 3)
-    bp = _postings(batch, 3)
-    try:
-        bs = bp.groupBy("doc_id").agg(F.count("*").alias("n"))
-        cs = cp.groupBy("doc_id").agg(F.count("*").alias("n"))
-
-        def _pairs():
-            return {(r.doc_id, r.corpus_doc_id, r._corp, r.jaccard)
-                    for r in admission._screen_pairs(
-                        bp, bs, cp.select("doc_id", "s"), cs,
-                        0.8).collect()}
-
-        got = {}
-        for d, p, f in [(False, False, False), (True, False, False),
-                        (False, True, False), (False, False, True),
-                        (True, True, True)]:
-            monkeypatch.setattr(admission, "_BCAST_DFREQ", d)
-            monkeypatch.setattr(admission, "_BCAST_PREFIX", p)
-            monkeypatch.setattr(admission, "_FOLD_INTER_COUNT", f)
-            got[(d, p, f)] = _pairs()
-        base = got[(False, False, False)]
-        assert base  # the planted dups surface
-        assert all(v == base for v in got.values())
-    finally:
-        cp.unpersist()
-        bp.unpersist()
+        for h in caches:
+            h.unpersist()
 
 
 def test_stale_empty_lease_ages_out(spark, dirs):

@@ -392,45 +392,6 @@ def test_passjoin_segments_equal_naive_all_pairs(spark, docs, edits):
     assert got == want
 
 
-_merge_ops = st.lists(
-    st.tuples(st.sampled_from(["upsert", "delete"]),
-              st.integers(0, 15),         # key
-              st.integers(-100, 100)),    # value (ignored for delete)
-    min_size=1, max_size=12)
-
-
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(_merge_ops)
-def test_merge_equals_dict_replay(spark, tmp_path_factory, ops):
-    """Any sequence of keyed upserts/deletes through merge.py must
-    leave exactly the state a python dict replay leaves."""
-    from data_ingestion_challenge_spark import merge
-
-    out = str(tmp_path_factory.mktemp("mprop"))
-    base = [(k, k * 10) for k in range(5)]
-    merge.init_keyed(spark.createDataFrame(base, "k long, v long"),
-                     out, key="k", n_buckets=4)
-    state = dict(base)
-    for op, k, v in ops:
-        if op == "upsert":
-            merge.merge_into_keyed(
-                spark, out,
-                spark.createDataFrame([(k, v)], "k long, v long"),
-                key="k", n_buckets=4)
-            state[k] = v
-        else:
-            merge.merge_into_keyed(
-                spark, out,
-                spark.createDataFrame([], "k long, v long"),
-                key="k", n_buckets=4,
-                deletes=spark.createDataFrame([(k,)], "k long"))
-            state.pop(k, None)
-    got = {(r["k"], r["v"]) for r in
-           merge.read_merged(spark, out).collect()}
-    assert got == set(state.items())
-
-
 @settings(max_examples=15, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(_corpus, st.integers(min_value=0, max_value=7))

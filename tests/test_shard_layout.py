@@ -83,13 +83,23 @@ def test_shard_pruned_screen_equals_full_screen(spark, store):
         F.count("*").alias("n"))
 
     def _pairs(cp):
-        out = adm._screen_pairs(batch_post, batch_sizes,
-                                cp.select("doc_id", "s"),
-                                sizes, tau=0.5)
-        return sorted((r.doc_id, r.corpus_doc_id, r.jaccard)
-                      for r in out.collect())
+        caches = []
+        try:
+            out = adm._screen_pairs(batch_post, batch_sizes,
+                                    cp.select("doc_id", "s"),
+                                    sizes, tau=0.5, caches=caches)
+            return sorted((r.doc_id, r.corpus_doc_id, r.jaccard)
+                          for r in out.collect())
+        finally:
+            for h in caches:
+                h.unpersist()
 
+    # The cache manager is session-wide: drop what earlier tests left
+    # so the check below sees only what the screen leaves behind.
+    spark.catalog.clearCache()
     full = _pairs(corpus)
     pruned = _pairs(corpus.where(F.col("shard") == "A"))
     assert full == pruned
     assert full, "toy must actually produce a corpus match"
+    # every frame the screen persisted went back through `caches`
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -1,8 +1,8 @@
 """Commit-log table tests (txn.py): snapshot isolation, MERGE
 semantics equal to a recompute, optimistic two-writer concurrency
-(both succeed — the upgrade over merge.py's single-writer fence),
-conflict-triggered recompute, orphan invisibility, time travel,
-vacuum."""
+(both succeed — no writer lock), conflict-triggered recompute,
+O(touched buckets) rewrites, orphan invisibility, time travel,
+vacuum, and the registered MERGE gates against the batch rollup."""
 
 from __future__ import annotations
 
@@ -42,6 +42,31 @@ def test_merge_upsert_delete_equals_recompute(spark, table):
     assert _rows(table.read()) == want
 
 
+def test_merge_rewrites_only_touched_buckets(spark, table):
+    """A one-key merge_into is O(touched buckets): every data file of
+    the other buckets stays live in the new snapshot, byte for byte,
+    and only the touched bucket's files are replaced."""
+    import hashlib
+
+    def _digests(active, keep):
+        out = {}
+        for f, b in active.items():
+            if keep(b):
+                with open(os.path.join(table.path, f), "rb") as fh:
+                    out[f] = hashlib.sha256(fh.read()).hexdigest()
+        return out
+
+    b7 = spark.sql("SELECT pmod(hash(7L), 8)").collect()[0][0]
+    _, before = table._snapshot()
+    untouched = _digests(before, lambda b: b != b7)
+    assert untouched, "expected untouched bucket files"
+    table.merge_into(spark.createDataFrame([(7, -7)], "k long, v long"))
+    _, after = table._snapshot()
+    assert _digests(after, lambda b: b != b7) == untouched
+    rewritten = {f for f, b in after.items() if b == b7}
+    assert rewritten and not rewritten & set(before)
+
+
 def test_duplicate_update_keys_raise(spark, table):
     dup = spark.createDataFrame([(5, 1), (5, 2)], "k long, v long")
     with pytest.raises(ValueError, match="at most one source row"):
@@ -49,7 +74,7 @@ def test_duplicate_update_keys_raise(spark, table):
 
 
 def test_two_writers_both_succeed_disjoint(spark, table):
-    """The headline upgrade over merge.py: writer A stages, writer B
+    """The headline multi-writer case: writer A stages, writer B
     commits first, A loses the version claim — and because B touched
     DISJOINT buckets, A re-claims the next version with no recompute.
     Both updates land."""
@@ -122,8 +147,8 @@ def test_time_travel(spark, table):
 
 def test_delete_to_empty_bucket(spark, tmp_path):
     """Deleting every key of a bucket leaves the bucket empty — the
-    commit removes its files without adding any (the case dynamic
-    partition overwrite silently no-ops on in merge.py)."""
+    commit removes its files without adding any (the case a dynamic
+    partition overwrite would silently no-op on)."""
     base = spark.createDataFrame([(1, 1), (2, 2)], "k long, v long")
     t = TxnTable.create(spark, str(tmp_path / "d"), base,
                         key="k", n_buckets=2)
@@ -138,8 +163,8 @@ def test_delete_to_empty_bucket(spark, tmp_path):
 def test_accumulate_batch_replay_idempotent(spark, tmp_path):
     """A crash-replayed micro-batch (same batch_id) must be skipped
     WHOLE — the (app, batch_id) txn tag in the commit log is the
-    idempotence gate, and unlike merge.py's per-bucket variant the
-    commit is atomic so no partial-bucket bookkeeping is needed."""
+    idempotence gate; the commit is atomic, so no partial-bucket
+    bookkeeping is needed."""
     t = TxnTable.create(
         spark, str(tmp_path / "acc"),
         spark.createDataFrame([], "k long, n long"),
@@ -331,36 +356,6 @@ def test_vacuum_retention_preserves_recent_time_travel(spark, table):
     table.vacuum(retain_versions=1)   # keep v2 and v3 files
     assert (5, 999) in _rows(table.read(version=2))
     assert (6, 888) in _rows(table.read(version=3))
-
-
-def test_merge_and_txn_sinks_agree(spark, tmp_path):
-    """Cross-validation of the two MERGE sinks: the same program of
-    upsert/delete batches through merge.py (copy-on-write layout) and
-    txn.py (commit log) must produce the identical table."""
-    from data_ingestion_challenge_spark import merge
-
-    base = spark.createDataFrame(
-        [(i, i * 2) for i in range(40)], "k long, v long")
-    mdir = str(tmp_path / "m")
-    merge.init_keyed(base, mdir, key="k", n_buckets=4)
-    t = TxnTable.create(spark, str(tmp_path / "x"), base,
-                        key="k", n_buckets=4)
-    program = [
-        ([(3, 100), (41, 200)], [7]),
-        ([(3, 101)], [41, 9]),
-        ([], [3]),
-    ]
-    for ups, ds in program:
-        updf = spark.createDataFrame(ups, "k long, v long") if ups \
-            else spark.createDataFrame([], "k long, v long")
-        deldf = spark.createDataFrame([(k,) for k in ds], "k long") \
-            if ds else None
-        merge.merge_into_keyed(spark, mdir, updf, key="k",
-                               n_buckets=4, deletes=deldf)
-        t.merge_into(updf, deletes=deldf)
-    got_m = _rows(merge.read_merged(spark, mdir))
-    got_t = _rows(t.read())
-    assert got_m == got_t and len(got_t) > 0
 
 
 def test_last_txn_survives_checkpoint_and_expire(spark, table):
@@ -660,3 +655,27 @@ def test_expire_log_vintage_schemaless_table(spark, table):
     assert table.expire_log() > 0           # second: must NOT refuse
     got = _rows(table.read())
     assert (5, 1) in got and (6, 2) in got
+
+
+@pytest.mark.parametrize("name", ["merge_upsert_rollup",
+                                  "streaming_keyed_upsert"])
+def test_registered_merge_gate_equals_batch_rollup(spark, cat, name):
+    """Each registered MERGE gate equals the one-shot per-user
+    aggregate (its registered oracle's claim) on real data:
+    merge_upsert_rollup runs the update, insert and delete arms in
+    one commit; streaming_keyed_upsert drives
+    accumulate_batch(commit_mode="merge") once per micro-batch."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_challenge_spark.plans import QUERIES
+    from tests.conftest import SF_DIR
+    got = sorted(map(tuple,
+                     QUERIES[name](spark, SF_DIR)
+                     .select("user_id", "n_events", "value_sum_micros")
+                     .collect()))
+    micros = F.sum(F.round(F.col("value") * 1000000).cast("bigint"))
+    want = sorted(map(tuple,
+                      cat.events.groupBy("user_id")
+                      .agg(F.count("*").alias("n"), micros.alias("s"))
+                      .collect()))
+    assert got == want
