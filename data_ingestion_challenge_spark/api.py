@@ -154,13 +154,15 @@ class Engine:
         q.awaitTermination()
 
     def maintain_rollup(self, events_path: str, out_dir: str,
-                        checkpoint: str) -> None:
-        """Incrementally maintain the per-day rollup (see
-        streaming/incremental.py)."""
+                        checkpoint: str):
+        """Incrementally maintain the per-(event_type, day) rollup (see
+        streaming/incremental.py); returns its TxnTable — decode it
+        with incremental.read_rollup."""
         from data_ingestion_challenge_spark.streaming.incremental import (
             run_incremental_rollup,
         )
-        run_incremental_rollup(self.spark, events_path, out_dir, checkpoint)
+        return run_incremental_rollup(self.spark, events_path, out_dir,
+                                      checkpoint, grain="day")
 
     def ingest_documents(self, watch_dir: str, table_path: str,
                          postings_dir: str, log_dir: str,

@@ -311,7 +311,7 @@ def hourly_anomaly_mad(events: DataFrame) -> DataFrame:
 def mad_score_hourly(h: DataFrame) -> DataFrame:
     """MAD-score a prebuilt (event_type, hour_ts, n) rollup — split
     out so the monitor can read a CONTINUOUSLY MAINTAINED rollup
-    (streaming/incremental.run_incremental_keyed_rollup) instead of
+    (streaming/incremental.run_incremental_rollup) instead of
     re-scanning event history per evaluation; hourly_anomaly_mad is
     this over the one-shot batch rollup."""
     med = (h.groupBy("event_type")

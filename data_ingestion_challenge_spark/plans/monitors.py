@@ -39,29 +39,25 @@ from data_ingestion_challenge_spark.plans.registry import query
 )
 def streaming_anomaly_monitor(cat: Catalog) -> DataFrame:
     """Streaming-maintenance × operator composition on the REAL
-    engine: run_incremental_keyed_rollup_delta drains the bounded
-    source committing each micro-batch's (event_type, hour)
-    increments as ONE atomic O(batch) append-delta run
-    (TxnTable.accumulate_batch commit_mode="delta" — the r11
-    unification: the keyed continuous aggregate rides the same
-    sum-merge LSM as the streaming keyed upsert, instead of
-    read-modify-write partition overwrites), then mad_score_hourly
-    reads the maintained rollup — the monitor never re-scans event
-    history, so each evaluation costs O(|types|·|hours|) regardless
-    of stream length.  Equivalence vs the overwrite-path rollup is
-    pinned in tests/test_streaming.py."""
+    engine: run_incremental_rollup drains the bounded source
+    committing each micro-batch's (event_type, hour) increments as
+    ONE atomic O(batch) append-delta run (TxnTable.accumulate_batch
+    commit_mode="delta"), then mad_score_hourly reads the maintained
+    rollup — the monitor never re-scans event history, so each
+    evaluation costs O(|types|·|hours|) regardless of stream
+    length."""
     from pyspark.sql import functions as F
 
     from data_ingestion_challenge_spark.scratch import scratch_dir
     from data_ingestion_challenge_spark.streaming.incremental import (
-        read_keyed_rollup_delta, run_incremental_keyed_rollup_delta,
+        read_rollup, run_incremental_rollup,
     )
 
     out = scratch_dir("anom_rollup_out_")
     ck = scratch_dir("anom_rollup_ck_")
-    t = run_incremental_keyed_rollup_delta(
+    t = run_incremental_rollup(
         cat.spark, f"{cat.sf_dir}/events.parquet", out, ck)
-    h = (read_keyed_rollup_delta(t)
+    h = (read_rollup(t)
          .select("event_type",
                  F.col("bucket_ts").alias("hour_ts"),
                  F.col("n_events").alias("n")))

@@ -1,342 +1,50 @@
 """Incremental rollup maintenance: the continuous-aggregate pattern.
 
 An ingestion pipeline doesn't recompute its serving rollups from
-scratch per batch — it UPSERTS the partitions each micro-batch touches.
-`run_incremental_rollup` wires that with foreachBatch:
+scratch per batch — it folds each micro-batch's increments into the
+maintained state.  `run_incremental_rollup` wires that with
+foreachBatch over a TxnTable (txn.py):
 
-  per batch:  batch-agg (day, n_events, total) →
-              read the sink's CURRENT rows for the affected days →
-              merge (sum) → dynamic-partition-overwrite ONLY those days
+  per batch:  per-(event_type, grain-bucket) increments
+              (n_events, value_sum_micros) →
+              TxnTable.accumulate_batch(commit_mode="delta")
 
-Dynamic overwrite (`partitionOverwriteMode=dynamic`) rewrites just the
-day partitions present in the merged frame — untouched history is
-never rewritten, so cost per batch is O(touched days), not O(history).
-The merged frame is materialized (localCheckpoint) BEFORE the write so
-the read-modify-write on the same path can't race its own lazy scan.
+Each batch commits as ONE atomic O(batch) append-delta run tagged
+(app, batch_id): reads fold the runs per key, and the run ladder is
+folded every ``compact_every`` commits.  Exactly-once under crash
+replay comes from the log — a replayed batch whose id is already
+committed is skipped whole, which is sound because the commit is
+atomic.  Sums are integral micro-units, so the maintained state is
+exact under any batching of the input.  The same table serves every
+grain: the registered per-day gate sums the keyed rows over
+event_type.
 
-On a lake with ACID tables this maps 1:1 to `MERGE INTO`; plain
-parquet + dynamic overwrite is the dependency-free equivalent.  Replay
-idempotency: every sink row carries ``last_batch_id``, the id of the
-batch that last rewrote its day partition.  The unit of overwrite IS
-the day partition, so gating is per-day — a replayed batch (write
-committed, checkpoint commit lost) skips the days whose partitions
-already carry its id and re-merges only the days the crash left
-behind.  (Restarting a stream with a FRESH checkpoint against an
-existing sink resets batch ids and would wrongly skip — reuse the
-checkpoint, as the streaming engine requires anyway.)
+Resuming needs the SAME stream checkpoint: a fresh checkpoint
+restarts batch ids at 0, and the log would skip every new batch as a
+replay — the runner refuses that case before the stream starts.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
-
-def _read_sink_or_empty(spark: SparkSession, out_dir: str, schema: str,
-                        part_col: str, part_vals: list) -> DataFrame:
-    """Touched-bucket read that treats ONLY two verified conditions
-    as 'first batch': the engine's typed PATH_NOT_FOUND, or a sink
-    directory that exists but holds no rows at all (a caller-created
-    empty dir — no partition column is discovered, so the pruning
-    filter can't even resolve).  A bare except here would be a
-    data-loss bug: any transient read failure over a REAL sink
-    (storage hiccup, perm flap) would silently stand in an empty
-    frame, and the dynamic overwrite would then replace the touched
-    partitions with the increment alone — dropping every prior
-    aggregate in them.  Every other failure aborts the batch (the
-    checkpoint replays it)."""
-    try:
-        df = spark.read.schema(schema).parquet(out_dir)
-    except AnalysisException as e:
-        cond = getattr(e, "getCondition", lambda: None)() or str(e)
-        if "PATH_NOT_FOUND" not in cond:
-            raise
-        return spark.createDataFrame([], schema)
-    if part_col not in df.columns:
-        # No partition directories discovered.  Empty dir → first
-        # batch.  Rows WITHOUT the partition layout → not a sink this
-        # module wrote; refuse rather than overwrite it.
-        if df.isEmpty():
-            return spark.createDataFrame([], schema)
-        raise ValueError(
-            f"{out_dir}: existing data carries no {part_col}= "
-            "partition layout — not an incremental-rollup sink")
-    return _read_touched(spark, out_dir, schema, part_col,
-                         part_vals).localCheckpoint()
+_APP = "keyed_rollup"
 
 
-# Pre-epoch-suffix keyed-rollup partition dirs: exactly
-# 'bucket=yyyy-MM-dd-HH' (the new format appends '-<epoch seconds>').
-_LEGACY_BUCKET = re.compile(r"^bucket=\d{4}-\d{2}-\d{2}-\d{2}$")
-
-
-def _refuse_legacy_bucket_layout(out_dir: str) -> None:
-    """Refuse to operate on a keyed-rollup sink written before the
-    partition value gained its epoch-seconds suffix (the r9
-    DST-injectivity fix).  Resuming such a sink silently corrupts it
-    twice over: the pruned read filters on NEW-format strings, so
-    every old-format partition is invisible (current comes back
-    empty and the replay gate is bypassed), and the dynamic overwrite
-    then writes new-format partitions BESIDE the old dirs — after
-    which read_keyed_rollup double-counts every pre-upgrade hour.
-    One-time migration: read each legacy dir's rows and re-merge them
-    into a fresh sink via merge_keyed_batch (or rename each dir to
-    bucket=<prefix>-<epoch seconds of the bucket in the session tz>)."""
-    try:
-        entries = os.listdir(out_dir)
-    except (FileNotFoundError, NotADirectoryError):
-        return
-    legacy = sorted(e for e in entries if _LEGACY_BUCKET.match(e))
-    if legacy:
-        raise ValueError(
-            f"{out_dir}: legacy keyed-rollup partitions present "
-            f"(e.g. {legacy[0]!r}) — written before the "
-            f"epoch-suffixed bucket format.  Resuming would bypass "
-            f"the replay gate and double-count every pre-upgrade "
-            f"hour.  Migrate once: re-merge the legacy rows into a "
-            f"fresh sink (merge_keyed_batch), or rename each dir to "
-            f"bucket=<prefix>-<epoch seconds>.")
-
-
-def _hour_bucket_str(c):
-    """Partition value for an hour bucket: wall-clock prefix for
-    operability plus the bucket's epoch seconds.  The epoch component
-    makes the string INJECTIVE over bucket_ts in any session timezone
-    — a bare 'yyyy-MM-dd-HH' maps the DST fall-back's two distinct
-    hour instants to one directory, and since the replay gate filters
-    per bucket_ts while the overwrite unit is the partition string, a
-    partial replay could drop the sibling hour's rows from the
-    rewritten partition."""
-    return F.concat_ws(
-        "-", F.date_format(c, "yyyy-MM-dd-HH"),
-        F.unix_timestamp(c).cast("string"))
-
-ROLLUP_SCHEMA = "day_ts timestamp, n_events bigint, value_sum_micros bigint"
-_SINK_SCHEMA = ROLLUP_SCHEMA + ", last_batch_id bigint"
-
-
-def _day_agg(df: DataFrame) -> DataFrame:
-    # integer micro-units → merge-by-sum stays exact under any
-    # batching of the input
-    return (
-        df.groupBy(F.date_trunc("day", col("ts")).alias("day_ts"))
-        .agg(F.count("*").alias("n_events"),
-             F.sum(F.round(col("value") * 1000000).cast("bigint"))
-             .alias("value_sum_micros"))
-    )
-
-
-def _read_touched(spark: SparkSession, out_dir: str, schema: str,
-                  part_col: str, part_vals: list) -> DataFrame:
-    """Partition-pruned read of the sink's touched buckets.  The
-    filter is on the PARTITION STRING (the same value the writer's
-    date_format produced), so planning skips untouched directories
-    outright — PartitionFilters, O(touched) listing.  Filtering the
-    in-file timestamp instead would list and footer-read EVERY file
-    in the sink's history first; at years of retained buckets that
-    listing IS the per-batch cost."""
-    return (spark.read.schema(schema).parquet(out_dir)
-            .where(col(part_col).isin(part_vals))
-            .drop(part_col))
-
-
-def merge_batch(batch_df: DataFrame, batch_id: int, out_dir: str) -> None:
-    """One micro-batch upsert: aggregate the batch per day, merge onto
-    the sink's current rows for the touched days, dynamic-overwrite
-    only those day partitions.  Module-level (not a closure) so the
-    replay gate is directly testable."""
-    spark_b = batch_df.sparkSession
-    inc = _day_agg(batch_df).localCheckpoint()
-    # Collect the partition STRING alongside the timestamp with the
-    # writer's own date_format, so the pruning values can never drift
-    # from the directory names (tz, format) the writer lays down.
-    touched = (inc.select(
-        "day_ts", F.date_format("day_ts", "yyyy-MM-dd").alias("day"))
-        .distinct().collect())
-    if not touched:
-        return
-    current = _read_sink_or_empty(
-        spark_b, out_dir, _SINK_SCHEMA, "day",
-        [r["day"] for r in touched])
-    # Replay gate: a day whose partition already carries this batch_id
-    # was fully rewritten before the crash — merging the increment
-    # again would double-count it.
-    done = [r["day_ts"] for r in
-            current.where(col("last_batch_id") >= batch_id)
-            .select("day_ts").distinct().collect()]
-    if done:
-        inc = inc.where(~col("day_ts").isin(done))
-        current = current.where(~col("day_ts").isin(done))
-        if not inc.take(1):
-            return
-    merged = (
-        current.drop("last_batch_id").unionByName(inc)
-        .groupBy("day_ts")
-        .agg(F.sum("n_events").alias("n_events"),
-             F.sum("value_sum_micros").alias("value_sum_micros"))
-        .withColumn("last_batch_id", F.lit(batch_id).cast("bigint"))
-        .localCheckpoint()     # materialize BEFORE overwriting source files
-    )
-    prev = spark_b.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark_b.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (merged.withColumn("day", F.date_format("day_ts", "yyyy-MM-dd"))
-         .write.mode("overwrite").partitionBy("day").parquet(out_dir))
-    finally:
-        spark_b.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def run_incremental_rollup(spark: SparkSession, events_path: str,
-                           out_dir: str, checkpoint: str) -> None:
-    """Drain the bounded source, maintaining a per-day rollup at
-    out_dir incrementally (availableNow; call again after new files
-    land — the checkpoint resumes where ingestion left off)."""
-    from data_ingestion_challenge_spark.streaming.pipeline import build_source
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch(batch_df, batch_id, out_dir)
-
-    q = (
-        build_source(spark, events_path)
-        .writeStream
-        .foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
-    return (spark.read.schema(_SINK_SCHEMA + ", day string")
-            .parquet(out_dir)
-            .select("day_ts", "n_events", "value_sum_micros"))
-
-
-# ------------------------------------------- keyed/grained variant
-
-_KEYED_SCHEMA = ("event_type string, bucket_ts timestamp, "
-                 "n_events bigint, value_sum_micros bigint, "
-                 "last_batch_id bigint")
-
-
-def merge_keyed_batch(batch_df: DataFrame, batch_id: int,
-                      out_dir: str, grain: str = "hour") -> None:
-    """Generalized continuous-aggregate upsert: maintain a rollup
-    keyed by (event_type, ``grain``-bucket).  Same contract as
-    merge_batch — dynamic overwrite of ONLY the touched time-bucket
-    partitions, per-bucket batch-id replay gate, integral-micro sums
-    exact under any batching — with the key column riding INSIDE the
-    partitions (partition unit stays the time bucket: a key-partition
-    unit would explode the partition count at |keys|×|buckets|,
-    and a batch touches few buckets but possibly many keys)."""
-    _refuse_legacy_bucket_layout(out_dir)
-    spark_b = batch_df.sparkSession
-    inc = (batch_df.groupBy(
-        "event_type",
-        F.date_trunc(grain, col("ts")).alias("bucket_ts"))
-        .agg(F.count("*").alias("n_events"),
-             F.sum(F.round(col("value") * 1000000).cast("bigint"))
-             .alias("value_sum_micros"))
-        .localCheckpoint())
-    touched = (inc.select(
-        "bucket_ts", _hour_bucket_str(col("bucket_ts")).alias("bucket"))
-        .distinct().collect())
-    if not touched:
-        return
-    current = _read_sink_or_empty(
-        spark_b, out_dir, _KEYED_SCHEMA, "bucket",
-        [r["bucket"] for r in touched])
-    done = [r["bucket_ts"] for r in
-            current.where(col("last_batch_id") >= batch_id)
-            .select("bucket_ts").distinct().collect()]
-    if done:
-        inc = inc.where(~col("bucket_ts").isin(done))
-        current = current.where(~col("bucket_ts").isin(done))
-        if not inc.take(1):
-            return
-    merged = (
-        current.drop("last_batch_id").unionByName(inc)
-        .groupBy("event_type", "bucket_ts")
-        .agg(F.sum("n_events").alias("n_events"),
-             F.sum("value_sum_micros").alias("value_sum_micros"))
-        .withColumn("last_batch_id", F.lit(batch_id).cast("bigint"))
-        .localCheckpoint()
-    )
-    prev = spark_b.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark_b.conf.set("spark.sql.sources.partitionOverwriteMode",
-                     "dynamic")
-    try:
-        (merged.withColumn(
-            "bucket", _hour_bucket_str(col("bucket_ts")))
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(out_dir))
-    finally:
-        spark_b.conf.set("spark.sql.sources.partitionOverwriteMode",
-                         prev)
-
-
-def run_incremental_keyed_rollup(spark: SparkSession,
-                                 events_path: str, out_dir: str,
-                                 checkpoint: str,
-                                 grain: str = "hour") -> None:
-    """Drain the bounded source maintaining the (event_type, grain)
-    rollup incrementally — the continuous aggregate a per-type
-    monitor (hourly_anomaly_mad / zscore) reads instead of
-    re-scanning history each evaluation."""
-    from data_ingestion_challenge_spark.streaming.pipeline import (
-        build_source,
-    )
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        merge_keyed_batch(batch_df, batch_id, out_dir, grain)
-
-    q = (build_source(spark, events_path)
-         .writeStream
-         .foreachBatch(_merge)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-
-
-def read_keyed_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
-    _refuse_legacy_bucket_layout(out_dir)
-    return (spark.read.schema(_KEYED_SCHEMA + ", bucket string")
-            .parquet(out_dir)
-            .select("event_type", "bucket_ts", "n_events",
-                    "value_sum_micros"))
-
-
-# ------------------------------------- append-delta variant (r11)
-#
-# The dynamic-partition-overwrite path above is read-modify-write per
-# batch: it re-reads and rewrites every touched time-bucket partition.
-# For an HOURLY grain that's genuinely cheap — a micro-batch touches
-# the few buckets its events fall in, and the partition unit gives
-# time-pruned reads for free — which is why the overwrite path stays.
-# But at finer grains, or with late data spraying batches across many
-# historical buckets, every touched bucket pays a full rewrite; the
-# txn table's APPEND-DELTA commit (txn.py) makes the same maintenance
-# O(batch) unconditionally: increments land as sum-merge runs, reads
-# fold per key, the ladder bounds read amplification.  Both paths
-# produce the IDENTICAL rollup (integral micro sums commute under any
-# batching — equivalence-tested in tests/test_streaming.py).
-
-def _keyed_rollup_delta_table(spark: SparkSession, out_dir: str,
-                              n_buckets: int = 8):
-    """Open (or create empty) the delta-backed keyed rollup table.
-    The composite (event_type, bucket_ts) key rides as ONE string
-    column '<epoch seconds>|T<event_type>' ('|N' for a null type —
-    see keyed_delta_increments) — epoch FIRST so decoding splits on
-    the first '|' and an event_type containing '|' can never corrupt
-    the timestamp; epoch seconds are injective over bucket instants
-    in any session timezone (the r9 DST lesson)."""
+def _rollup_table(spark: SparkSession, out_dir: str,
+                  n_buckets: int = 8):
+    """Open (or create empty) the rollup table.  The composite
+    (event_type, bucket_ts) key rides as ONE string column
+    '<epoch seconds>|T<event_type>' ('|N' for a null type — see
+    rollup_increments) — epoch FIRST so decoding splits on the first
+    '|' and an event_type containing '|' can never corrupt the
+    timestamp; epoch seconds are injective over bucket instants in
+    any session timezone (a wall-clock 'yyyy-MM-dd-HH' string maps
+    the DST fall-back's two hours to one key)."""
     from data_ingestion_challenge_spark.txn import TxnTable
 
     t = TxnTable(spark, out_dir, key="k", n_buckets=n_buckets,
@@ -351,9 +59,8 @@ def _keyed_rollup_delta_table(spark: SparkSession, out_dir: str,
     return t
 
 
-def keyed_delta_increments(df: DataFrame,
-                           grain: str = "hour") -> DataFrame:
-    """One micro-batch's per-key increments in the delta table's
+def rollup_increments(df: DataFrame, grain: str = "hour") -> DataFrame:
+    """One micro-batch's per-key increments in the rollup table's
     shape.  The key encoding is NULL-SAFE: concat_ws would silently
     DROP a null event_type (yielding a separator-less key whose
     decode fabricates the epoch as the type), so the type rides a
@@ -371,30 +78,61 @@ def keyed_delta_increments(df: DataFrame,
              .alias("value_sum_micros")))
 
 
-def run_incremental_keyed_rollup_delta(spark: SparkSession,
-                                       events_path: str, out_dir: str,
-                                       checkpoint: str,
-                                       grain: str = "hour",
-                                       compact_every: int = 8):
-    """The (event_type, grain) continuous aggregate maintained through
-    TxnTable.accumulate_batch(commit_mode="delta"): each micro-batch's
-    per-key increments commit as ONE atomic O(batch) append-delta run
-    tagged (app, batch_id) — exactly-once under crash replay via the
-    log, no per-bucket replay gate needed because the commit (unlike a
-    multi-partition overwrite) is atomic.  ``compact_every`` folds the
-    run ladder every N committed batches (guarded: maintenance never
-    fails a commit).  Returns the TxnTable."""
+def commit_batch(t, batch_df: DataFrame, batch_id: int,
+                 grain: str = "hour") -> int | None:
+    """Commit one micro-batch's increments to the rollup table as one
+    append-delta run tagged (app, batch_id).  Returns the committed
+    version, or None for a replay of an already-committed id."""
+    return t.accumulate_batch(
+        rollup_increments(batch_df, grain), batch_id,
+        sum_cols=["n_events", "value_sum_micros"],
+        app=_APP, commit_mode="delta")
+
+
+def _refuse_fresh_checkpoint(t, out_dir: str, checkpoint: str) -> None:
+    """Spark writes offsets/N before batch N runs, so a checkpoint
+    that has ever started a batch has an offsets entry — a crash
+    replay under the same checkpoint always passes.  A table holding
+    commits with NO such entry is being resumed from a fresh
+    checkpoint: its batch ids restart at 0 and every new batch would
+    be skipped as a replay."""
+    last = t.last_txn(_APP)
+    if last < 0:
+        return
+    try:
+        started = any(e.isdigit() for e in
+                      os.listdir(os.path.join(checkpoint, "offsets")))
+    except FileNotFoundError:
+        started = False
+    if not started:
+        raise ValueError(
+            f"{out_dir}: rollup already holds batches up to "
+            f"{last} but checkpoint {checkpoint} has "
+            f"never started one — a fresh checkpoint restarts batch "
+            f"ids at 0 and every new batch would be skipped as a "
+            f"replay.  Resume with the table's original checkpoint, "
+            f"or rebuild into a new out_dir.")
+
+
+def run_incremental_rollup(spark: SparkSession, events_path: str,
+                           out_dir: str, checkpoint: str,
+                           grain: str = "hour",
+                           compact_every: int = 8):
+    """Drain the bounded source (availableNow; call again after new
+    files land — the checkpoint resumes where ingestion left off)
+    maintaining the (event_type, ``grain``) continuous aggregate at
+    out_dir.  ``compact_every`` folds the run ladder every N committed
+    batches (guarded: maintenance never fails a commit).  Returns the
+    TxnTable; decode it with read_rollup."""
     from data_ingestion_challenge_spark.streaming.pipeline import (
         build_source,
     )
 
-    t = _keyed_rollup_delta_table(spark, out_dir)
+    t = _rollup_table(spark, out_dir)
+    _refuse_fresh_checkpoint(t, out_dir, checkpoint)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        v = t.accumulate_batch(
-            keyed_delta_increments(batch_df, grain), batch_id,
-            sum_cols=["n_events", "value_sum_micros"],
-            app="keyed_rollup", commit_mode="delta")
+        v = commit_batch(t, batch_df, batch_id, grain)
         if (v is not None and compact_every
                 and v % compact_every == 0):
             try:
@@ -417,11 +155,10 @@ def run_incremental_keyed_rollup_delta(spark: SparkSession,
     return t
 
 
-def read_keyed_rollup_delta(table) -> DataFrame:
-    """Decode the delta table back to the overwrite path's shape:
-    (event_type, bucket_ts, n_events, value_sum_micros).  The 'N'
-    tag decodes back to a genuine NULL event_type (row-identical to
-    merge_keyed_batch's null grouping — tested)."""
+def read_rollup(table) -> DataFrame:
+    """Decode the rollup table to (event_type, bucket_ts, n_events,
+    value_sum_micros).  The 'N' tag decodes back to a genuine NULL
+    event_type."""
     df = table.read()
     tail = F.expr("substring(k, instr(k, '|') + 1)")
     return df.select(

@@ -11,6 +11,16 @@ SF_DIR = "/root/testdata/sf0.001"
 _SLOW_LIST = os.path.join(os.path.dirname(__file__), "slow_tests.txt")
 
 
+def slow_ids() -> set[str]:
+    """Node ids listed in tests/slow_tests.txt (empty if absent)."""
+    try:
+        with open(_SLOW_LIST) as fh:
+            return {ln.strip() for ln in fh
+                    if ln.strip() and not ln.startswith("#")}
+    except OSError:
+        return set()
+
+
 def pytest_collection_modifyitems(config, items):
     """Attach the `slow` marker from the COMMITTED measured list
     (tests/slow_tests.txt, node ids of the heavyweight tests: >= ~9 s
@@ -25,15 +35,10 @@ def pytest_collection_modifyitems(config, items):
     test_txn.py::test_merge_model_property, the model-based reference
     for MERGE.  It DOES demote most hypothesis equivalence properties
     (test_properties.py) and most of the sharded-sink battery
-    (test_shard_sink.py); those run only in the full suite.  A stale
-    id (renamed/removed test) simply stops matching; it never
-    errors."""
-    try:
-        with open(_SLOW_LIST) as fh:
-            slow = {ln.strip() for ln in fh
-                    if ln.strip() and not ln.startswith("#")}
-    except OSError:
-        return
+    (test_shard_sink.py); those run only in the full suite.  These
+    keep rules, and that every listed id names an existing test, are
+    enforced by tests/test_gate_policy.py."""
+    slow = slow_ids()
     for item in items:
         if item.nodeid in slow:
             item.add_marker(pytest.mark.slow)

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 from tests.test_r9_candidates import _compare
@@ -268,123 +267,3 @@ def test_monthly_order_growth_hand_case(spark):
                  key=lambda r: r.month)
     assert out[0].rev_growth is None and out[0].revenue == 100.0
     assert out[1].rev_growth == 0.5 and out[1].n_orders == 1
-
-
-# --------------------------------- streaming continuous monitoring
-
-def test_streaming_keyed_rollup_feeds_mad_monitor(spark, duck,
-                                                  tmp_path):
-    """End-to-end ops-monitor loop: the (event_type, hour) rollup is
-    maintained INCREMENTALLY by the streaming upsert sink, then
-    MAD-scored — and the result is value-identical to the one-shot
-    batch monitor's oracle, proving maintained state == ground truth
-    through the whole drain."""
-    from data_ingestion_challenge_spark.operators.stats import (
-        HOURLY_ANOMALY_MAD_ORACLE, mad_score_hourly,
-    )
-    from data_ingestion_challenge_spark.streaming.incremental import (
-        read_keyed_rollup, run_incremental_keyed_rollup,
-    )
-    out = str(tmp_path / "rollup")
-    ck = str(tmp_path / "ck")
-    run_incremental_keyed_rollup(
-        spark, f"{SF_DIR}/events.parquet", out, ck)
-    h = (read_keyed_rollup(spark, out)
-         .select("event_type",
-                 F.col("bucket_ts").alias("hour_ts"),
-                 F.col("n_events").alias("n")))
-    sdf = mad_score_hourly(h)
-    rows = _compare(sdf, duck, HOURLY_ANOMALY_MAD_ORACLE)
-    assert len(rows) >= 1
-
-
-def test_keyed_rollup_replay_gate(spark, tmp_path):
-    """Re-merging the same batch id must be a no-op per touched
-    bucket (crash-replay idempotence), and a LATER batch still merges
-    into the same buckets."""
-    from datetime import datetime
-
-    from data_ingestion_challenge_spark.streaming.incremental import (
-        merge_keyed_batch, read_keyed_rollup,
-    )
-    out = str(tmp_path / "sink")
-    b = spark.createDataFrame(
-        [(datetime(2024, 1, 1, 10, 5), "click", 1.5),
-         (datetime(2024, 1, 1, 10, 6), "click", 2.5),
-         (datetime(2024, 1, 1, 10, 7), "buy", 1.0)],
-        "ts timestamp, event_type string, value double")
-    merge_keyed_batch(b, 0, out)
-    merge_keyed_batch(b, 0, out)      # replay: gated, not doubled
-    r = {(x.event_type): x for x in
-         read_keyed_rollup(spark, out).collect()}
-    assert r["click"].n_events == 2
-    assert r["click"].value_sum_micros == 4_000_000
-    merge_keyed_batch(b, 1, out)      # new batch id: merges
-    r = {(x.event_type): x for x in
-         read_keyed_rollup(spark, out).collect()}
-    assert r["click"].n_events == 4 and r["buy"].n_events == 2
-
-
-def test_keyed_rollup_refuses_legacy_bucket_layout(spark, tmp_path):
-    """A sink written before the epoch-suffixed bucket format must be
-    refused (merge AND read): the pruned read would miss every
-    old-format partition (replay gate bypassed) and the dynamic
-    overwrite would land new-format dirs beside the old ones —
-    read_keyed_rollup would then double-count every pre-upgrade
-    hour.  New-format dirs pass untouched."""
-    import os
-    from datetime import datetime
-
-    import pytest
-
-    from data_ingestion_challenge_spark.streaming.incremental import (
-        merge_keyed_batch, read_keyed_rollup,
-    )
-    out = str(tmp_path / "sink")
-    os.makedirs(os.path.join(out, "bucket=2024-01-01-10"))
-    b = spark.createDataFrame(
-        [(datetime(2024, 1, 1, 10, 5), "click", 1.5)],
-        "ts timestamp, event_type string, value double")
-    with pytest.raises(ValueError, match="legacy keyed-rollup"):
-        merge_keyed_batch(b, 0, out)
-    with pytest.raises(ValueError, match="legacy keyed-rollup"):
-        read_keyed_rollup(spark, out)
-    os.rmdir(os.path.join(out, "bucket=2024-01-01-10"))
-    merge_keyed_batch(b, 0, out)  # clean sink: works
-    assert read_keyed_rollup(spark, out).count() == 1
-
-
-def test_keyed_rollup_batching_invariance(spark, tmp_path):
-    """Integral-micro sums make the maintained state independent of
-    HOW the stream was batched: any random split of the events into
-    sequential micro-batches must land the identical rollup."""
-    import random
-    from datetime import datetime, timedelta
-
-    from data_ingestion_challenge_spark.streaming.incremental import (
-        merge_keyed_batch, read_keyed_rollup,
-    )
-    rng = random.Random(8)
-    t0 = datetime(2024, 3, 1)
-    rows = [(t0 + timedelta(minutes=rng.randrange(0, 600)),
-             rng.choice(["click", "buy", "view"]),
-             rng.randrange(1, 1000) / 7.0)
-            for _ in range(200)]
-    schema = "ts timestamp, event_type string, value double"
-
-    def run(splits, out):
-        start = 0
-        for bid, end in enumerate(splits + [len(rows)]):
-            merge_keyed_batch(
-                spark.createDataFrame(rows[start:end], schema),
-                bid, out)
-            start = end
-        return sorted(
-            (r.event_type, r.bucket_ts, r.n_events,
-             r.value_sum_micros)
-            for r in read_keyed_rollup(spark, out).collect())
-
-    one = run([], str(tmp_path / "one"))
-    many = run(sorted(rng.sample(range(1, len(rows)), 4)),
-               str(tmp_path / "many"))
-    assert one == many and len(one) > 0

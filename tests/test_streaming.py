@@ -127,13 +127,42 @@ def test_stateful_sessionize_across_batches(spark, tmp_path):
     assert rows[0]["n_events"] == 2
 
 
-def test_incremental_rollup_equals_recompute(spark, tmp_path, cat):
-    """The foreachBatch-maintained rollup must equal a from-scratch
-    batch aggregation after every incremental drain."""
-    import shutil
+def _keyed_ref(df, grain):
+    """One-shot batch (event_type, grain-bucket) aggregate — the
+    reference every maintained rollup must equal."""
+    return sorted(
+        (tuple(r) for r in df.groupBy(
+            "event_type",
+            F.date_trunc(grain, "ts").alias("bucket_ts"))
+         .agg(F.count("*").alias("n_events"),
+              F.sum(F.round(F.col("value") * 1000000).cast("bigint"))
+              .alias("value_sum_micros")).collect()),
+        key=repr)
 
+
+def _rollup_rows(t):
     from data_ingestion_challenge_spark.streaming.incremental import (
-        _day_agg, read_rollup, run_incremental_rollup)
+        read_rollup,
+    )
+    return sorted((tuple(r) for r in read_rollup(t).collect()), key=repr)
+
+
+def _drop_file(tmp_path, src, df, name):
+    """Land `df` in the watched dir `src` as ONE parquet file."""
+    import glob
+    import shutil
+    stage = tmp_path / "stage" / name
+    df.coalesce(1).write.parquet(str(stage))
+    part = glob.glob(str(stage / "part-*.parquet"))[0]
+    shutil.copy(part, src / f"{name}.parquet")
+
+
+def test_incremental_rollup_equals_recompute(spark, tmp_path, cat):
+    """The foreachBatch-maintained day-grain rollup must equal a
+    from-scratch batch aggregation after every incremental drain."""
+    from data_ingestion_challenge_spark.streaming.incremental import (
+        run_incremental_rollup,
+    )
 
     src = tmp_path / "events"
     out = str(tmp_path / "rollup")
@@ -144,127 +173,143 @@ def test_incremental_rollup_equals_recompute(spark, tmp_path, cat):
     half1 = full.where(F.col("event_id") % 2 == 0)
     half2 = full.where(F.col("event_id") % 2 == 1)
 
-    def drop(df, name):
-        stage = tmp_path / "stage" / name
-        df.coalesce(1).write.parquet(str(stage))
-        import glob
-        part = glob.glob(str(stage / "part-*.parquet"))[0]
-        shutil.copy(part, src / f"{name}.parquet")
+    _drop_file(tmp_path, src, half1, "b1")
+    t = run_incremental_rollup(spark, str(src), out, ckpt, grain="day")
+    assert _rollup_rows(t) == _keyed_ref(half1, "day")
 
-    def rollup_now():
-        return {(r["day_ts"], r["n_events"], r["value_sum_micros"])
-                for r in read_rollup(spark, out).collect()}
-
-    def batch_ref(df):
-        return {(r["day_ts"], r["n_events"], r["value_sum_micros"])
-                for r in _day_agg(df).collect()}
-
-    drop(half1, "b1")
-    run_incremental_rollup(spark, str(src), out, ckpt)
-    assert rollup_now() == batch_ref(half1)
-
-    # second drain merges only the touched day partitions
-    drop(half2, "b2")
-    run_incremental_rollup(spark, str(src), out, ckpt)
-    assert rollup_now() == batch_ref(full)
+    # second drain commits only the new file's increments
+    _drop_file(tmp_path, src, half2, "b2")
+    t = run_incremental_rollup(spark, str(src), out, ckpt, grain="day")
+    assert _rollup_rows(t) == _keyed_ref(full, "day")
 
 
 def test_incremental_rollup_replay_is_idempotent(spark, tmp_path, cat):
     """A replayed micro-batch (write committed, checkpoint commit lost)
-    must NOT double-count: every sink row carries last_batch_id and a
-    day whose partition already holds the replayed id is skipped."""
+    must NOT double-count: re-accumulating the same batch id on the
+    rollup table is skipped whole by the (app, batch_id) txn tag,
+    while a NEW id still merges into the same keys."""
     from data_ingestion_challenge_spark.streaming.incremental import (
-        merge_batch, read_rollup)
+        _rollup_table, commit_batch,
+    )
 
-    out = str(tmp_path / "rollup")
+    t = _rollup_table(spark, str(tmp_path / "rollup"))
     batch = cat.events.orderBy("event_id").limit(300).localCheckpoint()
 
-    def snapshot():
-        return {(r["day_ts"], r["n_events"], r["value_sum_micros"])
-                for r in read_rollup(spark, out).collect()}
-
-    merge_batch(batch, 0, out)
-    before = snapshot()
-    # replay of batch 0 against the committed sink: must be a no-op
-    merge_batch(batch, 0, out)
-    assert snapshot() == before
+    assert commit_batch(t, batch, 0, "day") is not None
+    before = _rollup_rows(t)
+    v = t.version()
+    # replay of batch 0 against the committed table: must be a no-op
+    assert commit_batch(t, batch, 0, "day") is None
+    assert t.version() == v and _rollup_rows(t) == before
     # a genuinely NEW batch still merges
-    merge_batch(batch, 1, out)
-    doubled = {(d, 2 * n, 2 * v) for d, n, v in before}
-    assert snapshot() == doubled
+    commit_batch(t, batch, 1, "day")
+    doubled = sorted(((e, b, 2 * n, 2 * s) for e, b, n, s in before),
+                     key=repr)
+    assert _rollup_rows(t) == doubled and before
 
 
-def test_keyed_rollup_delta_equals_overwrite_path(spark, tmp_path):
-    """r11 unification: the delta-backed keyed continuous aggregate
-    (accumulate_batch commit_mode='delta' — O(batch) append-delta
-    runs) must equal the dynamic-partition-overwrite path row for row
-    over the SAME drained stream, including after a run fold, and a
-    re-drain with the same checkpoint must be a no-op (exactly-once
-    through the txn log, no per-bucket gate needed)."""
+def test_keyed_rollup_equals_batch_groupby(spark, tmp_path):
+    """The maintained (event_type, hour) rollup must equal a one-shot
+    groupBy over the SAME drained stream row for row, including after
+    a run fold, and a re-drain with the same checkpoint must be a
+    no-op (exactly-once through the txn log)."""
     import os
 
     from data_ingestion_challenge_spark.streaming.incremental import (
-        read_keyed_rollup, read_keyed_rollup_delta,
-        run_incremental_keyed_rollup,
-        run_incremental_keyed_rollup_delta,
+        run_incremental_rollup,
     )
-    from tests.conftest import SF_DIR
 
     src_dir = str(tmp_path / "src")
-    (spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-     .repartition(4).write.mode("overwrite").parquet(src_dir))
-
-    ow_out, ow_ck = str(tmp_path / "ow"), str(tmp_path / "owck")
-    run_incremental_keyed_rollup(spark, src_dir, ow_out, ow_ck)
-    want = sorted(tuple(r) for r in
-                  read_keyed_rollup(spark, ow_out).collect())
+    events = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
+    events.repartition(4).write.mode("overwrite").parquet(src_dir)
+    want = _keyed_ref(events, "hour")
 
     d_out, d_ck = str(tmp_path / "d"), str(tmp_path / "dck")
-    t = run_incremental_keyed_rollup_delta(spark, src_dir, d_out, d_ck,
-                                           compact_every=2)
-    got = sorted(tuple(r) for r in read_keyed_rollup_delta(t).collect())
-    assert got == want and want
+    t = run_incremental_rollup(spark, src_dir, d_out, d_ck,
+                               compact_every=2)
+    assert _rollup_rows(t) == want and want
     # re-drain: checkpoint resumes, nothing recommitted
     v = t.version()
-    t2 = run_incremental_keyed_rollup_delta(spark, src_dir, d_out, d_ck)
+    t2 = run_incremental_rollup(spark, src_dir, d_out, d_ck)
     assert t2.version() == v
-    assert sorted(tuple(r) for r in
-                  read_keyed_rollup_delta(t2).collect()) == want
+    assert _rollup_rows(t2) == want
     # the full fold keeps the decode exact (windowless table)
     t2.compact_runs(level="full")
-    assert sorted(tuple(r) for r in
-                  read_keyed_rollup_delta(t2).collect()) == want
+    assert _rollup_rows(t2) == want
 
 
-def test_incremental_merge_read_prunes_partitions(spark, tmp_path, cat):
-    """The read-side of the upsert must prune on the PARTITION STRING
-    (PartitionFilters → O(touched) directory listing), never filter
-    the in-file timestamp (which lists every file in the sink's
-    history first).  Audits the exact production read path for both
-    the day and the keyed sink."""
-    import re
+def test_incremental_rollup_refuses_fresh_checkpoint(spark, tmp_path,
+                                                     cat):
+    """Resuming an existing rollup under a FRESH checkpoint must
+    raise: batch ids would restart at 0 and the txn log would skip
+    the new file's batch as a replay, silently losing it.  A later
+    drain under the ORIGINAL checkpoint still resumes."""
+    import pytest
 
     from data_ingestion_challenge_spark.streaming.incremental import (
-        _KEYED_SCHEMA, _SINK_SCHEMA, _read_touched, merge_batch,
-        merge_keyed_batch,
+        run_incremental_rollup,
     )
 
-    batch = cat.events.orderBy("event_id").limit(300).localCheckpoint()
-    day_out = str(tmp_path / "day")
-    keyed_out = str(tmp_path / "keyed")
-    merge_batch(batch, 0, day_out)
-    merge_keyed_batch(batch, 0, keyed_out)
+    src = tmp_path / "events"
+    out = str(tmp_path / "rollup")
+    src.mkdir()
+    ev = cat.events.localCheckpoint()
+    n = ev.count()
+    a = ev.where(F.col("event_id") % 2 == 0)
+    b = ev.where(F.col("event_id") % 2 == 1)
 
-    for out, schema, part_col, val in (
-            (day_out, _SINK_SCHEMA, "day", "2024-01-01"),
-            (keyed_out, _KEYED_SCHEMA, "bucket", "2024-01-01-10")):
-        df = _read_touched(spark, out, schema, part_col, [val])
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-        # single-value IN folds to equality; either form prunes
-        assert m and re.search(
-            rf"{part_col}#\d+ (=|IN)", m.group(1)), \
-            f"{part_col} read not partition-pruned: {m}"
+    def total(t):
+        return sum(r[2] for r in _rollup_rows(t))
+
+    _drop_file(tmp_path, src, a, "a")
+    t = run_incremental_rollup(spark, str(src), out,
+                               str(tmp_path / "ck1"))
+    assert total(t) == a.count()
+
+    # the drop is cleaned up and the next one lands
+    (src / "a.parquet").unlink()
+    _drop_file(tmp_path, src, b, "b")
+    with pytest.raises(ValueError, match="fresh checkpoint"):
+        run_incremental_rollup(spark, str(src), out,
+                               str(tmp_path / "ck2"))
+
+    t = run_incremental_rollup(spark, str(src), out,
+                               str(tmp_path / "ck1"))
+    assert total(t) == n
+
+
+def test_engine_maintain_rollup_equals_day_aggregate(spark, tmp_path,
+                                                     cat):
+    """Engine.maintain_rollup over two drops: after each drain the
+    maintained rollup, summed over event_type, equals the one-shot
+    per-day aggregate of everything landed so far."""
+    from collections import Counter
+
+    from data_ingestion_challenge_spark.api import Engine
+
+    eng = Engine(SF_DIR, spark=spark)
+    src = tmp_path / "events"
+    out = str(tmp_path / "rollup")
+    ckpt = str(tmp_path / "ckpt")
+    src.mkdir()
+    full = cat.events.localCheckpoint()
+    first = full.where(F.col("event_id") % 3 == 0)
+
+    def per_day(rows):
+        n, v = Counter(), Counter()
+        for _, day, cnt, micros in rows:
+            n[day] += cnt
+            v[day] += micros
+        return {d: (n[d], v[d]) for d in n}
+
+    _drop_file(tmp_path, src, first, "d1")
+    t = eng.maintain_rollup(str(src), out, ckpt)
+    assert per_day(_rollup_rows(t)) == per_day(_keyed_ref(first, "day"))
+
+    _drop_file(tmp_path, src,
+               full.where(F.col("event_id") % 3 != 0), "d2")
+    t = eng.maintain_rollup(str(src), out, ckpt)
+    assert per_day(_rollup_rows(t)) == per_day(_keyed_ref(full, "day"))
 
 
 def test_watermark_drops_late_events(spark, tmp_path):
@@ -422,16 +467,16 @@ def test_streaming_cms_equals_batch_sketch(spark):
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
-def test_keyed_rollup_delta_null_event_type(spark, tmp_path):
-    """A null event_type must round-trip the composite key: the delta
-    path groups and decodes it as a genuine NULL, row-identical to
-    the overwrite path's null grouping (concat_ws would have silently
-    dropped the separator and fabricated the epoch as the type)."""
+def test_keyed_rollup_null_event_type(spark, tmp_path):
+    """A null event_type must round-trip the composite key: the
+    rollup groups and decodes it as a genuine NULL, row-identical to
+    a one-shot groupBy (concat_ws would have silently dropped the
+    separator and fabricated the epoch as the type), and a '|' inside
+    the type never corrupts the decode."""
     from datetime import datetime
 
     from data_ingestion_challenge_spark.streaming.incremental import (
-        _keyed_rollup_delta_table, keyed_delta_increments,
-        merge_keyed_batch, read_keyed_rollup, read_keyed_rollup_delta,
+        _rollup_table, commit_batch,
     )
 
     rows = [(None, datetime(2024, 1, 1, 5, 10), 1.0),
@@ -441,19 +486,10 @@ def test_keyed_rollup_delta_null_event_type(spark, tmp_path):
     batch = spark.createDataFrame(
         rows, "event_type string, ts timestamp, value double")
 
-    ow_out = str(tmp_path / "ow")
-    merge_keyed_batch(batch, 0, ow_out)
-    want = sorted((tuple(r) for r in
-                   read_keyed_rollup(spark, ow_out).collect()),
-                  key=repr)
-
-    t = _keyed_rollup_delta_table(spark, str(tmp_path / "d"))
-    t.accumulate_batch(keyed_delta_increments(batch, "hour"), 0,
-                       sum_cols=["n_events", "value_sum_micros"],
-                       app="keyed_rollup", commit_mode="delta")
-    got = sorted((tuple(r) for r in
-                  read_keyed_rollup_delta(t).collect()), key=repr)
-    assert got == want
+    t = _rollup_table(spark, str(tmp_path / "d"))
+    commit_batch(t, batch, 0)
+    got = _rollup_rows(t)
+    assert got == _keyed_ref(batch, "hour")
     by_type = {r[0]: r for r in got}
     assert None in by_type and by_type[None][2] == 2  # both null rows
     assert "5|weird|type" in by_type  # '|' in the type never corrupts
