@@ -33,27 +33,36 @@ put-if-absent or a DynamoDB-style lock service):
    so drop our staged files and redo the merge from the new snapshot
    (classic optimistic concurrency, conflict = bucket intersection).
 
-At 100 TB the log is O(commits) tiny JSON files (compactable into
-checkpoints exactly like Delta's _last_checkpoint — not needed at
-bench scale), data files are bucket-sized parquet, and a merge still
+Table state at a version comes from ONE replay (_replay: the newest
+checkpoint plus the records above it) and every read from ONE merged
+read (_read) through the schema the log records — so building a read
+plans no schema-inference job.  At 100 TB the log is O(commits) tiny
+JSON files: checkpoint() compacts the replay into one
+_log/ckpt-v{N}.json (Delta's _last_checkpoint shape) and expire_log()
+drops the records beneath it, so a replay stays O(commits since the
+checkpoint); data files are bucket-sized parquet, and a merge still
 rewrites only touched buckets.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import tempfile
 import uuid
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
+from pyspark.sql.types import StructType
 
 _BUCKET = "_bucket"
 _LOG = "_log"
 _DATA = "data"
+_RUN_OPS = ("append-run", "append-delta", "fold-runs")
 
 
 class CommitConflictError(RuntimeError):
@@ -61,15 +70,18 @@ class CommitConflictError(RuntimeError):
     version claim to competing writers."""
 
 
-class _RunSet(set):
-    """The live run-file set, carrying which files are DELTA runs
-    (commutative per-key SUM semantics — append_delta) in ``delta``;
-    the rest are latest-wins runs.  A plain set to every existing
-    caller (the _base hook contract is unchanged)."""
-
-    def __init__(self, *a):
-        super().__init__(*a)
-        self.delta: set[str] = set()
+@dataclass
+class _Replay:
+    """Table state at one version — the record _replay returns and
+    every read, commit and maintenance call works from."""
+    version: int
+    active: dict[str, int]      # live relative path -> bucket
+    added_at: dict[str, int]    # live path -> latest-wins rank
+    runs: set[str]              # live append-run/append-delta/fold files
+    delta: set[str]             # the sum-merge subset of runs
+    txns: dict[str, int]        # {app: highest committed batch_id}
+    schema: str | None          # StructType JSON; None on vintage tables
+    carried_marks: bool         # False: marks below a legacy ckpt lost
 
 
 def _log_dir(path: str) -> str:
@@ -78,6 +90,40 @@ def _log_dir(path: str) -> str:
 
 def _version_file(path: str, v: int) -> str:
     return os.path.join(_log_dir(path), f"v{v:010d}.json")
+
+
+def _ckpt_file(path: str, v: int) -> str:
+    return os.path.join(_log_dir(path), f"ckpt-v{v:010d}.json")
+
+
+def _ckpt_versions(names) -> list[int]:
+    """Versions of the checkpoint files among log-dir entries,
+    ascending — the one parser of ``ckpt-v`` names."""
+    return sorted(int(n[6:16]) for n in names
+                  if n.startswith("ckpt-v") and n.endswith(".json"))
+
+
+def _struct(schema_json: str) -> StructType:
+    return StructType.fromJson(json.loads(schema_json))
+
+
+def _check_schema(df: DataFrame, schema_json: str) -> None:
+    """Refuse a frame whose column names or types differ from the
+    recorded table schema (nullability aside): reads pass that
+    schema to every scan, so a drifted file would otherwise read
+    with whatever type the recorded one coerces it to."""
+    want = {f.name: f.dataType.simpleString()
+            for f in _struct(schema_json)}
+    got = {f.name: f.dataType.simpleString() for f in df.schema}
+    if got != want:
+        bad = sorted(c for c in want.keys() | got.keys()
+                     if want.get(c) != got.get(c))
+        raise ValueError(
+            f"commit schema diverges from the table schema on {bad} "
+            f"(frame { {c: got.get(c) for c in bad} } vs table "
+            f"{ {c: want.get(c) for c in bad} }) — every commit must "
+            f"match the table schema (for deltas: the summed schema), "
+            f"type-identical")
 
 
 class TxnTable:
@@ -134,9 +180,14 @@ class TxnTable:
             return 0
         vs = [int(n[1:11]) for n in names
               if n.startswith("v") and n.endswith(".json")]
-        vs += [int(n[6:16]) for n in names
-               if n.startswith("ckpt-v") and n.endswith(".json")]
-        return max(vs, default=0)
+        return max(vs + _ckpt_versions(names), default=0)
+
+    def _checkpoints(self) -> list[int]:
+        """Versions of the log's checkpoints, ascending."""
+        try:
+            return _ckpt_versions(os.listdir(_log_dir(self.path)))
+        except FileNotFoundError:
+            return []
 
     def _commit_record(self, v: int) -> dict:
         try:
@@ -150,7 +201,7 @@ class TxnTable:
                 f"retention)") from None
 
     def checkpoint(self) -> int:
-        """Compact the log: persist the CURRENT active file set as
+        """Compact the log: persist the CURRENT replay as
         _log/ckpt-v{N}.json (atomic tmp+rename publish), so snapshots
         replay O(commits since checkpoint) records instead of the
         whole history — Delta's _last_checkpoint shape.  Pure derived
@@ -158,140 +209,97 @@ class TxnTable:
         to write concurrently with writers; commit records are kept,
         so pre-checkpoint time travel still replays.  Returns the
         checkpointed version."""
-        head, active, added_at, runs = self._snapshot_runs()
-        path = os.path.join(_log_dir(self.path),
-                            f"ckpt-v{head:010d}.json")
+        snap = self._replay()
+        self._write_checkpoint(snap)
+        return snap.version
+
+    def _write_checkpoint(self, snap: _Replay) -> None:
+        # txn marks and the table schema ride every checkpoint:
+        # expire_log() deletes the records below it, and without the
+        # carried marks a replayed streaming batch would pass the
+        # exactly-once gate (double-count) — Delta checkpoints carry
+        # txn actions for exactly this reason.  added_at / runs /
+        # delta_runs carry the latest-wins file order and the merge
+        # discipline of run histories the same way.
+        path = _ckpt_file(self.path, snap.version)
         tmp = path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
-            # txn marks and the table schema ride every checkpoint:
-            # expire_log() deletes the records below it, and without
-            # the carried marks a replayed streaming batch would pass
-            # the exactly-once gate (double-count) — Delta checkpoints
-            # carry txn actions for exactly this reason.  added_at /
-            # runs carry the latest-wins file order for append-run
-            # histories the same way (expiry must not lose it).
-            json.dump({"version": head, "active": active,
-                       "added_at": added_at, "runs": sorted(runs),
-                       "delta_runs": sorted(
-                           getattr(runs, "delta", set())),
-                       "txns": self._txn_marks(head),
-                       "schema": self._table_schema(head)}, fh)
+            json.dump({"version": snap.version, "active": snap.active,
+                       "added_at": snap.added_at,
+                       "runs": sorted(snap.runs),
+                       "delta_runs": sorted(snap.delta),
+                       "txns": snap.txns, "schema": snap.schema}, fh)
         os.replace(tmp, path)
-        return head
 
-    def _latest_checkpoint(self, upto: int):
-        """(version, active, txns, schema_json, carried_marks) of the
-        newest checkpoint ≤ upto, or None.  txns/schema default for
-        checkpoints written before they were carried forward;
-        carried_marks records whether the file ACTUALLY held a txns
-        key — expire_log() must distinguish "no marks recorded"
-        (legacy; expiring would lose them) from "marks recorded,
-        happens to be empty"."""
-        try:
-            names = os.listdir(_log_dir(self.path))
-        except FileNotFoundError:
-            return None
-        vs = [int(n[6:16]) for n in names
-              if n.startswith("ckpt-v") and n.endswith(".json")]
-        vs = [v for v in vs if v <= upto]
-        if not vs:
-            return None
-        best = max(vs)
-        with open(os.path.join(_log_dir(self.path),
-                               f"ckpt-v{best:010d}.json")) as fh:
-            data = json.load(fh)
-        return (best, dict(data["active"]),
-                dict(data.get("txns", {})), data.get("schema"),
-                "txns" in data)
+    def _replay(self, upto: int | None = None) -> _Replay:
+        """Table state at version ``upto`` (default: the head) — the
+        ONE log replay: the newest checkpoint at or below it, then the
+        commit records above.  A legacy checkpoint (written before txn
+        marks were carried) is replayed THROUGH from an older base
+        while the records it summarizes survive, which recovers its
+        marks; once they are expired the replay starts from it with
+        ``carried_marks=False`` (expire_log then refuses).  Raises
+        KeyError for versions below the expired log."""
+        head = self.version() if upto is None else upto
+        legacy = None
+        for c in [c for c in reversed(self._checkpoints())
+                  if c <= head] + [0]:
+            ck = {}
+            if c:
+                with open(_ckpt_file(self.path, c)) as fh:
+                    ck = json.load(fh)
+                if "txns" not in ck:
+                    legacy = legacy or ck
+                    continue
+            try:
+                return self._replay_from(ck, head, True)
+            except KeyError:
+                if legacy is None:
+                    raise
+                break
+        return self._replay_from(legacy, head, False)
 
-    def _snapshot(self, version: int | None = None):
-        """(version, {relative file path: bucket}): replay from the
-        newest checkpoint at or before the requested version, then
-        the remaining commit records."""
-        head = self.version() if version is None else version
-        ckpt = self._latest_checkpoint(head)
-        start, active = (ckpt[0] + 1, ckpt[1]) if ckpt else (1, {})
-        for v in range(start, head + 1):
-            rec = self._commit_record(v)
-            for f in rec["remove"]:
-                active.pop(f, None)
-            for f, b in rec["add"].items():
-                active[f] = b
-        return head, active
-
-    def _snapshot_runs(self, version: int | None = None):
-        """(head, active, added_at, run_files): the run-aware snapshot
-        behind latest-wins reads — `added_at[f]` is the version of the
-        commit that added live file f (the latest-wins order), and
-        `run_files` the live files added by ``append-run`` commits.
-        Checkpoints written since append-run landed carry both maps
-        (`added_at` / `runs`); a legacy checkpoint implies a
-        merge-only history below it (append-run did not exist), where
-        per-key single-file ownership makes base-file order
-        irrelevant — those files default to the checkpoint version."""
-        head = self.version() if version is None else version
-        ckpt = self._latest_checkpoint_raw(head)
-        run_files = _RunSet()
-        if ckpt:
-            start = ckpt["version"] + 1
-            active = dict(ckpt["active"])
-            added_at = {f: int(v) for f, v in
-                        ckpt.get("added_at", {}).items()}
-            for f in active:
-                added_at.setdefault(f, ckpt["version"])
-            run_files.update(f for f in ckpt.get("runs", [])
-                             if f in active)
-            run_files.delta = {f for f in ckpt.get("delta_runs", [])
-                               if f in active}
-        else:
-            start, active, added_at = 1, {}, {}
-        for v in range(start, head + 1):
+    def _replay_from(self, ck: dict, head: int,
+                     carried_marks: bool) -> _Replay:
+        v0 = int(ck.get("version", 0))
+        active = dict(ck.get("active", {}))
+        # A checkpoint without added_at predates append runs: its
+        # merge-only files own their keys alone, so their order is
+        # irrelevant and they rank at the checkpoint version.
+        ranks = ck.get("added_at", {})
+        added_at = {f: int(ranks.get(f, v0)) for f in active}
+        runs = {f for f in ck.get("runs", []) if f in active}
+        delta = {f for f in ck.get("delta_runs", []) if f in active}
+        txns = dict(ck.get("txns", {}))
+        schema = ck.get("schema")
+        for v in range(v0 + 1, head + 1):
             rec = self._commit_record(v)
             for f in rec["remove"]:
                 active.pop(f, None)
                 added_at.pop(f, None)
-                run_files.discard(f)
-                run_files.delta.discard(f)
+                runs.discard(f)
+                delta.discard(f)
             op = rec.get("op")
+            # A stepped fold of adjacent run generations ranks its
+            # files at the newest folded version (record["asof"]), not
+            # at its own commit version — ranking at v would hoist
+            # pre-fold rows above an interleaved merge commit and
+            # resurrect shadowed keys.
+            rank = int(rec["asof"]) if op == "fold-runs" else v
             for f, b in rec["add"].items():
                 active[f] = b
-                if op == "fold-runs":
-                    # A stepped fold of adjacent run generations: the
-                    # folded files RANK at the newest folded version
-                    # (record["asof"]), not at the fold's own commit
-                    # version — ranking at v would hoist pre-merge
-                    # rows above an interleaved merge commit and
-                    # resurrect shadowed keys.  (For delta folds the
-                    # rank is moot — sums commute — but the record
-                    # keeps the same shape.)
-                    added_at[f] = int(rec["asof"])
-                    run_files.add(f)
-                    if rec.get("delta"):
-                        run_files.delta.add(f)
-                else:
-                    added_at[f] = v
-                    if op in ("append-run", "append-delta"):
-                        run_files.add(f)
-                        if op == "append-delta":
-                            run_files.delta.add(f)
-        return head, active, added_at, run_files
-
-    def _latest_checkpoint_raw(self, upto: int) -> dict | None:
-        """The newest checkpoint file ≤ upto as its raw dict (None if
-        none) — _latest_checkpoint's tuple shape predates the
-        run-aware fields and stays for its existing callers."""
-        try:
-            names = os.listdir(_log_dir(self.path))
-        except FileNotFoundError:
-            return None
-        vs = [int(n[6:16]) for n in names
-              if n.startswith("ckpt-v") and n.endswith(".json")]
-        vs = [v for v in vs if v <= upto]
-        if not vs:
-            return None
-        with open(os.path.join(_log_dir(self.path),
-                               f"ckpt-v{max(vs):010d}.json")) as fh:
-            return json.load(fh)
+                added_at[f] = rank
+                if op in _RUN_OPS:
+                    runs.add(f)
+                    if op == "append-delta" or rec.get("delta"):
+                        delta.add(f)
+            t = rec.get("txn")
+            if t:
+                txns[t["app"]] = max(txns.get(t["app"], -1),
+                                     int(t["batch_id"]))
+            schema = schema or rec.get("schema")
+        return _Replay(head, active, added_at, runs, delta, txns,
+                       schema, carried_marks)
 
     # -------------------------------------------------------- reads
     def point_read(self, value) -> DataFrame:
@@ -303,9 +311,10 @@ class TxnTable:
         latest-wins window then runs on the pre-filtered key rows of
         ONE bucket (the key filter pushes into every generation's
         parquet scan before the union), so a point read over a
-        3-run table stays O(bucket files).  Integral keys only —
-        exactly serving's constraint, same reason (the hash
-        replication covers LongType)."""
+        3-run table stays O(bucket files); an empty bucket plans no
+        file at all.  Integral keys only — exactly serving's
+        constraint, same reason (the hash replication covers
+        LongType)."""
         from data_ingestion_challenge_spark.serving import (
             _murmur3_long,
         )
@@ -316,110 +325,84 @@ class TxnTable:
                 f"and needs an integral key, got {type(value).__name__}"
                 f" — use read().where(...) for non-integral keys")
         b = _murmur3_long(value) % self.n_buckets
-        _, active, added_at, run_files = self._snapshot_runs()
-        sel = {f: added_at[f] for f in active if active[f] == b}
-        pred = col(self.key) == F.lit(value)
-        if not sel:
-            # Empty bucket: an empty frame built DIRECTLY from the
-            # recorded schema — going through read() here would plan
-            # the full latest-wins/sum merge across every live file
-            # just to return zero rows, defeating the O(bucket)
-            # contract exactly on the cheapest case (a miss).
-            return self._empty_frame().where(pred)
-        if run_files & sel.keys():
-            if getattr(run_files, "delta", None):
-                return self._sum_read(sel, pre_filter=pred)
-            return self._latest_wins_read(sel, pre_filter=pred)
-        return (self.spark.read.parquet(
-            *[os.path.join(self.path, f) for f in sel])
-            .where(pred))
-
-    def _latest_wins_read(self, files: dict[str, int],
-                          pre_filter=None) -> DataFrame:
-        """LATEST-WINS merge over ``files`` ({relative path: the
-        version its rows rank at}): one parquet read per distinct
-        ranking-version group, each tagged with that version; a key
-        appears at most once per version (append_run enforces
-        per-batch key uniqueness, merge keeps one row per key), so
-        row_number over (key ORDER BY _v desc) is deterministic.  The
-        file path rides as a SECONDARY sort key: correctness does not
-        depend on it while every commit is key-unique, but a caller
-        that passed _source_unique=True with a broken guarantee would
-        otherwise get a nondeterministic row_number winner at read
-        time — the tie now resolves stably (and `_v desc, _f desc` is
-        the order the design doc specifies).  Group count = live run
-        generations — bounded by the compaction ladder
-        (docs/TXN_RUNS_DESIGN.md)."""
-        from pyspark.sql import Window
-
-        by_v: dict[int, list[str]] = {}
-        for f, v in files.items():
-            by_v.setdefault(v, []).append(os.path.join(self.path, f))
-
-        def _part(v: int, paths: list[str]) -> DataFrame:
-            p = self.spark.read.parquet(*paths)
-            if pre_filter is not None:
-                # Applied per part BEFORE the union/window so it
-                # pushes into each generation's parquet scan — the
-                # winner per surviving key is unchanged (the filter
-                # is on the window's own partition key).
-                p = p.where(pre_filter)
-            return (p.withColumn("_v", F.lit(v))
-                    .withColumn("_f", col("_metadata.file_path")))
-
-        parts = [_part(v, paths) for v, paths in sorted(by_v.items())]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        w = Window.partitionBy(self.key).orderBy(
-            col("_v").desc(), col("_f").desc())
-        return (df.withColumn("_rn", F.row_number().over(w))
-                .where(col("_rn") == 1).drop("_rn", "_v", "_f"))
-
-    def _sum_read(self, files, pre_filter=None) -> DataFrame:
-        """Commutative SUM merge over delta-run histories: one plain
-        union of the files (no version tags, no window — addition is
-        order-free), grouped per key with every non-key column
-        summed back to its ORIGINAL dtype (F.sum widens int→bigint;
-        the cast keeps the table schema stable across folds)."""
-        df = self.spark.read.parquet(
-            *[os.path.join(self.path, f) for f in files])
-        if pre_filter is not None:
-            df = df.where(pre_filter)
-        return df.groupBy(self.key).agg(
-            *[F.sum(c).cast(df.schema[c].dataType).alias(c)
-              for c in df.columns if c != self.key])
+        snap = self._replay()
+        return self._read(snap, {f: snap.added_at[f]
+                                 for f, fb in snap.active.items()
+                                 if fb == b},
+                          pre_filter=col(self.key) == F.lit(value))
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read; pass version for time travel.  Over a
         history containing append-run commits the read applies
         LATEST-WINS per key (newest commit's row for a key shadows
         older ones — the LSM read merge); over append-DELTA commits
-        it applies the per-key SUM merge (_sum_read); a merge-only
-        history reads the active files verbatim exactly as before."""
-        _, active, added_at, run_files = self._snapshot_runs(version)
-        if run_files:
-            if getattr(run_files, "delta", None):
-                # append_run/append_delta refuse to mix at write
-                # time, so a run set here is all-delta.
-                return self._sum_read(active)
-            return self._latest_wins_read(
-                {f: added_at[f] for f in active})
-        if not active:
-            return self._empty_frame()
-        paths = [os.path.join(self.path, f) for f in active]
-        return self.spark.read.parquet(*paths)
+        it applies the per-key SUM merge; a merge-only history reads
+        the active files verbatim (see _read)."""
+        snap = self._replay(version)
+        return self._read(snap, {f: snap.added_at[f]
+                                 for f in snap.active})
 
-    def _empty_frame(self) -> DataFrame:
+    def _read(self, snap: _Replay, files: dict[str, int],
+              pre_filter=None) -> DataFrame:
+        """The ONE merged read: the rows of ``files`` ({relative path:
+        the version its rows rank at}) in snapshot ``snap``, scanned
+        with the schema the log records (no inference job; only a
+        vintage table that never recorded one infers from footers).
+        ``pre_filter`` (a predicate on the key) applies to every scan
+        BEFORE any merge, so it pushes into each parquet scan and the
+        per-key winner/sum is unchanged.
+
+        - no run file among ``files``: a plain scan, no window;
+        - delta runs (append_delta; a table is one discipline at a
+          time, so a run set is all-delta or all-latest-wins): one
+          union grouped per key, every non-key column summed back to
+          its table dtype (F.sum widens int→bigint);
+        - latest-wins runs: one scan per rank group tagged with its
+          rank, row_number over (key ORDER BY _v desc, _f desc).  A
+          key appears at most once per rank (append_run enforces
+          per-batch key uniqueness, merge keeps one row per key); the
+          file path ``_f`` breaks ties stably should a caller's
+          _source_unique=True promise be broken.  Group count = live
+          run generations, bounded by the compaction ladder
+          (docs/TXN_RUNS_DESIGN.md)."""
+        if not files:
+            df = self._empty_frame(snap)
+            return df if pre_filter is None else df.where(pre_filter)
+        reader = self.spark.read
+        if snap.schema:
+            reader = reader.schema(_struct(snap.schema))
+
+        def scan(fs) -> DataFrame:
+            df = reader.parquet(*[os.path.join(self.path, f)
+                                  for f in fs])
+            return df if pre_filter is None else df.where(pre_filter)
+
+        if not snap.runs & files.keys():
+            return scan(files)
+        if snap.delta:
+            df = scan(files)
+            return df.groupBy(self.key).agg(
+                *[F.sum(c).cast(df.schema[c].dataType).alias(c)
+                  for c in df.columns if c != self.key])
+        by_rank: dict[int, list[str]] = {}
+        for f, v in files.items():
+            by_rank.setdefault(v, []).append(f)
+        df = functools.reduce(DataFrame.unionByName, [
+            scan(fs).select("*", F.lit(v).alias("_v"),
+                            col("_metadata.file_path").alias("_f"))
+            for v, fs in sorted(by_rank.items())])
+        w = Window.partitionBy(self.key).orderBy(
+            col("_v").desc(), col("_f").desc())
+        return (df.select("*", F.row_number().over(w).alias("_rn"))
+                .where(col("_rn") == 1).drop("_rn", "_v", "_f"))
+
+    def _empty_frame(self, snap: _Replay) -> DataFrame:
         """Zero-row frame with the table schema, touching NO data
         files: from the recorded schema (create() stores it;
         checkpoints carry it), falling back to probing any referenced
         file for tables created before the schema was recorded."""
-        sj = self._table_schema(self.version())
-        if sj:
-            from pyspark.sql.types import StructType
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(sj)))
+        if snap.schema:
+            return self.spark.createDataFrame([], _struct(snap.schema))
         for v in range(1, self.version() + 1):
             try:
                 rec = self._commit_record(v)
@@ -434,34 +417,18 @@ class TxnTable:
             f"{self.path}: empty table with no data file to "
             f"infer a schema from")
 
-    def _read_buckets(self, active: dict[str, int],
-                      buckets: set[int],
-                      added_at: dict[str, int] | None = None,
-                      run_files: set[str] | None = None
-                      ) -> DataFrame | None:
-        """Current rows of the given buckets.  When live append-run
-        files intersect the selection (and the caller passed the
-        run-aware snapshot maps), the read applies latest-wins per
-        key — a plain union here would resurrect shadowed rows into
-        a bucket rewrite (the exact corruption the pre-r10 typed
-        refusal guarded against); run-free selections stay the plain
-        union with no window in the plan."""
-        sel = {f: b for f, b in active.items() if b in buckets}
-        if not sel:
-            return None
-        if run_files and added_at and (run_files & sel.keys()):
-            if getattr(run_files, "delta", None):
-                return self._sum_read(sel)
-            return self._latest_wins_read(
-                {f: added_at[f] for f in sel})
-        return self.spark.read.parquet(
-            *[os.path.join(self.path, f) for f in sel])
-
     # ------------------------------------------------------- commits
     def _stage(self, df: DataFrame) -> dict[str, int]:
         """Write df's rows as immutable per-bucket uuid files under
         data/; returns {relative path: bucket}.  Invisible until a
-        commit references them."""
+        commit references them.  The one staging point of every
+        commit, so the one schema check: a frame whose names or types
+        differ from the recorded table schema is refused before any
+        file is written (create() and vintage tables have none to
+        check against)."""
+        schema = self._replay().schema
+        if schema is not None:
+            _check_schema(df, schema)
         staging = tempfile.mkdtemp(prefix="txn_stage_")
         try:
             (df.withColumn(_BUCKET, F.pmod(F.hash(col(self.key)),
@@ -492,8 +459,8 @@ class TxnTable:
         though its record file may have been expired — succeeding
         there would commit into the range snapshots never replay
         (a lagging writer retries from the fresh head instead)."""
-        ckpt = self._latest_checkpoint(self.version())
-        if ckpt is not None and v <= ckpt[0]:
+        ckpts = self._checkpoints()
+        if ckpts and v <= ckpts[-1]:
             return False
         record = {"version": v, **record}
         # Publish ATOMICALLY WITH CONTENT: write the full record to a
@@ -540,6 +507,18 @@ class TxnTable:
             except OSError:
                 pass
 
+    def _commit(self, v: int, record: dict) -> bool:
+        """_claim plus the post-claim checkpoint cadence
+        (checkpoint_every) — maintenance must never fail a commit."""
+        if not self._claim(v, record):
+            return False
+        if self.checkpoint_every and v % self.checkpoint_every == 0:
+            try:
+                self.checkpoint()
+            except Exception:
+                pass
+        return True
+
     def _discard(self, add: dict[str, int]) -> None:
         for f in add:
             try:
@@ -548,41 +527,6 @@ class TxnTable:
                 pass
 
     # --------------------------------------------------- streaming
-    def _txn_marks(self, upto: int) -> dict[str, int]:
-        """{app: highest committed batch_id} at version `upto`:
-        newest checkpoint's carried marks + the records above it
-        (records expired by expire_log() are already folded into the
-        checkpoint, so nothing is lost — and nothing raises)."""
-        ckpt = self._latest_checkpoint(upto)
-        start = ckpt[0] + 1 if ckpt else 1
-        marks: dict[str, int] = dict(ckpt[2]) if ckpt else {}
-        for v in range(start, upto + 1):
-            try:
-                t = self._commit_record(v).get("txn")
-            except KeyError:
-                continue
-            if t:
-                marks[t["app"]] = max(marks.get(t["app"], -1),
-                                      int(t["batch_id"]))
-        return marks
-
-    def _table_schema(self, upto: int) -> str | None:
-        """The table's schema as a StructType JSON string: from the
-        newest checkpoint, else from the first commit record that
-        recorded one (create() does)."""
-        ckpt = self._latest_checkpoint(upto)
-        if ckpt and ckpt[3]:
-            return ckpt[3]
-        start = ckpt[0] + 1 if ckpt else 1
-        for v in range(start, upto + 1):
-            try:
-                rec = self._commit_record(v)
-            except KeyError:
-                continue
-            if rec.get("schema"):
-                return rec["schema"]
-        return None
-
     def last_txn(self, app: str) -> int:
         """Highest batch_id committed under `app` (-1 if none) — the
         Delta txn-metadata idempotence pattern: a streaming writer
@@ -591,7 +535,7 @@ class TxnTable:
         sound because the commit (unlike a multi-partition file
         overwrite) is atomic.  Survives expire_log(): checkpoints
         carry the marks forward."""
-        return self._txn_marks(self.version()).get(app, -1)
+        return self._replay().txns.get(app, -1)
 
     def txn_marks(self) -> dict[str, int]:
         """All streaming idempotence marks at the current version:
@@ -599,7 +543,7 @@ class TxnTable:
         that must classify MANY (app, batch_id) pairs (e.g. the
         admission store's committed-tag fold) use this instead of a
         last_txn() call per pair."""
-        return self._txn_marks(self.version())
+        return self._replay().txns
 
     def accumulate_batch(self, batch_agg: DataFrame, batch_id: int,
                          sum_cols: list[str],
@@ -662,15 +606,18 @@ class TxnTable:
             # bucket read + sum fold; pinned, the fold runs once and
             # the frame is bounded by the touched buckets' rows, the
             # same data the stage write materializes anyway.
-            snap = self._snapshot_runs()
+            # Sums cast back to the increments' dtypes (F.sum widens
+            # int→bigint), so the staged frame's types never depend on
+            # whether the touched buckets held rows.
+            snap = self._replay()
             base["snap"] = snap
-            v, active, added_at, runs = snap
-            current = self._read_buckets(active, touched,
-                                         added_at, runs)
-            out = inc if current is None else (
-                current.select(*inc.columns).unionByName(inc)
-                .groupBy(self.key)
-                .agg(*[F.sum(c).alias(c) for c in sum_cols]))
+            sel = {f: snap.added_at[f]
+                   for f, b in snap.active.items() if b in touched}
+            out = inc if not sel else (
+                self._read(snap, sel).select(*inc.columns)
+                .unionByName(inc).groupBy(self.key)
+                .agg(*[F.sum(c).cast(inc.schema[c].dataType).alias(c)
+                       for c in sum_cols]))
             return out.localCheckpoint()
 
         # r18 (guide §1.2 per-task work): the derived frame is
@@ -712,9 +659,9 @@ class TxnTable:
         with interleaved commits, so there is nothing to recompute
         (hence the higher default retry budget).  `_txn` rides the
         record for streaming idempotence exactly as in merge_into.
+        `updates` must carry the table schema, type-identical.
         Returns the committed version (unchanged if `updates` is
         empty)."""
-        validated_head = self._check_discipline(want_delta=False)
         if not _source_unique:
             dup = (updates.groupBy(self.key).count()
                    .where(col("count") > 1).take(1))
@@ -723,41 +670,19 @@ class TxnTable:
                     f"append_run: updates has >1 row for key "
                     f"{dup[0][0]!r}; latest-wins needs at most one "
                     f"source row per key per commit")
-        staged = self._stage(updates)
-        if not staged:
-            # The write barrier must still run (and its failures
-            # surface) even when nothing landed — the caller's
-            # maintenance writes are not optional just because the
-            # batch admitted nothing.
-            if _pre_claim is not None:
-                _pre_claim()
-            return self.version()
-        record = {"op": "append-run", "add": staged, "remove": []}
-        if _txn is not None:
-            record["txn"] = _txn
-        if _pre_claim is not None:
-            # Same contract as merge_into's barrier: runs once
-            # between staging and the first claim; staged files are
-            # discarded if it raises.
-            try:
-                _pre_claim()
-            except BaseException:
-                self._discard(staged)
-                raise
-        return self._claim_append(staged, record, max_retries,
-                                  validated_head, want_delta=False,
-                                  op="append_run")
+        return self._append(updates, "append-run", _txn, _pre_claim,
+                            max_retries)
 
     def append_delta(self, increments: DataFrame, *,
                      _txn: dict | None = None,
                      _pre_claim=None,
                      max_retries: int = 50) -> int:
         """O(batch) commit of keyed SUM INCREMENTS — the
-        aggregate-merge LSM mode: `increments` (same columns as the
-        table: key + numeric sum columns) land as a new run whose
-        rows ADD to a key's totals at read time (_sum_read), so a
-        streaming sum-accumulator's commit never reads table state —
-        the delta twin of append_run's latest-wins
+        aggregate-merge LSM mode: `increments` (the table schema,
+        type-identical: key + numeric sum columns) land as a new run
+        whose rows ADD to a key's totals at read time, so a streaming
+        sum-accumulator's commit never reads table state — the delta
+        twin of append_run's latest-wins
         (accumulate_batch(commit_mode="delta") routes here).
         Duplicate keys within one batch are legal (sums commute);
         lost claims re-claim with no recompute; `_txn`/`_pre_claim`
@@ -765,99 +690,78 @@ class TxnTable:
         latest-wins runs (a table is one merge discipline at a
         time).  Returns the committed version (unchanged when
         `increments` is empty)."""
-        validated_head = self._check_discipline(want_delta=True)
-        sj = self._table_schema(self.version())
-        if sj:
-            want = {f["name"]: f["type"]
-                    for f in json.loads(sj)["fields"]}
-            got = {f["name"]: f["type"] for f in
-                   json.loads(increments.schema.json())["fields"]}
-            if got != want:
-                # Names AND types: a name-only check lets a string
-                # column through, and F.sum over it yields nulls cast
-                # back to the original dtype — silent data loss, not
-                # a typed refusal.
-                bad = sorted(c for c in set(want) | set(got)
-                             if want.get(c) != got.get(c))
-                raise ValueError(
-                    f"append_delta: increment schema diverges from "
-                    f"the table schema on {bad} (increments "
-                    f"{ {c: got.get(c) for c in bad} } vs table "
-                    f"{ {c: want.get(c) for c in bad} }) — deltas "
-                    f"must cover exactly the summed schema, "
-                    f"type-identical")
-        staged = self._stage(increments)
+        return self._append(increments, "append-delta", _txn,
+                            _pre_claim, max_retries)
+
+    def _append(self, frame: DataFrame, op: str, txn: dict | None,
+                pre_claim, max_retries: int) -> int:
+        """The one body of append_run/append_delta: stage, run the
+        write barrier (``pre_claim``: once, between staging and the
+        first claim, even when nothing staged — the caller's
+        maintenance writes are not optional just because the batch
+        admitted nothing; staged files are discarded if it raises),
+        then claim.  The entry discipline check is check-then-act on
+        its own: two writers of OPPOSITE modes can both see an empty
+        run set and both commit, leaving a mixed table that read()
+        then silently mis-merges.  Closed in the claim loop: before
+        claiming on top of head H, the discipline must have been
+        validated at H — a winning claim at H+1 then proves no
+        opposite-mode run landed at or below H (any commit between
+        the validation and our claim makes the claim LOSE, and the
+        retry revalidates)."""
+        want_delta = op == "append-delta"
+        snap = self._check_discipline(want_delta)
+        staged = self._stage(frame)
         if not staged:
-            if _pre_claim is not None:
-                _pre_claim()
+            if pre_claim is not None:
+                pre_claim()
             return self.version()
-        record = {"op": "append-delta", "add": staged, "remove": []}
-        if _txn is not None:
-            record["txn"] = _txn
-        if _pre_claim is not None:
+        record = {"op": op, "add": staged, "remove": []}
+        if txn is not None:
+            record["txn"] = txn
+        if pre_claim is not None:
             try:
-                _pre_claim()
+                pre_claim()
             except BaseException:
                 self._discard(staged)
                 raise
-        return self._claim_append(staged, record, max_retries,
-                                  validated_head, want_delta=True,
-                                  op="append_delta")
-
-    def _check_discipline(self, want_delta: bool) -> int:
-        """Refuse typed when the live run set's merge discipline
-        (latest-wins vs sum-merge) conflicts with the appender's —
-        a table is ONE discipline at a time, or reads would silently
-        mis-merge (sum latest-wins rows / latest-wins delta rows).
-        Returns the log head the check validated at, so the claim
-        loop can re-check only when the head moves."""
-        head, _, _, runs = self._snapshot_runs()
-        if want_delta:
-            if runs and not getattr(runs, "delta", None):
-                raise NotImplementedError(
-                    f"{self.path}: append_delta over live latest-wins"
-                    f" runs — a table is latest-wins or sum-merge, "
-                    f"never both; compact_runs() first")
-        elif getattr(runs, "delta", None):
-            raise NotImplementedError(
-                f"{self.path}: append_run over live DELTA runs — a "
-                f"table is latest-wins or sum-merge, never both; "
-                f"compact_runs() first")
-        return head
-
-    def _claim_append(self, staged: dict[str, int], record: dict,
-                      max_retries: int, validated_head: int,
-                      want_delta: bool, op: str) -> int:
-        """Claim loop shared by append_run/append_delta.  The entry
-        discipline check is check-then-act on its own: two writers of
-        OPPOSITE modes can both see an empty run set and both commit,
-        leaving a mixed table that read() then silently mis-merges.
-        Closed here: before claiming on top of head H, the discipline
-        must have been validated at H — a winning claim at H+1 then
-        proves no opposite-mode run landed at or below H (any commit
-        between the validation and our claim makes the claim LOSE,
-        and the retry revalidates)."""
+        validated_head = snap.version
         for _ in range(max_retries):
             head = self.version()
             if head != validated_head:
                 try:
-                    head = self._check_discipline(want_delta)
+                    head = self._check_discipline(want_delta).version
                 except NotImplementedError:
                     self._discard(staged)
                     raise
                 validated_head = head
-            next_v = head + 1
-            if self._claim(next_v, record):
-                if (self.checkpoint_every
-                        and next_v % self.checkpoint_every == 0):
-                    try:
-                        self.checkpoint()
-                    except Exception:
-                        pass  # maintenance must never fail a commit
-                return next_v
+            if self._commit(head + 1, record):
+                return head + 1
         self._discard(staged)
         raise CommitConflictError(
-            f"{op} lost {max_retries} claims on {self.path}")
+            f"{op.replace('-', '_')} lost {max_retries} claims on "
+            f"{self.path}")
+
+    def _check_discipline(self, want_delta: bool) -> _Replay:
+        """Refuse typed when the live run set's merge discipline
+        (latest-wins vs sum-merge) conflicts with the appender's —
+        a table is ONE discipline at a time, or reads would silently
+        mis-merge (sum latest-wins rows / latest-wins delta rows).
+        Returns the replay the check validated, so the claim loop
+        can re-check only when the head moves."""
+        snap = self._replay()
+        if want_delta:
+            if snap.runs and not snap.delta:
+                raise NotImplementedError(
+                    f"{self.path}: append_delta over live latest-wins"
+                    f" runs — a table is latest-wins or sum-merge, "
+                    f"never both; compact_runs() first")
+        elif snap.delta:
+            raise NotImplementedError(
+                f"{self.path}: append_run over live DELTA runs — a "
+                f"table is latest-wins or sum-merge, never both; "
+                f"compact_runs() first")
+        return snap
 
     def compact_runs(self, max_retries: int = 5, level: str = "full",
                      ratio: float = 0.5) -> int | None:
@@ -897,16 +801,17 @@ class TxnTable:
 
     def _compact_runs_full(self, max_retries: int) -> int | None:
         for _ in range(max_retries):
-            base_v, active, _, runs = self._snapshot_runs()
-            if not runs:
+            snap = self._replay()
+            if not snap.runs:
                 return None
+            base_v = snap.version
             staged = self._stage(self.read(version=base_v))
             # "fold": full marks this merge record as CONTENT-
             # PRESERVING (a rewrite of the snapshot it read, no
             # upserts) — changes() uses it to keep CDC reads valid
             # across major compactions.
             record = {"op": "merge", "fold": "full", "add": staged,
-                      "remove": sorted(active)}
+                      "remove": sorted(snap.active)}
             if self.version() == base_v \
                     and self._claim(base_v + 1, record):
                 return base_v + 1
@@ -967,9 +872,8 @@ class TxnTable:
                 f"this table's history; re-baseline from a full "
                 f"snapshot read")
         if since_version == until:
-            return self._empty_frame()
+            return self._read(self._replay(), {})
         cur: dict[str, int] = {}  # rel path -> latest-wins rank
-        delta = False
         for v in range(since_version + 1, until + 1):
             try:
                 rec = self._commit_record(v)
@@ -984,7 +888,6 @@ class TxnTable:
             if op in ("create", "append-run", "append-delta"):
                 for f in rec["add"]:
                     cur[f] = v
-                delta = delta or op == "append-delta"
             elif op == "fold-runs":
                 removed = rec["remove"]
                 inside = [r for r in removed if r in cur]
@@ -1034,11 +937,10 @@ class TxnTable:
                     f"until={until}) window was consumed by a later "
                     f"fold + vacuum ({len(missing)} files gone) — "
                     f"read to head or re-baseline from a snapshot")
-        if not cur:
-            return self._empty_frame()
-        if delta:
-            return self._sum_read(cur)
-        return self._latest_wins_read(cur)
+        # The replay at `until` supplies the schema and the merge
+        # discipline (its live runs are the in-range files or their
+        # fold substitutes).
+        return self._read(self._replay(until), cur)
 
     def history(self) -> list[dict]:
         """Commit history, newest first — the DESCRIBE HISTORY
@@ -1053,7 +955,6 @@ class TxnTable:
         head = self.version()
         out: list[dict] = []
         oldest = 1
-        ckpt = self._latest_checkpoint(head)
         for v in range(head, 0, -1):
             try:
                 rec = self._commit_record(v)
@@ -1068,9 +969,11 @@ class TxnTable:
             if "asof" in rec:
                 entry["asof"] = int(rec["asof"])
             out.append(entry)
-        if oldest > 1 and ckpt is not None:
-            out.append({"version": ckpt[0], "op": "checkpoint",
-                        "n_add": len(ckpt[1]), "n_remove": 0})
+        ckpts = self._checkpoints()
+        if oldest > 1 and ckpts:
+            snap = self._replay(ckpts[-1])
+            out.append({"version": snap.version, "op": "checkpoint",
+                        "n_add": len(snap.active), "n_remove": 0})
         return out
 
     def table_stats(self) -> dict:
@@ -1081,17 +984,17 @@ class TxnTable:
         counts) — what a maintenance cadence inspects to decide
         whether compact_runs is due, and the corpus-table mirror of
         Engine.posting_store_stats' run report."""
-        head, active, added_at, runs = self._snapshot_runs()
-        base_files = [f for f in active if f not in runs]
+        snap = self._replay()
+        base_files = [f for f in snap.active if f not in snap.runs]
         gens: dict[int, list[str]] = {}
-        for f in runs:
-            gens.setdefault(added_at[f], []).append(f)
+        for f in snap.runs:
+            gens.setdefault(snap.added_at[f], []).append(f)
         return {
-            "version": head,
-            "n_files": len(active),
+            "version": snap.version,
+            "n_files": len(snap.active),
             "base_files": len(base_files),
             "base_rows": self._files_rows(base_files),
-            "run_rows": self._files_rows(runs),
+            "run_rows": self._files_rows(snap.runs),
             "generations": [
                 {"asof": v, "files": len(fs),
                  "rows": self._files_rows(fs)}
@@ -1103,8 +1006,8 @@ class TxnTable:
         ranking versions among append-run files) — the read window's
         union width and the signal a maintenance cadence checks
         before paying for a fold.  Log replay only; no Spark job."""
-        _, _, added_at, runs = self._snapshot_runs()
-        return len({added_at[f] for f in runs})
+        snap = self._replay()
+        return len({snap.added_at[f] for f in snap.runs})
 
     def _files_rows(self, files) -> int:
         """Total parquet rows across relative paths, from footers —
@@ -1124,12 +1027,12 @@ class TxnTable:
     def _compact_runs_auto(self, max_retries: int,
                            ratio: float) -> int | None:
         for _ in range(max_retries):
-            base_v, active, added_at, runs = self._snapshot_runs()
-            if not runs:
+            snap = self._replay()
+            if not snap.runs:
                 return None
             gens: dict[int, list[str]] = {}
-            for f in runs:
-                gens.setdefault(added_at[f], []).append(f)
+            for f in snap.runs:
+                gens.setdefault(snap.added_at[f], []).append(f)
             # (asof, rows, files, #generations) ascending by asof;
             # collapse adjacent (older, newer) pairs until the full
             # invariant holds — every newer group < ratio × its older
@@ -1150,7 +1053,7 @@ class TxnTable:
                         changed = True
                         break
             # Major-compaction escalation: run mass at ratio × base.
-            base_files = [f for f in active if f not in runs]
+            base_files = [f for f in snap.active if f not in snap.runs]
             if base_files:
                 if sum(g[1] for g in groups) \
                         >= ratio * self._files_rows(base_files):
@@ -1173,22 +1076,17 @@ class TxnTable:
             # leaves the small-run end — the part the next tick
             # re-merges cheapest — unfolded.
             committed = None
-            head = base_v
+            head = snap.version
             conflicted = False
-            delta = getattr(runs, "delta", set())
             for asof, _rows, files, _n in sorted(plan, reverse=True):
-                if delta:
+                staged = self._stage(self._read(
+                    snap, {f: snap.added_at[f] for f in files}))
+                record = {"op": "fold-runs", "add": staged,
+                          "remove": sorted(files), "asof": asof}
+                if snap.delta:
                     # Delta folds SUM (commutative — the fold of
                     # deltas is still a delta); the record carries
                     # the kind so reads keep sum-merging it.
-                    folded = self._sum_read(files)
-                else:
-                    folded = self._latest_wins_read(
-                        {f: added_at[f] for f in files})
-                staged = self._stage(folded)
-                record = {"op": "fold-runs", "add": staged,
-                          "remove": sorted(files), "asof": asof}
-                if delta:
                     record["delta"] = True
                 if self.version() == head \
                         and self._claim(head + 1, record):
@@ -1227,9 +1125,8 @@ class TxnTable:
         passes it — its summed rows are a function of the snapshot
         they were read from, so a conflicting commit staleness them);
         `_base`, when given, is a zero-arg callable returning the
-        run-aware (version, active, added_at, run_files) snapshot the
-        CURRENT `updates` were derived from (_snapshot_runs' shape) —
-        the claim then uses that as its conflict base instead
+        replay record (_replay) the CURRENT `updates` were derived
+        from — the claim then uses that as its conflict base instead
         of taking a fresh snapshot, closing the lost-update window
         where a commit lands between the derivation read and the
         merge's own snapshot (accumulate_batch passes it);
@@ -1255,8 +1152,12 @@ class TxnTable:
         Only valid with deletes=None (enforced); conflict handling is
         unchanged — a rebuild re-derives against the fresh snapshot.
 
+        `updates` must carry the table schema, type-identical: it is
+        checked up front, so a drifted frame is refused whether or
+        not its buckets hold rows to coerce it against.
+
         Correct over LIVE APPEND-RUN histories since r10: bucket reads
-        are run-aware (latest-wins per key via _read_buckets), the
+        are run-aware (latest-wins per key via _read), the
         commit removes every live file — base AND run — of the
         touched buckets, and every retry path re-derives the FULL
         run-aware snapshot, so a run committed mid-merge is either
@@ -1276,6 +1177,9 @@ class TxnTable:
                 "frame is a function of the snapshot it was derived "
                 "from and MUST be re-derived, or interleaved rows "
                 "would be lost")
+        snap = _base() if _base is not None else self._replay()
+        if snap.schema is not None:
+            _check_schema(updates, snap.schema)
         if not _source_unique:
             dup = (updates.groupBy(self.key).count()
                    .where(col("count") > 1).take(1))
@@ -1296,8 +1200,6 @@ class TxnTable:
         if not touched:
             return self.version()
 
-        base_v, active, added_at, run_files = (
-            _base() if _base is not None else self._snapshot_runs())
         staged: dict[str, int] | None = None
         for _ in range(max_retries):
             if staged is None:
@@ -1308,14 +1210,16 @@ class TxnTable:
                     # drop anyway.
                     merged = updates
                 else:
-                    current = self._read_buckets(active, touched,
-                                                 added_at, run_files)
+                    sel = {f: snap.added_at[f]
+                           for f, b in snap.active.items()
+                           if b in touched}
                     # No checkpoint needed: data files are immutable —
                     # the merge reads old files and stages NEW ones,
                     # never overwriting what it reads.
-                    merged = updates if current is None else (
-                        current.join(drop_keys.distinct(), self.key,
-                                     "left_anti")
+                    merged = updates if not sel else (
+                        self._read(snap, sel)
+                        .join(drop_keys.distinct(), self.key,
+                              "left_anti")
                         .unionByName(updates))
                 staged = self._stage(merged)
             if _pre_claim is not None:
@@ -1325,25 +1229,18 @@ class TxnTable:
                 except BaseException:
                     self._discard(staged)
                     raise
-            remove = [f for f, b in active.items() if b in touched]
-            next_v = base_v + 1
+            remove = [f for f, b in snap.active.items() if b in touched]
+            next_v = snap.version + 1
             record = {"op": "merge", "add": staged, "remove": remove}
             if _txn is not None:
                 record["txn"] = _txn
-            if self._claim(next_v, record):
-                if (self.checkpoint_every
-                        and next_v % self.checkpoint_every == 0):
-                    try:
-                        self.checkpoint()
-                    except Exception:
-                        pass  # maintenance must never fail a commit
+            if self._commit(next_v, record):
                 return next_v
             # Lost the claim: fold in the interleaved commits.
-            (new_v, new_active,
-             new_added_at, new_run_files) = self._snapshot_runs()
+            new = self._replay()
             interleaved_buckets: set[int] = set()
             expired_mid_scan = False
-            for v in range(base_v + 1, new_v + 1):
+            for v in range(snap.version + 1, new.version + 1):
                 try:
                     rec = self._commit_record(v)
                 except KeyError:
@@ -1361,11 +1258,10 @@ class TxnTable:
                 # ours → our staged union is stale (it would shadow
                 # or resurrect their rows) → rebuild.
                 interleaved_buckets |= set(rec["add"].values())
-                interleaved_buckets |= {active.get(f)
+                interleaved_buckets |= {snap.active.get(f)
                                         for f in rec["remove"]
-                                        if f in active}
-            base_v, active = new_v, new_active
-            added_at, run_files = new_added_at, new_run_files
+                                        if f in snap.active}
+            snap = new
             if expired_mid_scan or (interleaved_buckets & touched):
                 # Conflict: a competing writer rewrote a bucket we
                 # read — our staged merge is stale.  Recompute.
@@ -1381,8 +1277,7 @@ class TxnTable:
                         # Conflict base = the snapshot the rebuild
                         # actually read, not the head we happened to
                         # observe before it ran.
-                        (base_v, active,
-                         added_at, run_files) = _base()
+                        snap = _base()
         if staged:
             # Exhausted retries with files still staged: clean up —
             # otherwise they linger as orphans until a vacuum.
@@ -1398,101 +1293,39 @@ class TxnTable:
         half): snapshots at or above the checkpoint replay from it
         and never touch the expired records; time travel below it
         raises a clear KeyError (Delta's log-retention trade).
-        A checkpoint written before txn marks / schema were carried
-        (legacy) is REWRITTEN with freshly computed ones first:
-        expiring below a mark-less checkpoint would silently discard
-        every (app, batch_id) idempotence mark beneath it, letting a
-        crash-replayed streaming batch pass the exactly-once gate
-        (double-count).  The rewrite folds from the newest
-        marks-carrying checkpoint below it plus the still-present
-        records; if those records are themselves already expired the
-        marks are genuinely unrecoverable and expire_log refuses.
+        The checkpoint is first rewritten from the replay at its
+        version: a LEGACY one (written before txn marks / schema were
+        carried) thereby gains the marks the replay recovered from
+        the still-present records — expiring below a mark-less
+        checkpoint would silently discard every (app, batch_id)
+        idempotence mark beneath it, letting a crash-replayed
+        streaming batch pass the exactly-once gate (double-count).
+        If those records are themselves already expired the marks
+        are genuinely unrecoverable and expire_log refuses.  A
+        marks-carrying checkpoint replays from itself alone, so
+        routine expiry never rereads expired records.
 
         No-op without a checkpoint.  Returns count deleted."""
-        ckpt = self._latest_checkpoint(self.version())
-        if ckpt is None:
+        ckpts = self._checkpoints()
+        if not ckpts:
             return 0
-        # Rewrite ONLY when the marks are missing: a vintage table
-        # whose schema was never recorded anywhere keeps schema=None
-        # even after a rewrite, and gating on it would re-run the
-        # record-reading rebuild on every later expire_log — which
-        # crashes once the records it reads are themselves expired.
-        # Schema is harvested opportunistically inside the same
-        # rewrite; a marks-carrying schema-less checkpoint expires
-        # fine (the vintage empty-read trade, documented in read()).
-        if not ckpt[4]:
-            self._rewrite_checkpoint_with_marks(ckpt)
+        snap = self._replay(ckpts[-1])
+        if not snap.carried_marks:
+            raise ValueError(
+                f"{self.path}: checkpoint v{snap.version} carries no "
+                f"txn marks and a record needed to rebuild them is "
+                f"already expired — refusing expire_log(); the marks "
+                f"below this checkpoint are the only defense against "
+                f"streaming double-counts")
+        self._write_checkpoint(snap)
         n = 0
-        for v in range(1, ckpt[0] + 1):
+        for v in range(1, snap.version + 1):
             try:
                 os.remove(_version_file(self.path, v))
                 n += 1
             except FileNotFoundError:
                 pass
         return n
-
-    def _rewrite_checkpoint_with_marks(self, ckpt) -> None:
-        """Upgrade a legacy checkpoint in place (atomic tmp+replace)
-        with the txn marks and schema as of its version, computed
-        from the newest marks-CARRYING checkpoint below it plus the
-        commit records between the two.  Raises if any needed record
-        is already expired — the marks would then be unrecoverable
-        and expiry must not proceed."""
-        best, active, _, schema, _ = ckpt
-        # Newest checkpoint strictly below `best` that carried marks.
-        base_v, marks = 0, {}
-        try:
-            names = os.listdir(_log_dir(self.path))
-        except FileNotFoundError:
-            names = []
-        lower = sorted((int(n[6:16]) for n in names
-                        if n.startswith("ckpt-v")
-                        and n.endswith(".json")
-                        and int(n[6:16]) < best), reverse=True)
-        for v in lower:
-            with open(os.path.join(_log_dir(self.path),
-                                   f"ckpt-v{v:010d}.json")) as fh:
-                data = json.load(fh)
-            if "txns" in data:
-                base_v, marks = v, dict(data["txns"])
-                if schema is None:
-                    schema = data.get("schema")
-                break
-        for v in range(base_v + 1, best + 1):
-            try:
-                rec = self._commit_record(v)
-            except KeyError:
-                raise ValueError(
-                    f"{self.path}: checkpoint v{best} carries no txn "
-                    f"marks and record v{v} needed to rebuild them "
-                    f"is already expired — refusing expire_log(); "
-                    f"the marks below this checkpoint are the only "
-                    f"defense against streaming double-counts")
-            t = rec.get("txn")
-            if t:
-                marks[t["app"]] = max(marks.get(t["app"], -1),
-                                      int(t["batch_id"]))
-            if schema is None and rec.get("schema"):
-                schema = rec["schema"]
-        path = os.path.join(_log_dir(self.path),
-                            f"ckpt-v{best:010d}.json")
-        # Preserve run-aware fields (added_at / runs) if the file
-        # already carries them — losing them under expiry would lose
-        # the latest-wins file order of an append-run history.
-        extra = {}
-        try:
-            with open(path) as fh:
-                prev = json.load(fh)
-            extra = {k: prev[k]
-                     for k in ("added_at", "runs", "delta_runs")
-                     if k in prev}
-        except (OSError, ValueError):
-            pass
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"version": best, "active": active, **extra,
-                       "txns": marks, "schema": schema}, fh)
-        os.replace(tmp, path)
 
     # ------------------------------------------------------- vacuum
     def vacuum(self, retain_versions: int = 0,
@@ -1517,7 +1350,7 @@ class TxnTable:
         keep: set[str] = set()
         for v in range(max(1, head - retain_versions), head + 1):
             try:
-                keep |= set(self._snapshot(v)[1])
+                keep |= set(self._replay(v).active)
             except KeyError:
                 pass  # below expired log — nothing to retain there
         data_dir = os.path.join(self.path, _DATA)

@@ -33,7 +33,8 @@ def pytest_collection_modifyitems(config, items):
     `*_matches_duckdb_oracle` parity test, a plan-pin module
     (test_plans_scale.py, test_r*_plans.py) or
     test_txn.py::test_merge_model_property, the model-based reference
-    for MERGE.  It DOES demote most hypothesis equivalence properties
+    for MERGE, or one of the TxnTable log-replay and merged-read pins
+    named in tests/test_gate_policy.py.  It DOES demote most hypothesis equivalence properties
     (test_properties.py) and most of the sharded-sink battery
     (test_shard_sink.py); those run only in the full suite.  These
     keep rules, and that every listed id names an existing test, are

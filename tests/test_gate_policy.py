@@ -12,7 +12,24 @@ from tests.conftest import slow_ids
 
 _KEPT_NAMES = ("*_matches_oracle", "*_matches_duckdb_oracle")
 _KEPT_MODULES = ("test_plans_scale.py", "test_r*_plans.py")
-_KEPT_IDS = ("tests/test_txn.py::test_merge_model_property",)
+_KEPT_IDS = (
+    "tests/test_txn.py::test_merge_model_property",
+    # the TxnTable log replay and merged read: checkpoints, expiry,
+    # the _base conflict snapshot, latest-wins/plain/sum reads, point
+    # reads and CDC reads
+    "tests/test_txn.py::test_checkpoint_compacts_replay",
+    "tests/test_txn.py::test_expire_log_after_checkpoint",
+    "tests/test_txn.py::test_expire_log_vintage_schemaless_table",
+    "tests/test_txn.py::test_merge_base_snapshot_closes_lost_update_window",
+    "tests/test_txn_runs.py::test_append_run_latest_wins_read",
+    "tests/test_txn_runs.py::test_merge_only_tables_read_exactly_as_before",
+    "tests/test_txn_runs.py::test_point_read_stays_bucket_pruned_over_runs",
+    "tests/test_txn_runs.py::test_checkpoint_and_expiry_keep_run_order",
+    "tests/test_txn_discipline.py::"
+    "test_point_read_empty_bucket_plans_no_files",
+    "tests/test_txn_changes.py::test_changes_net_upserts_since_version",
+    "tests/test_txn_changes.py::test_changes_delta_sums_increments",
+)
 
 
 def _split(node_id: str) -> tuple[str, str]:

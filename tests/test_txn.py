@@ -57,11 +57,11 @@ def test_merge_rewrites_only_touched_buckets(spark, table):
         return out
 
     b7 = spark.sql("SELECT pmod(hash(7L), 8)").collect()[0][0]
-    _, before = table._snapshot()
+    before = table._replay().active
     untouched = _digests(before, lambda b: b != b7)
     assert untouched, "expected untouched bucket files"
     table.merge_into(spark.createDataFrame([(7, -7)], "k long, v long"))
-    _, after = table._snapshot()
+    after = table._replay().active
     assert _digests(after, lambda b: b != b7) == untouched
     rewritten = {f for f, b in after.items() if b == b7}
     assert rewritten and not rewritten & set(before)
@@ -431,7 +431,7 @@ def test_merge_base_snapshot_closes_lost_update_window(spark, tmp_path):
     rebuilds = []
 
     def derive(inc_v: int):
-        base["snap"] = t._snapshot_runs()
+        base["snap"] = t._replay()
         cur = t.read()
         return (cur.unionByName(spark.createDataFrame(
             [(1, inc_v)], "k long, v long"))
@@ -598,7 +598,7 @@ def test_concurrent_expiry_mid_merge_is_retryable(spark, table):
     # then), every remaining data file is referenced by the current
     # snapshot — the conflict path discarded its stale staging.
     table.vacuum(retain_versions=0, retain_orphans_s=0.0)
-    _, active = table._snapshot()
+    active = table._replay().active
     on_disk = set(os.listdir(os.path.join(table.path, "data")))
     referenced = {os.path.basename(f) for f in active}
     assert on_disk == referenced

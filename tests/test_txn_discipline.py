@@ -51,9 +51,9 @@ def test_concurrent_delta_vs_run_mixing_refused(spark, tmp_path):
             _pre_claim=interleave_run)
     # the loser's staged files were discarded — every file on disk is
     # referenced by the current snapshot (no orphans)
-    _, active, _, runs = t._snapshot_runs()
-    assert _data_files(t) == {os.path.basename(f) for f in active}
-    assert not getattr(runs, "delta", set())
+    snap = t._replay()
+    assert _data_files(t) == {os.path.basename(f) for f in snap.active}
+    assert not snap.delta
     got = {r.k: r.n for r in t.read().collect()}
     assert got == {1: 10, 2: 20, 3: 3}  # run landed, delta refused
 
@@ -94,6 +94,28 @@ def test_append_delta_type_mismatch_refused(spark, tmp_path):
         t.append_delta(spark.createDataFrame(
             [(1, 5, 0)], "k long, n long, m long"))
     assert {r.k: (r.n, r.m) for r in t.read().collect()} == {1: (10, 1)}
+
+
+def test_commit_type_drift_refused(spark, tmp_path):
+    """Reads pass the recorded schema to every scan, so every commit
+    must stage that schema: an append_run or merge_into whose column
+    type differs is refused before any file lands — for merge_into
+    whether or not the touched bucket holds rows to coerce against."""
+    from data_ingestion_challenge_spark.serving import _murmur3_long
+
+    t = _mk(spark, tmp_path, [(1, 10, 1)])
+    drift = "k long, n long, m long"
+    with pytest.raises(ValueError, match="type-identical"):
+        t.append_run(spark.createDataFrame([(2, 2, 2)], drift))
+    empty = next(k for k in range(2, 64)
+                 if _murmur3_long(k) % 4 != _murmur3_long(1) % 4)
+    for k in (1, empty):  # the occupied bucket, then an empty one
+        with pytest.raises(ValueError, match="type-identical"):
+            t.merge_into(spark.createDataFrame([(k, 3, 3)], drift))
+    assert t.version() == 1
+    assert _data_files(t) == {os.path.basename(f)
+                              for f in t._replay().active}
+    assert dict(t.read().dtypes)["m"] == "int"
 
 
 # --------------------------------------- base-less ladder escalation
@@ -203,3 +225,127 @@ def test_admission_corpus_fold_failure_never_fails_batch(spark,
         admit(spark.createDataFrame(rows, DOCS_SCHEMA), b)
     assert calls  # the gate did fire and the failure was swallowed
     assert table.read().count() == 20  # every batch committed
+
+
+# ------------------------------ reads plan with the recorded schema
+
+
+def _gen_table(spark, tmp_path):
+    """Created empty, then five append-run generations, each holding
+    key 5 — five rank groups for read() and point_read(5)."""
+    t = TxnTable.create(spark, str(tmp_path / "gens"),
+                        spark.createDataFrame([], "k long, n long"),
+                        key="k", n_buckets=4)
+    for g in range(5):
+        t.append_run(spark.createDataFrame(
+            [(5, g), (10 + g, g)], "k long, n long"))
+    return t
+
+
+def _jobs_to_build(spark, build) -> int:
+    """Spark jobs started while `build` constructs (not runs) a
+    frame, counted from the status tracker under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "frame build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_builds_start_no_spark_job(spark, tmp_path):
+    """Every read goes through the schema the log records, so building
+    read(), point_read(k) and changes(since) over a 5-generation run
+    table plans its scans without one schema-inference job per
+    generation."""
+    t = _gen_table(spark, tmp_path)
+    assert _jobs_to_build(spark, t.read) == 0
+    assert _jobs_to_build(spark, lambda: t.point_read(5)) == 0
+    assert _jobs_to_build(spark, lambda: t.changes(2)) == 0
+    assert {r.k: r.n for r in t.read().collect()} == {
+        5: 4, **{10 + g: g for g in range(5)}}
+    assert [(r.k, r.n) for r in t.point_read(5).collect()] == [(5, 4)]
+    assert {r.k: r.n for r in t.changes(2).collect()} == {
+        5: 4, **{10 + g: g for g in range(1, 5)}}
+
+
+def test_schemaless_log_reads_by_inference(spark, tmp_path):
+    """A vintage table whose v1 record and checkpoints never recorded
+    a schema still reads correctly: the one read falls back to footer
+    inference, and an empty read probes a data file for its
+    schema."""
+    import json as _json
+
+    from data_ingestion_challenge_spark.txn import (
+        _ckpt_file, _version_file,
+    )
+
+    t = _gen_table(spark, tmp_path)
+    ck = t.checkpoint()
+    for p in (_version_file(t.path, 1), _ckpt_file(t.path, ck)):
+        with open(p) as fh:
+            d = _json.load(fh)
+        d.pop("schema")
+        with open(p, "w") as fh:
+            _json.dump(d, fh)
+    assert t._replay().schema is None
+    want = {5: 4, **{10 + g: g for g in range(5)}}
+    assert {r.k: r.n for r in t.read().collect()} == want
+    assert [(r.k, r.n) for r in t.point_read(5).collect()] == [(5, 4)]
+    assert {r.k: r.n for r in t.changes(4).collect()} == {
+        5: 4, 13: 3, 14: 4}
+    empty = t.changes(t.version())
+    assert empty.count() == 0 and empty.columns == ["k", "n"]
+    # commits still land (nothing to check them against) and read
+    t.append_run(spark.createDataFrame([(5, 9)], "k long, n long"))
+    assert {r.k: r.n for r in t.read().collect()} == {**want, 5: 9}
+
+
+# ------------------------------------ one replay, one read (tooling)
+
+
+def test_txn_keeps_one_log_lister_and_one_read():
+    """Static check of txn.py: the log directory is listed only by
+    version() and the one checkpoint lister, and parquet is read only
+    by the one merged read and the vintage-schema fallback — a second
+    replay or a second read path cannot be added unnoticed."""
+    import ast
+
+    from data_ingestion_challenge_spark import txn
+
+    with open(txn.__file__) as fh:
+        tree = ast.parse(fh.read())
+
+    def attrs(node):
+        # attribute names along a call/attribute receiver chain
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute):
+                yield node.attr
+                node = node.value
+            else:
+                node = node.func
+
+    # module functions and TxnTable methods, nested helpers included
+    fns = [f for top in tree.body
+           for f in (top.body if isinstance(top, ast.ClassDef) else [top])
+           if isinstance(f, ast.FunctionDef)]
+    listers, readers = set(), set()
+    for fn in fns:
+        for node in ast.walk(fn):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)):
+                continue
+            chain = list(attrs(node.func))
+            if chain[0] == "listdir" and any(
+                    isinstance(n, ast.Name) and n.id == "_log_dir"
+                    for a in node.args for n in ast.walk(a)):
+                listers.add(fn.name)
+            if chain[0] == "parquet" and "write" not in chain[1:]:
+                readers.add(fn.name)
+    assert listers == {"version", "_checkpoints"}, listers
+    assert readers == {"_read", "_empty_frame"}, readers

@@ -84,7 +84,7 @@ def test_long_stream_retention_lifecycle(spark, tmp_path):
     assert stats["run_rows"] == 0  # windowless
     assert stats["n_files"] <= N_BUCKETS
     # on-disk data files == the live set exactly
-    live = {os.path.basename(f) for f in t._snapshot()[1]}
+    live = {os.path.basename(f) for f in t._replay().active}
     on_disk = set(os.listdir(os.path.join(t.path, "data")))
     assert on_disk == live
     # on-disk log records bounded: everything at or below the final

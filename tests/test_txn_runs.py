@@ -191,8 +191,8 @@ def test_compact_runs_auto_stepped_ladder(spark, tmp_path):
     assert rec["op"] == "fold-runs" and rec["asof"] == 4
     # 3 generations collapsed into 1 (2+2 ≥ 0.5×, cascade) — one
     # read group beside the base
-    _, active, added_at, runs = t._snapshot_runs()
-    assert len({added_at[f] for f in runs}) == 1
+    snap = t._replay()
+    assert len({snap.added_at[f] for f in snap.runs}) == 1
     # base untouched: no base data file rewritten by the stepped fold
     assert base_files & set(os.listdir(os.path.join(t.path, "data")))
     # idempotent: nothing further to fold at this size spread
@@ -219,8 +219,7 @@ def test_compact_runs_auto_escalates_to_full(spark, tmp_path):
     v = t.compact_runs(level="auto")
     assert v == t.version()
     assert _state(t) == before
-    _, _, _, runs = t._snapshot_runs()
-    assert not runs
+    assert not t._replay().runs
     plan = t.read()._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
 
@@ -405,7 +404,7 @@ def test_point_read_stays_bucket_pruned_over_runs(spark, tmp_path):
     df = t.point_read(5)
     assert [(r.k, r.val) for r in df.collect()] == [(5, "gen2")]
     files = df.inputFiles()
-    _, active, _, _ = t._snapshot_runs()
+    active = t._replay().active
     assert files and len(files) < len(active)
     assert all(f.endswith(f"-b{b}.parquet") for f in files)
     # merge-only twin: pruned AND windowless
