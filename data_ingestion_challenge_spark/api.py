@@ -475,156 +475,6 @@ class Engine:
         finally:
             release_admission_lease(lease)
 
-    def compact_admission_postings(self, postings_dir: str,
-                                   out_dir: str,
-                                   n_files: int = 8,
-                                   table_path: str | None = None,
-                                   sizes_dir: str | None = None,
-                                   sizes_out: str | None = None,
-                                   allow_uncommitted: bool = False,
-                                   bloom_sidecars: bool = True
-                                   ) -> None:
-        """Maintenance for the admission pipeline's posting store:
-        fold all per-batch increments under ``postings_dir`` into one
-        base partition ``out_dir/ingest_batch=-1`` (one file per
-        shingle bucket for a bucketed store; ``n_files`` s-sorted
-        files for a flat one) so the corpus-side read stops paying one
-        tiny file per historical micro-batch.  Generation swap, same
-        contract as sources.files.compact_parquet: the new store is
-        built beside the old one and the caller points the NEXT
-        admission run at ``out_dir`` — crash-safe (a half-written
-        out_dir is simply recompacted), no in-place surgery on a
-        store a concurrent screen may be reading.  The base id -1
-        can never collide with a real micro-batch id, so the sink's
-        replay guard keeps working unchanged.
-
-        ``table_path`` (the corpus TxnTable) restricts the fold to
-        COMMITTED docs and is REQUIRED by default: a batch that
-        crashed between its posting write and its commit leaves
-        postings with no commit, and folding those into the base
-        would make the crashed batch's replay self-match its own
-        survivors (jaccard 1.0) and silently drop them — the exact
-        window the sink's same-tag exclusion protects, which an
-        unfiltered compaction would erase.  Only a QUIESCED store
-        with no possible crashed batch may skip the filter, via the
-        explicit ``allow_uncommitted=True`` opt-in.  Pass
-        ``sizes_dir``/``sizes_out`` to compact the sizes store
-        alongside (required for the screen's coverage check to keep
-        accepting it).  ``bloom_sidecars`` (default True) also
-        publishes the new base run's bloom sidecar (screen lever #2,
-        streaming/sidecar.py); False skips the build for
-        deployments screening without them."""
-        import shutil
-
-        from pyspark.sql import functions as F
-        from pyspark.sql.functions import col
-
-        from data_ingestion_challenge_spark.streaming.admission import (
-            _META, store_bucket_mod,
-        )
-
-        if table_path is None and not allow_uncommitted:
-            raise ValueError(
-                "compact_admission_postings: pass table_path (the "
-                "corpus TxnTable) so only COMMITTED docs fold into "
-                "the base — an unfiltered fold re-opens the "
-                "crashed-batch replay data-loss window.  For a "
-                "quiesced store with no in-flight batch, opt in "
-                "explicitly with allow_uncommitted=True.")
-        # Heal any crashed IN-PLACE compaction before reading: a
-        # crash after compact_store_in_place published its manifest
-        # can leave folded increments deleted while the new base is
-        # still staged under _compacting/ (underscore: invisible to
-        # Spark's listing) — reading the store in that window would
-        # silently bake the missing postings out of the new
-        # generation and the screen would admit true duplicates.
-        # Same lease the sink holds: the swap completion is only
-        # safe because no concurrent screen can read mid-publish.
-        from data_ingestion_challenge_spark.streaming.admission import (
-            _acquire_admission_lease, recover_compaction,
-            release_admission_lease,
-        )
-        lease = _acquire_admission_lease(postings_dir)
-        try:
-            recover_compaction(postings_dir, sizes_dir)
-        finally:
-            release_admission_lease(lease)
-        committed = None
-        if table_path is not None:
-            from data_ingestion_challenge_spark.txn import TxnTable
-            committed = (TxnTable(self.spark, table_path,
-                                  key="doc_id")
-                         .read().select("doc_id"))
-
-        mod = store_bucket_mod(postings_dir)
-        # Meta BEFORE the fold: a crash mid-fold leaves out_dir with
-        # s_bucket subdirs inside ingest_batch=-1; without the meta,
-        # store_bucket_mod would stamp that half-written store FLAT
-        # and later flat per-batch writes would mix partition depths
-        # (discovery failure).  The modulus is a property of the
-        # stored values, so carrying it first is always correct —
-        # recompaction of a half-written out_dir overwrites the data,
-        # not the meta.
-        os.makedirs(out_dir, exist_ok=True)
-        shutil.copyfile(os.path.join(postings_dir, _META),
-                        os.path.join(out_dir, _META))
-        # Sharded stores fold sharded (the meta copied above carries
-        # shard_col into the new generation): the s_shard partition
-        # column rides the read and the layout write below.  The read
-        # goes through admission._read_store_resolved — EXPLICIT
-        # schema, so an all-numeric s_shard store ('0123') can never
-        # be inferred as int and rewritten into the new generation
-        # with mangled shard dirs ('123') that every future screen's
-        # string prune would miss (r17 advice: the in-place fold was
-        # fixed; this out-of-place path had the same inference read)
-        # — and mixed increment rows (r18 layout) take their true
-        # shard from the doc_shard data column, so the new base gets
-        # real s_shard=<value> dirs.
-        from data_ingestion_challenge_spark.streaming.admission import (
-            SHARD_COL, _read_store_resolved, store_shard_col,
-        )
-        sharded = store_shard_col(postings_dir) is not None
-        raw = _read_store_resolved(self.spark, postings_dir,
-                                   sharded=sharded,
-                                   bucketed=mod is not None)
-        post = raw.select("doc_id", "s",
-                          *([SHARD_COL] if sharded else []))
-        if committed is not None:
-            post = post.join(committed, "doc_id", "left_semi")
-        base = os.path.join(out_dir, "ingest_batch=-1")
-        # Shared layout contract (_write_postings_layout): bucketed
-        # stores keep one s-sorted file per shingle bucket — the
-        # pruning-critical bucket function must come from the ONE
-        # helper every posting writer routes through.
-        from data_ingestion_challenge_spark.streaming.admission import (
-            _write_postings_layout,
-        )
-        _write_postings_layout(post, base, mod, n_files=n_files,
-                               shard_col=SHARD_COL if sharded
-                               else None)
-        # Bloom sidecar for the new generation's base run (screen
-        # lever #2) — same best-effort rule and the same opt-out
-        # flag as the in-place fold: a build failure (or
-        # bloom_sidecars=False) leaves a run the screen simply scans.
-        if bloom_sidecars:
-            try:
-                from data_ingestion_challenge_spark.streaming import (
-                    sidecar as _sc,
-                )
-                _sc.build_run_sidecar(self.spark, out_dir, "-1")
-            except Exception as exc:
-                import sys
-                print(f"compact_admission_postings: bloom sidecar "
-                      f"build failed (screen degrades to full "
-                      f"scan): {exc!r}", file=sys.stderr)
-        if sizes_dir is not None and sizes_out is not None:
-            sz = (self.spark.read.option("basePath", sizes_dir)
-                  .parquet(sizes_dir).select("doc_id", "n"))
-            if committed is not None:
-                sz = sz.join(committed, "doc_id", "left_semi")
-            (sz.repartition(1).write.mode("overwrite")
-             .parquet(os.path.join(sizes_out, "ingest_batch=-1")))
-
     # --------------------------------------------------- dedup infra
     def corpus_table_stats(self, table_path: str,
                            key: str = "doc_id") -> dict:
@@ -677,14 +527,14 @@ class Engine:
         - ``df_histogram``: shingle document-frequency histogram in
           log2 buckets (operators/dedup.shingle_df_distribution over
           the store) — the df tail prices candidate-join blowup;
-        - ``bucket_balance``: postings per ``s_bucket`` partition
-          (bucketed stores only) — partition skew that would make
-          pruned screen reads lopsided;
-        - ``mod``: the store's persisted bucket modulus (None=flat).
+        - ``bucket_balance``: postings per ``s_bucket`` partition —
+          partition skew that would make pruned screen reads
+          lopsided;
+        - ``mod``: the store's persisted bucket modulus.
 
         Heals a crashed in-place compaction swap under the admission
-        lease BEFORE reading (the compact_admission_postings rule:
-        a published-manifest half-swap otherwise hides folded
+        lease BEFORE reading (the rule for every non-sink reader: a
+        published-manifest half-swap otherwise hides folded
         increments from this reader) — and the histogram/balance
         frames are MATERIALIZED (localCheckpoint) while the lease is
         still held: returning them lazy would let a concurrent
@@ -749,11 +599,9 @@ class Engine:
             hist = shingle_df_distribution(
                 None,
                 posting=store.select("doc_id", "s")).localCheckpoint()
-            balance = None
-            if mod is not None and "s_bucket" in store.columns:
-                balance = (store.groupBy("s_bucket")
-                           .agg(F.count("*").alias("n_postings"))
-                           .localCheckpoint())
+            balance = (store.groupBy("s_bucket")
+                       .agg(F.count("*").alias("n_postings"))
+                       .localCheckpoint())
         finally:
             release_admission_lease(lease)
         return {"mod": mod, "runs": runs,

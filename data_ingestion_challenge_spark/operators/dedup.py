@@ -486,25 +486,24 @@ def winnow_fps_oracle_cte(n: int = 3, w: int = 4) -> str:
 # ------------------------------------------------ incremental (ingest)
 
 def incremental_jaccard_pairs(new_docs: DataFrame, posting: DataFrame,
-                              n: int = 3, tau: float = 0.8,
-                              dfreq: DataFrame | None = None,
-                              sizes: DataFrame | None = None,
-                              prune_mod: int | None = None,
-                              new_post: DataFrame | None = None
+                              n: int = 3, tau: float = 0.8
                               ) -> DataFrame:
     """INGEST-TIME dedup: exact Jaccard ≥ τ pairs between an incoming
     batch and the EXISTING corpus, via the corpus's maintained posting
     table (Engine.materialize_postings) — the production flow where
     new data is screened at arrival instead of re-deduping the whole
-    corpus per batch.
+    corpus per batch.  (The streaming admission sink runs its own
+    fused screen, streaming/admission._screen_pairs, with bucket
+    pruning and a sizes store; this operator backs the catalog-table
+    screen, Engine.dedup_incoming and the registered
+    incremental_dedup_verdict query.)
 
     Cost model at 100 TB: everything batch-sided is batch-sized; the
     corpus is touched only through (a) one df aggregation over the
-    posting table (map-side combined; pass a maintained ``dfreq`` to
-    skip it), (b) the candidate equi-join of the batch's PREFIX
-    shingles against the bucketed posting table (exchange-free on the
-    corpus side), and (c) size/verify joins restricted to candidate
-    docs.  No corpus self-join ever happens.
+    posting table (map-side combined), (b) the candidate equi-join of
+    the batch's PREFIX shingles against the bucketed posting table
+    (exchange-free on the corpus side), and (c) size/verify joins
+    restricted to candidate docs.  No corpus self-join ever happens.
 
     Correctness of the ONE-SIDED prefix: J(A,B) ≥ τ implies
     |A∩B| ≥ τ·|A∪B| ≥ τ·|A|, and any (|A| − ⌈τ|A|⌉ + 1)-subset of A
@@ -519,42 +518,13 @@ def incremental_jaccard_pairs(new_docs: DataFrame, posting: DataFrame,
     Returns (doc_id, corpus_doc_id, jaccard): batch doc → corpus
     near-duplicate.  Intra-batch duplicates are a separate (batch-
     sized) concern — run ngram_jaccard_pairs on the batch itself.
-
-    SHINGLE-BUCKET PRUNING (the true sub-corpus read path): when the
-    posting store carries an ``s_bucket`` partition column (written
-    as pmod(hash(s), prune_mod) — streaming/admission.py does) and
-    ``prune_mod`` is passed, the screen collects the batch's bucket
-    ids (≤ prune_mod values) and every shingle-keyed corpus read —
-    df aggregation, candidate join, verify join — scans ONLY those
-    partitions.  Exact: all corpus occurrences of any batch shingle
-    live in that shingle's bucket, and non-batch shingles can never
-    join.  Corpus doc SIZES must stay full counts, so they come from
-    the maintained ``sizes`` store ((doc_id, n) — batch-increment
-    maintained by the admission sink); without one they fall back to
-    one full-posting aggregation.
     """
     eps = 1e-9
-    if new_post is None:
-        # Inline batch postings stay persisted for the lifetime of the
-        # returned plan (prefix ranks + verify + sizes all read them)
-        # and are LRU-evicted once unreferenced.  A LONG-RUNNING
-        # caller (the admission sink) passes its own `new_post` and
-        # unpersists it after materializing the verdict — one cached
-        # frame per batch would otherwise accumulate.
-        new_post = _postings(new_docs, n)
-    full_posting = posting
-    if (prune_mod is not None and "s_bucket" in posting.columns):
-        buckets = [r[0] for r in new_post.select(
-            F.pmod(F.hash("s"), F.lit(prune_mod)).alias("b"))
-            .distinct().collect()]  # bounded: ≤ prune_mod ids
-        posting = posting.where(col("s_bucket").isin(buckets))
-    posting = posting.drop("s_bucket")
-    full_posting = full_posting.drop("s_bucket")
-    if dfreq is None:
-        # Exact even when pruned: every corpus occurrence of a batch
-        # shingle lives in an included bucket; other shingles only
-        # feed the left join as misses.
-        dfreq = posting.groupBy("s").agg(F.count("*").alias("_df"))
+    # Inline batch postings stay persisted for the lifetime of the
+    # returned plan (prefix ranks + verify + sizes all read them) and
+    # are LRU-evicted once unreferenced.
+    new_post = _postings(new_docs, n)
+    dfreq = posting.groupBy("s").agg(F.count("*").alias("_df"))
     wspec = Window.partitionBy("doc_id").orderBy("_df", "s")
     ranked = (
         new_post.join(dfreq, "s", "left").fillna({"_df": 0})
@@ -578,16 +548,9 @@ def incremental_jaccard_pairs(new_docs: DataFrame, posting: DataFrame,
         .groupBy("_nid", "_cid").agg(F.count("*").alias("ic")))
     sz_new = new_post.groupBy("doc_id").agg(F.count("*").alias("_na")) \
         .withColumnRenamed("doc_id", "_nid")
-    if sizes is not None:
-        sz_cor = sizes.select(col("doc_id").alias("_cid"),
-                              col("n").alias("_nb"))
-    else:
-        # Full counts required (a pruned aggregate would undercount
-        # |B| and inflate jaccard) — the one full-posting pass left
-        # without a maintained sizes store.
-        sz_cor = (full_posting.groupBy("doc_id")
-                  .agg(F.count("*").alias("_nb"))
-                  .withColumnRenamed("doc_id", "_cid"))
+    sz_cor = (posting.groupBy("doc_id")
+              .agg(F.count("*").alias("_nb"))
+              .withColumnRenamed("doc_id", "_cid"))
     jac = col("ic") / (col("_na") + col("_nb") - col("ic"))
     out = (
         inter.join(sz_new, "_nid").join(sz_cor, "_cid")
@@ -599,19 +562,13 @@ def incremental_jaccard_pairs(new_docs: DataFrame, posting: DataFrame,
 
 
 def incremental_dedup_verdict(new_docs: DataFrame, posting: DataFrame,
-                              n: int = 3, tau: float = 0.8,
-                              dfreq: DataFrame | None = None,
-                              sizes: DataFrame | None = None,
-                              prune_mod: int | None = None,
-                              new_post: DataFrame | None = None
+                              n: int = 3, tau: float = 0.8
                               ) -> DataFrame:
     """Per-batch-doc admission verdict: (doc_id, is_dup, dup_of,
     jaccard).  dup_of = the best corpus match (highest Jaccard, ties →
     lowest corpus_doc_id) or NULL for admitted docs — the row an
     ingestion service writes to its admission log."""
-    pairs = incremental_jaccard_pairs(new_docs, posting, n, tau, dfreq,
-                                      sizes=sizes, prune_mod=prune_mod,
-                                      new_post=new_post)
+    pairs = incremental_jaccard_pairs(new_docs, posting, n, tau)
     w = Window.partitionBy("doc_id").orderBy(
         col("jaccard").desc(), col("corpus_doc_id"))
     best = (pairs.withColumn("_r", F.row_number().over(w))

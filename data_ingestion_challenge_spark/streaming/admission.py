@@ -3,11 +3,12 @@ ingestion — the end-to-end loop an LLM-data ingestion service runs.
 
 Per micro-batch of arriving documents:
 
-1. intra-batch dedup — exact (md5, keep min doc_id) then near-dup
-   (ngram_jaccard_pairs on the batch alone; batch-sized work);
-2. corpus screen — survivors run through
-   operators/dedup.incremental_dedup_verdict against the INCREMENTALLY
-   MAINTAINED posting store (never a corpus rescan);
+1. exact dedup inside the batch (md5, keep min doc_id);
+2. near-dup screen — ONE fused candidate+verify pass
+   (``_screen_pairs``) finds batch-vs-batch pairs AND batch-vs-corpus
+   matches against the INCREMENTALLY MAINTAINED posting store (never
+   a corpus rescan; the corpus read prunes to the batch's shingle
+   buckets);
 3. commit — admitted docs land in the transactional corpus table
    (txn.TxnTable) in one atomic commit tagged (app, batch_id): a
    crash-replayed batch is skipped whole (exactly-once).  The default
@@ -15,18 +16,19 @@ Per micro-batch of arriving documents:
    docs/TXN_RUNS_DESIGN.md); reads resolve latest-wins per key and
    the run ladder folds on the ``compact_every`` cadence;
 4. maintenance — the admitted docs' postings land in
-   ``postings_dir/ingest_batch=<id>/`` and the full admission log
-   (every verdict, kept or rejected, with the dup target) in
-   ``log_dir/ingest_batch=<id>/``; both are per-batch OVERWRITES, so
-   a replayed batch rewrites the same files instead of duplicating.
+   ``postings_dir/ingest_batch=<id>/s_bucket=<b>/`` and the full
+   admission log (every verdict, kept or rejected, with the dup
+   target) in ``log_dir/ingest_batch=<id>/``; both are per-batch
+   OVERWRITES, so a replayed batch rewrites the same files instead of
+   duplicating.
 
 Scale notes (100 TB): every stage is batch-sized except the corpus
 screen, which touches the corpus only through the posting store's
-shingle equi-join.  The per-batch posting increments trade the
-bucketed layout for idempotent appends; a deployment compacts them
-into the bucketed table (Engine.materialize_postings /
-sources.files.compact_parquet) on a maintenance cadence, exactly like
-small-file compaction of any streaming sink.
+shingle equi-join.  The store has ONE layout (``s_bucket``-partitioned
+with the modulus pinned in its meta) and ONE maintenance path: the
+sink folds committed per-batch increments IN PLACE on the
+``compact_every`` cadence (compact_store_in_place, a stepped merge),
+exactly like small-file compaction of any streaming sink.
 """
 
 from __future__ import annotations
@@ -40,10 +42,11 @@ from pyspark.sql.functions import col
 
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string"
 
-# Shingle-hash partition fan-out of the posting store: corpus reads in
-# the screen prune to the batch's buckets (see incremental_jaccard_pairs'
-# pruning contract).  At 100 TB you'd raise this (it bounds both the
-# pruning granularity and the per-batch bucket-id collect).
+# Shingle-hash partition fan-out of a FRESH posting store (an existing
+# store keeps the modulus pinned in its meta): corpus reads in the
+# screen prune to the batch's buckets.  At 100 TB you'd raise this
+# (it bounds both the pruning granularity and the per-batch bucket-id
+# collect).
 N_SHINGLE_BUCKETS = 64
 
 _APP = "doc_admission"
@@ -269,8 +272,7 @@ def _resolved_shard(df: DataFrame) -> DataFrame:
 
 def _read_store_resolved(spark: SparkSession, store_dir: str,
                          paths: list[str] | None = None,
-                         sharded: bool = False,
-                         bucketed: bool = False) -> DataFrame:
+                         sharded: bool = False) -> DataFrame:
     """Posting-store read for consumers of shard VALUES (folds, the
     cross-shard sweep): explicit schema including the doc_shard data
     column, SHARD_COL resolved to the effective shard.  doc_shard is
@@ -281,24 +283,21 @@ def _read_store_resolved(spark: SparkSession, store_dir: str,
                      data_schema="doc_id long, s string"
                                  + (", doc_shard string" if sharded
                                     else ""),
-                     sharded=sharded, bucketed=bucketed)
+                     sharded=sharded, bucketed=True)
     return _resolved_shard(df) if sharded else df
 
 
-def _write_postings_layout(df: DataFrame, dst: str, mod: int | None,
-                           n_files: int | None = None,
+def _write_postings_layout(df: DataFrame, dst: str, mod: int,
                            sort: bool = True,
                            shard_col: str | None = None) -> None:
     """The posting store's on-disk layout contract in ONE place —
     bucket key ``pmod(hash(s), mod)``, repartition ON the bucket
     before partitionBy (one file per bucket instead of tasks×mod),
     optional secondary s-sort.  Every posting write (per-batch
-    increments and compacted bases alike) must route through here:
+    increments and compacted runs alike) must route through here:
     two writers disagreeing on the bucket function would silently
     break the screen's PartitionFilters pruning and admit true
-    duplicates.  Flat (legacy) stores: ``n_files`` set → an s-sorted
-    n-file rewrite (compacted base); unset → a plain write (batch
-    increment).
+    duplicates.
 
     ``shard_col`` (screen lever #1, docs/SCREEN_SCALING.md — wired
     into the sink since r16 via document_admission_sink(shard_col=)):
@@ -317,29 +316,13 @@ def _write_postings_layout(df: DataFrame, dst: str, mod: int | None,
     Layout + pruning composition pinned in tests/test_shard_layout
     .py; the sink-level equivalence/crash battery lives in
     tests/test_shard_sink.py."""
-    from pyspark.sql.functions import col
-
     parts = ([shard_col] if shard_col else [])
-    if shard_col and mod is None:
-        raise ValueError(
-            "shard_col requires a bucketed store (mod): the shard "
-            "level exists to compose with s_bucket pruning — a flat "
-            "store has no pruning contract to extend")
-    if mod is not None:
-        w = (df.withColumn("s_bucket", F.pmod(F.hash("s"),
-                                              F.lit(mod)))
-             .repartition(*[col(c) for c in parts + ["s_bucket"]]))
-        if sort:
-            w = w.sortWithinPartitions(*parts, "s_bucket", "s")
-        (w.write.mode("overwrite")
-         .partitionBy(*parts, "s_bucket").parquet(dst))
-    elif n_files:
-        # (shard_col is rejected above for flat stores — no *parts)
-        (df.repartition(n_files, col("s"))
-         .sortWithinPartitions("s")
-         .write.mode("overwrite").parquet(dst))
-    else:
-        df.write.mode("overwrite").parquet(dst)
+    w = (df.withColumn("s_bucket", F.pmod(F.hash("s"), F.lit(mod)))
+         .repartition(*[col(c) for c in parts + ["s_bucket"]]))
+    if sort:
+        w = w.sortWithinPartitions(*parts, "s_bucket", "s")
+    (w.write.mode("overwrite")
+     .partitionBy(*parts, "s_bucket").parquet(dst))
 
 
 def _read_store(spark: SparkSession, store_dir: str,
@@ -512,19 +495,22 @@ def _dir_rows(d: str) -> int:
     return total
 
 
+# Stepped-merge ratio of compact_store_in_place(level="auto"): a run
+# whose size reaches this fraction of the next-larger run merges into
+# it.
+_MAJOR_RATIO = 0.5
+
+
 def compact_store_in_place(spark: SparkSession, postings_dir: str,
                            table, sizes_dir: str | None = None,
-                           n_files: int = 8,
                            level: str = "major",
-                           major_ratio: float = 0.5,
                            bloom_sidecars: bool = True) -> int:
-    """Fold the admission posting store's per-batch increments into a
-    base partition IN PLACE — the maintenance a long-lived ingest
-    stream needs so its corpus reads stop paying one tiny file per
-    historical micro-batch.  Unlike Engine.compact_admission_postings
-    (generation swap: new store beside the old, caller repoints),
-    this rewrites the store the stream is already using, so the sink
-    can invoke it on a cadence with no path changes.
+    """Fold the admission posting store's per-batch increments into
+    compacted runs IN PLACE — the ONE maintenance path of the store,
+    which a long-lived ingest stream needs so its corpus reads stop
+    paying one tiny file per historical micro-batch.  It rewrites the
+    store the stream is already using, so the sink invokes it on its
+    ``compact_every`` cadence with no path changes.
 
     ``level`` is the LSM maintenance policy (at 100 TB the corpus run
     is huge, so rewriting ALL of it every N batches would be
@@ -532,17 +518,15 @@ def compact_store_in_place(spark: SparkSession, postings_dir: str,
     - ``"major"``: fold EVERYTHING committed (all runs + increments)
       into one run ``ingest_batch=-1`` — maximum read efficiency,
       O(corpus) fold cost;
-    - ``"minor"``: fold only the increments + the ``-2`` run into
-      ``ingest_batch=-2``, leaving ``-1`` untouched — the fixed
-      two-tier variant;
     - ``"auto"``: STEPPED MERGE (the Lucene/LSM size-tiered scheme):
       the increments fold into a NEW small run, then any run whose
-      size has reached ``major_ratio`` of the next-larger run merges
-      into it, cascading.  The invariant — every run < major_ratio ×
-      the next — bounds the run count by log_{1/major_ratio}(C/(N·b))
-      and the total maintenance write amplification by
-      O(major_ratio⁻¹ · log(C/(N·b))) per ingested byte: the classic
-      LSM bound, vs Θ(C/(N·b)) for always-major.  Run size = parquet
+      size has reached ``_MAJOR_RATIO`` (r) of the next-larger run
+      merges into it, cascading.  The invariant — every run < r × the
+      next — bounds the run count by log_{1/r}(C/(N·b)) and the total
+      maintenance write amplification by O(r⁻¹ · log(C/(N·b))) per
+      ingested byte: the classic LSM bound, vs Θ(C/(N·b)) for
+      always-major.  A large run is never rewritten by a tick whose
+      fresh increments stay below r × its size.  Run size = parquet
       ROW counts from footers (logical size — file bytes would fold
       the per-file layout overhead into the signal and degenerate the
       ladder at small stores); no counter state.
@@ -585,8 +569,8 @@ def compact_store_in_place(spark: SparkSession, postings_dir: str,
     mean nothing ran: the auto cascade and the sizes backfill execute
     regardless, so a call on a quiesced store still heals a crashed
     mid-cascade run set or missing sizes coverage."""
-    if level not in ("major", "minor", "auto"):
-        raise ValueError(f"level must be major|minor|auto, got {level!r}")
+    if level not in ("major", "auto"):
+        raise ValueError(f"level must be major|auto, got {level!r}")
     recover_compaction(postings_dir, sizes_dir)
     marks = table.txn_marks()
     committed = sorted(t for t in _batch_tags(postings_dir)
@@ -616,12 +600,9 @@ def compact_store_in_place(spark: SparkSession, postings_dir: str,
         # written with real s_shard=<value> dirs and no doc_shard
         # column — the bulk of the store stays partition-prunable.
         post = _read_store_resolved(spark, postings_dir, paths=paths,
-                                    sharded=sharded,
-                                    bucketed=mod is not None) \
-            .select(*cols)
-        # Bucketed: one s-sorted file per shingle bucket.  Flat:
-        # n_files s-sorted files.
-        _write_postings_layout(post, dst, mod, n_files=n_files,
+                                    sharded=sharded).select(*cols)
+        # One s-sorted file per shingle bucket.
+        _write_postings_layout(post, dst, mod,
                                shard_col=SHARD_COL if sharded
                                else None)
         sfolded: list[str] = []
@@ -685,14 +666,6 @@ def compact_store_in_place(spark: SparkSession, postings_dir: str,
         # ≥2 runs to merge into one.
         if n_inc >= 1 or len(committed) >= 2:
             _fold(committed, "-1")
-    elif level == "minor":
-        # The documented bounded-cost tier: ONLY the increments plus
-        # the -2 run — auto-created deeper runs (-3, -4, …) are the
-        # cascade's business, and sweeping them in here would turn
-        # the cheap tier into an O(corpus) job.
-        sub = [t for t in committed if not _is_base(t) or t == "-2"]
-        if n_inc >= 1:
-            _fold(sub, "-2")
     else:
         # Stepped merge, PLANNED then executed: the ladder's fixpoint
         # is a pure function of the run-size map (fold row counts are
@@ -719,15 +692,15 @@ def compact_store_in_place(spark: SparkSession, postings_dir: str,
                 for t in incs)
             groups[nxt] = list(incs)
         # Simulate until the FULL invariant holds — every run <
-        # major_ratio × the next larger, checked across ALL adjacent
+        # _MAJOR_RATIO × the next larger, checked across ALL adjacent
         # pairs (only checking the smallest pair would let a
         # violating middle pair accrete runs forever).  Each byte
         # climbs a geometric ladder, so amortized maintenance I/O
-        # per ingested byte is O(major_ratio⁻¹ · log(corpus/fold)).
+        # per ingested byte is O(_MAJOR_RATIO⁻¹ · log(corpus/fold)).
         while len(runs) >= 2:
             order = sorted(runs, key=lambda t: (runs[t], int(t)))
             for a, b in zip(order, order[1:]):
-                if runs[a] >= major_ratio * runs[b]:
+                if runs[a] >= _MAJOR_RATIO * runs[b]:
                     groups[b] = groups.pop(a) + groups[b]
                     runs[b] = runs.pop(a) + runs[b]
                     break
@@ -791,44 +764,39 @@ def _batch_tags(d: str) -> set[str]:
             if e.name.startswith("ingest_batch=")}
 
 
-def store_bucket_mod(postings_dir: str) -> int | None:
+def store_bucket_mod(postings_dir: str) -> int:
     """The shingle-bucket modulus a posting store was WRITTEN with —
     persisted in `_admission_meta.json` on the store's first write
     (underscore prefix: invisible to Spark's file listing).  The
     modulus is a property of the stored s_bucket values: pruning with
     a different one silently hides corpus shingles (true dups would
     be admitted), so it must never be re-derived from the current
-    constant.  Returns None for a flat (pre-bucketing / legacy)
-    store; a meta-less dir that already has batch partitions is
-    treated as flat and stamped so — UNLESS those partitions contain
-    s_bucket= subdirs, which proves the store was written bucketed
-    and its meta was lost (e.g. deleted by hand): stamping THAT flat
-    would make later flat per-batch writes mix partition depths and
-    break Spark partition discovery, so it raises instead."""
+    constant.  A store without a meta is stamped with
+    N_SHINGLE_BUCKETS only while it holds no ``ingest_batch=``
+    partition: a meta-less store that already has partitions (its
+    meta lost, or a pre-bucketing flat store) raises, as does a meta
+    that pins no integer modulus — the modulus is unrecoverable, and
+    guessing one either mis-prunes or mixes partition depths."""
     meta = os.path.join(postings_dir, _META)
     try:
         with open(meta) as fh:
-            return json.load(fh)["s_bucket_mod"]
-    except (FileNotFoundError, KeyError, ValueError):
-        pass
-    tags = _batch_tags(postings_dir)
-    for tag in tags:
-        batch_dir = os.path.join(postings_dir, f"ingest_batch={tag}")
-        try:
-            # s_shard= implies bucketed too (the shard level only
-            # exists above s_bucket) — both prove a lost meta.
-            bucketed = any(e.name.startswith(("s_bucket=", "s_shard="))
-                           for e in os.scandir(batch_dir))
-        except OSError:
-            continue
-        if bucketed:
+            stored = json.load(fh)
+    except (FileNotFoundError, ValueError):
+        stored = {}
+    if "s_bucket_mod" in stored:
+        if not isinstance(stored["s_bucket_mod"], int):
             raise ValueError(
-                f"{postings_dir}: store has s_bucket= partitions but "
-                f"no {_META} — the bucket modulus is unrecoverable "
-                f"(pruning with a guessed one silently admits "
-                f"duplicates).  Restore the meta file or recompact "
-                f"from a store that has one.")
-    mod = None if tags else N_SHINGLE_BUCKETS
+                f"{postings_dir}: {_META} pins s_bucket_mod="
+                f"{stored['s_bucket_mod']!r} — only s_bucket-partitioned "
+                f"stores are supported; re-ingest into a fresh store.")
+        return stored["s_bucket_mod"]
+    if _batch_tags(postings_dir):
+        raise ValueError(
+            f"{postings_dir}: store has ingest_batch= partitions but "
+            f"no {_META} — the s_bucket modulus is unrecoverable "
+            f"(pruning with a guessed one silently admits "
+            f"duplicates).  Restore the meta file or re-ingest into "
+            f"a fresh store.")
     os.makedirs(postings_dir, exist_ok=True)
     # Stamp under the SAME lock _resolve_shard pins shard_col with,
     # and MERGE-update: an unlocked os.replace here raced a concurrent
@@ -847,7 +815,7 @@ def store_bucket_mod(postings_dir: str) -> int | None:
         except (OSError, ValueError):
             cur = {}
         if "s_bucket_mod" not in cur:
-            cur["s_bucket_mod"] = mod
+            cur["s_bucket_mod"] = N_SHINGLE_BUCKETS
             tmp = meta + ".tmp"
             with open(tmp, "w") as fh:
                 json.dump(cur, fh)
@@ -891,9 +859,7 @@ def _resolve_shard(postings_dir: str,
     refuses a later sharded sink; a conflicting column name raises;
     sharding an EXISTING unsharded store raises (its runs lack the
     s_shard level — mixed partition depths break Spark's discovery;
-    re-ingest or rebuild into a fresh store instead); a flat
-    (mod-less) store cannot shard (the level exists to compose with
-    s_bucket pruning).
+    re-ingest or rebuild into a fresh store instead).
 
     Pinning runs under the generalized lease lock (pid-liveness
     staleness, serialized steal — _acquire_admission_lease with the
@@ -926,14 +892,10 @@ def _resolve_shard(postings_dir: str,
             raise _shard_conflict(postings_dir, stored, shard_col)
         return stored
 
-    mod = store_bucket_mod(postings_dir)  # stamps meta if absent
+    store_bucket_mod(postings_dir)  # stamps meta if absent
     stored = _pinned()
     if stored is not _UNSET:
         return _check(stored)
-    if shard_col is not None and mod is None:
-        raise ValueError(
-            "shard_col requires a bucketed store (mod): the shard "
-            "level exists to compose with s_bucket pruning")
     # Legacy/unpinned meta: a store that already has runs is
     # definitionally unsharded (a meta-less sharded store raises in
     # store_bucket_mod) — pinning records reality; a fresh store
@@ -1169,7 +1131,8 @@ def document_admission_sink(spark: SparkSession, table_path: str,
     transactional corpus TxnTable (created empty if absent).
 
     Posting increments are partitioned by ``s_bucket``
-    (pmod(hash(s), N_SHINGLE_BUCKETS)) so the screen's corpus reads
+    (pmod(hash(s), mod) with the modulus pinned in the store's meta —
+    N_SHINGLE_BUCKETS for a fresh store) so the screen's corpus reads
     prune to the batch's shingle buckets.  Pass ``sizes_dir`` to
     also maintain the per-doc shingle-count store — with it, NO stage
     of the screen reads the full posting store (the sizes fallback is
@@ -1341,10 +1304,9 @@ def document_admission_sink(spark: SparkSession, table_path: str,
             _postings,
         )
 
-        # The store's layout (bucketed with which modulus, or flat) is
-        # read from its persisted meta, NOT the current constant — a
-        # raised N_SHINGLE_BUCKETS or a legacy flat store must neither
-        # mis-prune nor mix partition depths.
+        # The store's bucket modulus is read from its persisted meta,
+        # NOT the current constant — a raised N_SHINGLE_BUCKETS must
+        # never mis-prune an existing store.
         mod = store_bucket_mod(postings_dir)
         # Phase labels (guide §1.5): thread-local, so the threaded
         # maintenance writes label their own jobs below; purely
@@ -1434,9 +1396,8 @@ def document_admission_sink(spark: SparkSession, table_path: str,
                                               if shard_src is not None
                                               else ""),
                                sharded=shard_src is not None,
-                               bucketed=mod is not None)
+                               bucketed=True)
                    .where(col("ingest_batch") != F.lit(tag)))
-            pruned = mod is not None and "s_bucket" in raw.columns
             # Bloom-sidecar skip (screen lever #2): a compacted run
             # with a VALID sidecar gets a DROP predicate for the
             # (run, bucket) partitions whose blooms prove no batch
@@ -1480,26 +1441,17 @@ def document_admission_sink(spark: SparkSession, table_path: str,
                                          F.hash("s").alias("h2"))
                          .distinct().toPandas())
                 h1u, h2u = _as_u64(hrows["h1"]), _as_u64(hrows["h2"])
-                if pruned:
-                    h2i = np.asarray(hrows["h2"], dtype=np.int64)
-                    bucket_of = (h2i % mod + mod) % mod
-                    buckets = sorted(int(b)
-                                     for b in np.unique(bucket_of))
-                else:
-                    bucket_of = np.full(len(h1u), -1, dtype=np.int64)
+                h2i = np.asarray(hrows["h2"], dtype=np.int64)
+                bucket_of = (h2i % mod + mod) % mod
+                buckets = sorted(int(b) for b in np.unique(bucket_of))
                 for t, blooms in scs.items():
                     hb = hit_buckets(blooms, h1u, h2u, bucket_of)
-                    if pruned:
-                        # drop the run everywhere EXCEPT its hit
-                        # buckets (a bucket absent from the sidecar
-                        # held no shingles at build time → droppable)
-                        miss = ((ib == t)
-                                & ~col("s_bucket").isin(sorted(hb))
-                                if hb else (ib == t))
-                    elif hb:
-                        continue  # flat run with a possible hit
-                    else:
-                        miss = ib == t
+                    # drop the run everywhere EXCEPT its hit buckets
+                    # (a bucket absent from the sidecar held no
+                    # shingles at build time → droppable)
+                    miss = ((ib == t)
+                            & ~col("s_bucket").isin(sorted(hb))
+                            if hb else (ib == t))
                     drop_pred = (miss if drop_pred is None
                                  else drop_pred | miss)
             filtered = raw
@@ -1533,18 +1485,17 @@ def document_admission_sink(spark: SparkSession, table_path: str,
                        | F.coalesce(col(DOC_SHARD),
                                     F.lit(GLOBAL_SHARD))
                        .isin(batch_shards)))
-            if pruned:
-                # Shingle-bucket pruning (PartitionFilters): all
-                # corpus occurrences of any batch shingle live in the
-                # batch's buckets; other shingles can never join.
-                # Bounded collect: ≤ mod ids (derived locally from
-                # the already-collected hashes when sidecars ran —
-                # s_bucket IS pmod(hash(s), mod)).
-                if buckets is None:
-                    buckets = [r[0] for r in new_post.select(
-                        F.pmod(F.hash("s"), F.lit(mod)).alias("b"))
-                        .distinct().collect()]
-                filtered = filtered.where(col("s_bucket").isin(buckets))
+            # Shingle-bucket pruning (PartitionFilters): all corpus
+            # occurrences of any batch shingle live in the batch's
+            # buckets; other shingles can never join.  Bounded
+            # collect: ≤ mod ids (derived locally from the
+            # already-collected hashes when sidecars ran — s_bucket IS
+            # pmod(hash(s), mod)).
+            if buckets is None:
+                buckets = [r[0] for r in new_post.select(
+                    F.pmod(F.hash("s"), F.lit(mod)).alias("b"))
+                    .distinct().collect()]
+            filtered = filtered.where(col("s_bucket").isin(buckets))
             if drop_pred is not None:
                 filtered = filtered.where(~drop_pred)
             corpus_posting = filtered.select("doc_id", "s")
@@ -1916,9 +1867,7 @@ def sweep_cross_shard_dups(spark: SparkSession, postings_dir: str,
         # RESOLVED read (r18): a doc whose postings still sit in a
         # mixed increment contributes its doc_shard value to the
         # shard set, identical to the pre-r18 dir value.
-        raw = _read_store_resolved(spark, postings_dir, sharded=True,
-                                   bucketed=store_bucket_mod(
-                                       postings_dir) is not None)
+        raw = _read_store_resolved(spark, postings_dir, sharded=True)
         if table_path is not None:
             from data_ingestion_challenge_spark.txn import TxnTable
             committed = (TxnTable(spark, table_path, key="doc_id")

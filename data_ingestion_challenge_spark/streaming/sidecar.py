@@ -241,9 +241,9 @@ def sidecar_path(postings_dir: str, tag: str) -> str:
 
 def _bucket_row_counts(run_dir: str) -> dict[int, int]:
     """Per-bucket ROW counts from parquet footers only (no Spark
-    job): {bucket: rows} keyed by the ``s_bucket=`` partition dirs,
-    or {-1: total} for a flat run.  The over-cap routing's signal —
-    rows upper-bound distinct keys, so the cap stays conservative."""
+    job): {bucket: rows} keyed by the ``s_bucket=`` partition dirs.
+    The over-cap routing's signal — rows upper-bound distinct keys,
+    so the cap stays conservative."""
     import pyarrow.parquet as pq
 
     def _dir_rows(d: str) -> int:
@@ -259,7 +259,6 @@ def _bucket_row_counts(run_dir: str) -> dict[int, int]:
         return total
 
     out: dict[int, int] = {}
-    bucketed = False
     # Sharded layout (screen lever #1) nests s_shard= above s_bucket=;
     # blooms stay keyed by BUCKET across shards (a bucket with no
     # batch shingle anywhere in the run is droppable in every shard),
@@ -272,11 +271,8 @@ def _bucket_row_counts(run_dir: str) -> dict[int, int]:
     for root in roots:
         for e in os.scandir(root):
             if e.is_dir() and e.name.startswith("s_bucket="):
-                bucketed = True
                 b = int(e.name.split("=", 1)[1])
                 out[b] = out.get(b, 0) + _dir_rows(e.path)
-    if not bucketed:
-        out[-1] = _dir_rows(run_dir)
     return out
 
 
@@ -308,21 +304,16 @@ def build_run_sidecar(spark, postings_dir: str, tag: str) -> bool:
     # partition-type inference is the same surface the r17 screen fix
     # eliminated — a numeric-like s_shard would infer int here and
     # become a trap the day SHARD_COL is consumed in the build.  The
-    # layout is read off the dirs (the same walk the row-count helper
-    # does), not the caller's arguments.
+    # shard level is read off the dirs (the same walk the row-count
+    # helper does), not the caller's arguments.
     from data_ingestion_challenge_spark.streaming.admission import (
         _read_store,
     )
-    shard_dirs = [e for e in os.scandir(run_dir)
-                  if e.is_dir() and e.name.startswith("s_shard=")]
-    probe = shard_dirs[0].path if shard_dirs else run_dir
-    bucketed = any(e.is_dir() and e.name.startswith("s_bucket=")
-                   for e in os.scandir(probe))
+    sharded = any(e.is_dir() and e.name.startswith("s_shard=")
+                  for e in os.scandir(run_dir))
     df = _read_store(spark, postings_dir, paths=[run_dir],
-                     sharded=bool(shard_dirs), bucketed=bucketed)
-    bucket = (F.col("s_bucket").cast("long") if bucketed
-              else F.lit(-1).cast("long"))
-    hashed = (df.select(bucket.alias("b"),
+                     sharded=sharded, bucketed=True)
+    hashed = (df.select(F.col("s_bucket").cast("long").alias("b"),
                         F.xxhash64("s").alias("h1"),
                         F.hash("s").alias("h2"))
               .distinct())
@@ -494,9 +485,9 @@ def hit_buckets(blooms: dict, h1u: np.ndarray, h2u: np.ndarray,
                 bucket_of: np.ndarray) -> set[int]:
     """The (store) buckets of this run that at least one batch
     shingle may live in.  ``bucket_of`` assigns each batch shingle to
-    its store bucket (pmod(hash(s), store mod); -1 everywhere for a
-    flat run).  A bucket absent from ``blooms`` held NO shingles when
-    the sidecar was built → never hit.  An over-cap bucket (bits
+    its store bucket (pmod(hash(s), store mod)).  A bucket absent
+    from ``blooms`` held NO shingles when the sidecar was built →
+    never hit.  An over-cap bucket (bits
     None) is always hit."""
     out: set[int] = set()
     for b, (m, bits) in blooms.items():

@@ -132,59 +132,12 @@ def test_engine_ingest_documents(spark, dirs):
     assert {r.doc_id for r in table.read().collect()} == {7}
 
 
-def test_compacted_postings_generation_swap(spark, dirs, tmp_path):
-    """Admission continues seamlessly on a compacted posting store:
-    screen results against the base partition equal those against the
-    raw increments; the compacted store rejects a dup of a doc
-    admitted before compaction."""
-    from data_ingestion_challenge_spark.api import Engine
-    from tests.conftest import SF_DIR
-
-    admit, table = document_admission_sink(
-        spark, dirs["table"], dirs["postings"], dirs["log"])
-    admit(spark.createDataFrame(
-        [(1, LONG_A, "en", "web"), (2, NOVEL, "en", "web")],
-        DOCS_SCHEMA), 0)
-    eng = Engine(SF_DIR, spark=spark)
-    gen2 = str(tmp_path / "postings_gen2")
-    # Committed filtering is the DEFAULT: an unfiltered fold needs an
-    # explicit quiesced-store opt-in.
-    with pytest.raises(ValueError, match="allow_uncommitted"):
-        eng.compact_admission_postings(dirs["postings"], gen2)
-    eng.compact_admission_postings(dirs["postings"], gen2,
-                                   table_path=dirs["table"])
-    assert os.path.isdir(os.path.join(gen2, "ingest_batch=-1"))
-    # The meta (bucket modulus) landed in the new generation too.
-    from data_ingestion_challenge_spark.streaming.admission import (
-        _META, N_SHINGLE_BUCKETS, store_bucket_mod,
-    )
-    assert os.path.exists(os.path.join(gen2, _META))
-    assert store_bucket_mod(gen2) == N_SHINGLE_BUCKETS
-
-    admit2, table2 = document_admission_sink(
-        spark, dirs["table"], gen2, dirs["log"])
-    admit2(spark.createDataFrame(
-        [(9, LONG_A, "en", "web"),  # dup of pre-compaction doc 1
-         (10, "genuinely new words for the post compaction batch "
-              "to admit cleanly without any match", "en", "web")],
-        DOCS_SCHEMA), 1)
-    assert {r.doc_id for r in table2.read().collect()} == {1, 2, 10}
-    log = {r.doc_id: r for r in
-           spark.read.option("basePath", dirs["log"])
-           .parquet(os.path.join(dirs["log"], "ingest_batch=1"))
-           .collect()}
-    assert log[9].kept is False and log[9].dup_of == 1
-
-
 def test_sizes_store_and_bucket_pruning(spark, dirs, tmp_path):
     """With a sizes store maintained, screen results are identical,
     and the corpus-posting scan actually prunes to the batch's
     shingle buckets (fewer input files than the full store)."""
     from pyspark.sql import functions as F
 
-    from data_ingestion_challenge_spark.operators.dedup import (
-        incremental_dedup_verdict,
-    )
     from data_ingestion_challenge_spark.streaming.admission import (
         N_SHINGLE_BUCKETS,
     )
@@ -233,15 +186,6 @@ def test_sizes_store_and_bucket_pruning(spark, dirs, tmp_path):
             ._jdf.queryExecution().executedPlan().toString())
     assert re.search(r"PartitionFilters: \[[^\]]*s_bucket", plan), plan
 
-    # And the pruned verdict equals the unpruned one.
-    corpus = raw.select("doc_id", "s", "s_bucket")
-    v_pruned = {tuple(r) for r in incremental_dedup_verdict(
-        batch, corpus, prune_mod=N_SHINGLE_BUCKETS).collect()}
-    v_full = {tuple(r) for r in incremental_dedup_verdict(
-        batch, corpus.drop("s_bucket")).collect()}
-    assert v_pruned == v_full
-    assert next(iter(v_pruned))[1] is True  # 99 is a dup of 1
-
 
 def test_fresh_checkpoint_restart_does_not_lose_docs(spark, dirs,
                                                      tmp_path):
@@ -274,34 +218,6 @@ def test_fresh_checkpoint_restart_does_not_lose_docs(spark, dirs,
     assert {1, 2, 30} <= post_docs
 
 
-def test_legacy_flat_store_keeps_working(spark, dirs):
-    """A pre-bucketing posting store (flat ingest_batch=N dirs, no
-    meta) must keep working: new batches write FLAT too (mixed
-    partition depths would break discovery), the screen skips
-    pruning, and dup rejection is unchanged."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from data_ingestion_challenge_spark.operators.dedup import _postings
-
-    # Hand-build the legacy layout for doc 1.
-    legacy = spark.createDataFrame([(1, LONG_A, "en", "web")],
-                                   DOCS_SCHEMA)
-    p = _postings(legacy, 3)
-    p.write.mode("overwrite").parquet(
-        os.path.join(dirs["postings"], "ingest_batch=0"))
-    p.unpersist()
-
-    admit, table = document_admission_sink(
-        spark, dirs["table"], dirs["postings"], dirs["log"])
-    admit(spark.createDataFrame(
-        [(9, LONG_A, "en", "web"), (10, NOVEL, "en", "web")],
-        DOCS_SCHEMA), 1)
-    assert {r.doc_id for r in table.read().collect()} == {10}
-    # New increment is flat as well: no s_bucket dirs anywhere.
-    for root, d, f in os.walk(dirs["postings"]):
-        assert not any(x.startswith("s_bucket=") for x in d)
-
-
 def test_partial_sizes_store_falls_back(spark, dirs, tmp_path):
     """A sizes store that does not cover every posting increment is
     IGNORED (full-aggregation fallback): using it would inner-join
@@ -324,120 +240,13 @@ def test_partial_sizes_store_falls_back(spark, dirs, tmp_path):
     assert {r.doc_id for r in table2.read().collect()} == {1}
 
 
-def test_compaction_excludes_uncommitted_batch(spark, dirs, tmp_path):
-    """Compacting with table_path must NOT fold a crashed batch's
-    postings (written, never committed) into the base: the crashed
-    batch's replay would self-match its own survivors at jaccard 1.0
-    and drop them forever."""
-    from data_ingestion_challenge_spark.api import Engine
-    from data_ingestion_challenge_spark.operators.dedup import _postings
-    from tests.conftest import SF_DIR
-
-    admit, table = document_admission_sink(
-        spark, dirs["table"], dirs["postings"], dirs["log"])
-    admit(spark.createDataFrame([(1, NOVEL, "en", "web")],
-                                DOCS_SCHEMA), 0)
-    # Simulate the crash window for batch 1: postings written
-    # (bucketed, matching the store), commit never happened.
-    from pyspark.sql import functions as F
-
-    from data_ingestion_challenge_spark.streaming.admission import (
-        store_bucket_mod,
-    )
-    mod = store_bucket_mod(dirs["postings"])
-    crashed = spark.createDataFrame([(5, LONG_A, "en", "web")],
-                                    DOCS_SCHEMA)
-    p = _postings(crashed, 3)
-    (p.withColumn("s_bucket", F.pmod(F.hash("s"), F.lit(mod)))
-     .write.mode("overwrite").partitionBy("s_bucket")
-     .parquet(os.path.join(dirs["postings"], "ingest_batch=1")))
-    p.unpersist()
-
-    eng = Engine(SF_DIR, spark=spark)
-    gen2 = str(tmp_path / "gen2")
-    eng.compact_admission_postings(dirs["postings"], gen2,
-                                   table_path=dirs["table"])
-    # Base holds only committed doc 1's postings.
-    docs = {r.doc_id for r in
-            spark.read.option("basePath", gen2).parquet(gen2)
-            .select("doc_id").distinct().collect()}
-    assert docs == {1}
-    # Replay of crashed batch 1 against the compacted store admits.
-    admit2, table2 = document_admission_sink(
-        spark, dirs["table"], gen2, dirs["log"])
-    admit2(crashed, 1)
-    assert {r.doc_id for r in table2.read().collect()} == {1, 5}
-
-
-def test_generation_compaction_heals_crashed_in_place_swap(
-        spark, dirs, tmp_path, monkeypatch):
-    """A crash MID in-place swap (manifest published, folded
-    increments already deleted, new base still staged invisibly
-    under _compacting/) must be healed by the GENERATION-swap
-    compactor before it reads: without recover_compaction first, the
-    new generation silently bakes the missing postings out of the
-    store and the screen admits true duplicates."""
-    from data_ingestion_challenge_spark.api import Engine
-    from data_ingestion_challenge_spark.streaming import admission as A
-    from tests.conftest import SF_DIR
-
-    sizes = str(tmp_path / "sz")
-    _drop(os.path.join(dirs["watch"], "d1.jsonl"),
-          [_doc(1, LONG_A), _doc(2, NOVEL)])
-    table = run_document_admission(
-        spark, dirs["watch"], dirs["table"], dirs["postings"],
-        dirs["log"], dirs["ckpt"], sizes_dir=sizes)
-    _drop(os.path.join(dirs["watch"], "d2.jsonl"),
-          [_doc(3, FRESH_3)])
-    run_document_admission(
-        spark, dirs["watch"], dirs["table"], dirs["postings"],
-        dirs["log"], dirs["ckpt"], sizes_dir=sizes)
-
-    # Crash INSIDE the swap: folded tags deleted, base not renamed —
-    # the exact window where a naive reader sees a store missing all
-    # folded postings.
-    import shutil as sh
-
-    def _half_swap(store_dir, tags, base_tag):
-        for t in tags:
-            d = os.path.join(store_dir, f"ingest_batch={t}")
-            if os.path.isdir(d):
-                sh.rmtree(d)
-        raise RuntimeError("simulated crash mid-swap")
-
-    monkeypatch.setattr(A, "_finish_swap", _half_swap)
-    with pytest.raises(RuntimeError, match="simulated"):
-        A.compact_store_in_place(spark, dirs["postings"], table,
-                                 sizes_dir=sizes)
-    monkeypatch.undo()
-    assert os.path.exists(os.path.join(dirs["postings"],
-                                       A._COMPACT_MANIFEST))
-    # The generation compactor must heal first, then fold ALL docs.
-    eng = Engine(SF_DIR, spark=spark)
-    gen2 = str(tmp_path / "gen2")
-    sizes2 = str(tmp_path / "sz2")
-    eng.compact_admission_postings(
-        dirs["postings"], gen2, table_path=dirs["table"],
-        sizes_dir=sizes, sizes_out=sizes2)
-    assert not os.path.exists(os.path.join(dirs["postings"],
-                                           A._COMPACT_MANIFEST))
-    docs = {r.doc_id for r in
-            spark.read.option("basePath", gen2).parquet(gen2)
-            .select("doc_id").distinct().collect()}
-    assert docs == {1, 2, 3}
-    # A near-dup of a folded doc still rejects against gen2.
-    admit2, table2 = document_admission_sink(
-        spark, dirs["table"], gen2, dirs["log"], sizes_dir=sizes2)
-    admit2(spark.createDataFrame([(20, LONG_A_NEAR, "en", "web")],
-                                 DOCS_SCHEMA), 7)
-    assert {r.doc_id for r in table2.read().collect()} == {1, 2, 3}
-
-
-def test_meta_less_bucketed_store_refused(spark, dirs):
-    """A store whose partitions carry s_bucket= subdirs but whose
-    meta file is gone must RAISE, not be stamped flat: the modulus is
-    unrecoverable, and a flat stamp would mix partition depths on the
-    next batch write."""
+def test_meta_less_bucketed_store_refused(spark, tmp_path):
+    """A store that already holds partitions but whose meta file is
+    gone must RAISE, not be stamped: the modulus is unrecoverable.
+    Three inputs — partitions carrying s_bucket= subdirs (meta lost),
+    flat pre-bucketing ingest_batch= partitions (the retired legacy
+    layout, which used to be stamped flat), and a flat store whose
+    meta pins no modulus."""
     from pyspark.sql import functions as F
 
     from data_ingestion_challenge_spark.operators.dedup import _postings
@@ -448,14 +257,30 @@ def test_meta_less_bucketed_store_refused(spark, dirs):
     docs = spark.createDataFrame([(1, LONG_A, "en", "web")],
                                  DOCS_SCHEMA)
     p = _postings(docs, 3)
-    (p.withColumn("s_bucket",
-                  F.pmod(F.hash("s"), F.lit(N_SHINGLE_BUCKETS)))
-     .write.mode("overwrite").partitionBy("s_bucket")
-     .parquet(os.path.join(dirs["postings"], "ingest_batch=0")))
-    p.unpersist()
-    assert not os.path.exists(os.path.join(dirs["postings"], _META))
-    with pytest.raises(ValueError, match="s_bucket"):
-        store_bucket_mod(dirs["postings"])
+    try:
+        for layout in ("bucketed", "flat", "flat_stamped"):
+            store = str(tmp_path / layout)
+            run = os.path.join(store, "ingest_batch=0")
+            if layout == "bucketed":
+                (p.withColumn("s_bucket",
+                              F.pmod(F.hash("s"),
+                                     F.lit(N_SHINGLE_BUCKETS)))
+                 .write.mode("overwrite").partitionBy("s_bucket")
+                 .parquet(run))
+            else:
+                p.write.mode("overwrite").parquet(run)
+            if layout == "flat_stamped":
+                with open(os.path.join(store, _META), "w") as fh:
+                    json.dump({"s_bucket_mod": None}, fh)
+            else:
+                assert not os.path.exists(os.path.join(store, _META))
+            with pytest.raises(ValueError, match="s_bucket"):
+                store_bucket_mod(store)
+            # nothing was stamped over the refused store
+            if layout != "flat_stamped":
+                assert not os.path.exists(os.path.join(store, _META))
+    finally:
+        p.unpersist()
 
 
 def test_store_modulus_pinned_against_constant_change(spark, dirs,
@@ -576,8 +401,7 @@ def test_fused_screen_equals_separate_pipelines(spark):
                       for r in ngram_jaccard_pairs(
                           batch, n=3, tau=tau, posting=bp).collect()}
         want_corpus = {tuple(r) for r in incremental_jaccard_pairs(
-            batch, cp.select("doc_id", "s"), n=3, tau=tau,
-            sizes=cs, new_post=bp).collect()}
+            batch, cp.select("doc_id", "s"), n=3, tau=tau).collect()}
     finally:
         for h in caches:
             h.unpersist()
@@ -681,11 +505,11 @@ def test_replay_with_missing_sizes_store_not_wedged(spark, dirs,
 
     from data_ingestion_challenge_spark.operators.dedup import _postings
     from data_ingestion_challenge_spark.streaming.admission import (
-        N_SHINGLE_BUCKETS, store_bucket_mod,
+        store_bucket_mod,
     )
 
     sizes_dir = str(tmp_path / "sizes_never_created")
-    mod = store_bucket_mod(dirs["postings"]) or N_SHINGLE_BUCKETS
+    mod = store_bucket_mod(dirs["postings"])
     crashed = spark.createDataFrame([(5, LONG_A, "en", "web")],
                                     DOCS_SCHEMA)
     p = _postings(crashed, 3)
@@ -898,12 +722,12 @@ def test_compaction_equivalence_with_uncompacted(spark, dirs,
     assert len(_batch_tags(d2["postings"])) == 2
 
 
-def test_tiered_compaction_minor_then_major(spark, dirs, tmp_path):
-    """LSM tiering: a minor fold collapses increments into the -2
-    minor base WITHOUT touching a byte of the major base (that is the
-    whole point — O(recent) maintenance, not O(corpus)); a major fold
-    then merges both bases; screens stay correct across every tier
-    state."""
+def test_tiered_compaction_auto_then_major(spark, dirs, tmp_path):
+    """LSM tiering: an auto fold collapses fresh increments smaller
+    than _MAJOR_RATIO × the -1 run into a new -2 run WITHOUT touching
+    a byte of the major base (that is the whole point — O(recent)
+    maintenance, not O(corpus)); a major fold then merges both runs;
+    screens stay correct across every tier state."""
     from data_ingestion_challenge_spark.streaming.admission import (
         _batch_tags, compact_store_in_place, document_admission_sink,
     )
@@ -930,15 +754,15 @@ def test_tiered_compaction_minor_then_major(spark, dirs, tmp_path):
         [(3, FRESH_3, "en", "web")], DOCS_SCHEMA), 1)
     assert compact_store_in_place(spark, dirs["postings"], table,
                                   sizes_dir=sizes,
-                                  level="minor") == 1
+                                  level="auto") == 1
     assert _batch_tags(dirs["postings"]) == {"-1", "-2"}
     assert _batch_tags(sizes) == {"-1", "-2"}
     assert _inventory(base) == before  # major base untouched
     # Screen across the tiered store: dups of docs in EITHER base
     # reject, novel admits.
     admit(spark.createDataFrame(
-        [(10, LONG_A, "en", "web"),    # dup of major-base doc 1
-         (11, FRESH_3, "en", "web"),   # dup of minor-base doc 3
+        [(10, LONG_A, "en", "web"),    # dup of -1 run doc 1
+         (11, FRESH_3, "en", "web"),   # dup of -2 run doc 3
          (12, FRESH_4, "en", "web")], DOCS_SCHEMA), 2)
     assert {r.doc_id for r in table.read().collect()} == {1, 2, 3, 12}
     # Major fold merges both bases + the new increment.
@@ -970,7 +794,7 @@ def test_swap_crash_point_enumeration(tmp_path):
 
     def _mk(base_tag="-2"):
         """Store with a major base, two folded increments, one orphan,
-        plus the staged minor base and a published manifest."""
+        plus the staged -2 run and a published manifest."""
         store = tmp_path / f"store_{_mk.n}"
         _mk.n += 1
         for tag, payload in [("-1", "major"), ("a-1", "inc1"),
@@ -1028,7 +852,7 @@ def test_swap_crash_point_enumeration(tmp_path):
     # Major-fold variant: old bases deleted, promoted base replaces
     # the major; the orphan still survives.
     store = tmp_path / "store_major"
-    for tag, payload in [("-1", "major"), ("-2", "minor"),
+    for tag, payload in [("-1", "major"), ("-2", "small"),
                          ("b-1", "inc"), ("orph-9", "orphan")]:
         d = store / f"ingest_batch={tag}"
         d.mkdir(parents=True)
@@ -1121,7 +945,7 @@ def test_swap_crash_points_with_sizes_store(tmp_path):
 def test_stepped_merge_run_invariant(spark, dirs, tmp_path):
     """Stepped merge keeps the store as a SMALL set of compacted runs
     as batches keep arriving (the geometric invariant: every run <
-    major_ratio × the next-larger), instead of one increment per
+    _MAJOR_RATIO × the next-larger), instead of one increment per
     batch or one O(corpus) rewrite per batch — and the screen stays
     correct over the multi-run store."""
     from data_ingestion_challenge_spark.streaming.admission import (
@@ -1191,21 +1015,23 @@ def test_cascade_merges_violating_middle_pair(spark, dirs):
     smallest pair is compliant — and the cascade runs even with ZERO
     new increments (healing a crashed mid-cascade run set)."""
     from data_ingestion_challenge_spark.streaming.admission import (
-        _batch_tags, compact_store_in_place,
+        _batch_tags, _write_postings_layout, compact_store_in_place,
+        store_bucket_mod,
     )
     from data_ingestion_challenge_spark.txn import TxnTable
 
     table = TxnTable.create(
         spark, dirs["table"],
         spark.createDataFrame([], DOCS_SCHEMA), key="doc_id")
+    mod = store_bucket_mod(dirs["postings"])  # stamp before any run
 
     def _run(tag, lo, n):
-        (spark.createDataFrame(
-            [(i, f"shingle-{i}") for i in range(lo, lo + n)],
-            "doc_id long, s string")
-         .coalesce(1).write.mode("overwrite")
-         .parquet(os.path.join(dirs["postings"],
-                               f"ingest_batch={tag}")))
+        _write_postings_layout(
+            spark.createDataFrame(
+                [(i, f"shingle-{i}") for i in range(lo, lo + n)],
+                "doc_id long, s string"),
+            os.path.join(dirs["postings"], f"ingest_batch={tag}"),
+            mod, sort=False)
 
     _run("-2", 0, 8000)        # big
     _run("-3", 10000, 5000)    # mid: ≥ 0.5 × big → violates
@@ -1253,6 +1079,9 @@ def test_posting_store_stats(spark, dirs):
     histogram whose posting mass equals the store row count, and a
     bucket-balance frame summing to the same total."""
     from data_ingestion_challenge_spark.api import Engine
+    from data_ingestion_challenge_spark.streaming.admission import (
+        N_SHINGLE_BUCKETS,
+    )
     from tests.conftest import SF_DIR
 
     _drop(os.path.join(dirs["watch"], "d1.jsonl"),
@@ -1278,9 +1107,9 @@ def test_posting_store_stats(spark, dirs):
     hist = stats["df_histogram"].collect()
     assert sum(r.total_postings for r in hist) == total
     assert all(r.df_bucket >= 0 for r in hist)
-    if stats["mod"] is not None:
-        bal = stats["bucket_balance"].collect()
-        assert sum(r.n_postings for r in bal) == total
+    assert stats["mod"] == N_SHINGLE_BUCKETS
+    bal = stats["bucket_balance"].collect()
+    assert sum(r.n_postings for r in bal) == total
     # committed is None without a table_path (flag unknowable)
     stats2 = eng.posting_store_stats(dirs["postings"])
     assert all(r["committed"] is None for r in stats2["runs"])

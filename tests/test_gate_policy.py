@@ -29,6 +29,15 @@ _KEPT_IDS = (
     "test_point_read_empty_bucket_plans_no_files",
     "tests/test_txn_changes.py::test_changes_net_upserts_since_version",
     "tests/test_txn_changes.py::test_changes_delta_sums_increments",
+    # the one posting-store fold (compact_store_in_place): committed-
+    # only folding, crash recovery, verdict equivalence, the auto
+    # tier, the Engine binding and exact shard values through a fold
+    "tests/test_admission.py::test_compaction_skips_uncommitted_tag",
+    "tests/test_admission.py::test_compaction_crash_recovery",
+    "tests/test_admission.py::test_compaction_equivalence_with_uncompacted",
+    "tests/test_admission.py::test_tiered_compaction_auto_then_major",
+    "tests/test_admission.py::test_engine_compact_admission_in_place",
+    "tests/test_r17_fixes.py::test_leading_zero_shard_not_mangled_by_fold",
 )
 
 

@@ -103,38 +103,6 @@ def test_leading_zero_shard_not_mangled_by_fold(spark, tmp_path):
     assert sorted(r.doc_id for r in table.read().collect()) == [1, 2]
 
 
-def test_leading_zero_shard_not_mangled_by_outofplace_fold(
-        spark, tmp_path):
-    """r17-advice twin of test_leading_zero_shard_not_mangled_by_fold
-    for the OUT-OF-PLACE fold (Engine.compact_admission_postings):
-    its store read also used partition-type inference, so an
-    all-numeric s_shard store would rebuild the new generation with
-    mangled shard dirs ('123' for '0123') that no future screen's
-    string prune could match — true dups admitted silently."""
-    from data_ingestion_challenge_spark.api import Engine
-
-    dirs = _dirs(tmp_path, "oopfold")
-    admit, table = document_admission_sink(
-        spark, dirs["table"], dirs["postings"], dirs["log"],
-        sizes_dir=dirs["sizes"], shard_col="source")
-    admit(_batch(spark, [(1, LONG_A, "0123")]), 0)
-    admit(_batch(spark, [(2, NOVEL, "007")]), 1)
-    eng = Engine(spark=spark)
-    gen2 = str(tmp_path / "oopfold" / "gen2")
-    eng.compact_admission_postings(dirs["postings"], gen2,
-                                   table_path=dirs["table"])
-    base = os.path.join(gen2, "ingest_batch=-1")
-    assert sorted(e.name for e in os.scandir(base)
-                  if e.name.startswith("s_shard=")) == [
-        "s_shard=007", "s_shard=0123"]
-    # And a screen over the new generation still matches through it.
-    admit2, table2 = document_admission_sink(
-        spark, dirs["table"], gen2, dirs["log"],
-        sizes_dir=dirs["sizes"])
-    admit2(_batch(spark, [(3, LONG_A_NEAR, "0123")]), 2)
-    assert sorted(r.doc_id for r in table2.read().collect()) == [1, 2]
-
-
 def test_store_bucket_mod_stamp_preserves_shard_pin(tmp_path):
     """ADVICE #2's race, collapsed to its intermediate state: the meta
     exists with ONLY a shard_col pin (another builder wrote it between

@@ -45,14 +45,6 @@ def test_layout_shard_then_bucket(spark, store):
     assert inner and all(n.startswith("s_bucket=") for n in inner)
 
 
-def test_flat_store_refuses_shard(spark, tmp_path):
-    with pytest.raises(ValueError, match="bucketed"):
-        adm._write_postings_layout(
-            _post(spark, [(1, "x", "A")]),
-            str(tmp_path / "flat"), mod=None, n_files=2,
-            shard_col="shard")
-
-
 def test_shard_prune_composes_with_bucket_prune(spark, store):
     df = spark.read.parquet(store)
     got = (df.where((F.col("shard") == "A")

@@ -266,9 +266,7 @@ def test_run_document_admission_shard_passthrough(spark, tmp_path):
     # Effective shard values (r18: increments carry the true shard in
     # doc_shard under the __mixed__ level; the resolved reader is the
     # value surface).
-    store = adm._read_store_resolved(
-        spark, d["postings"], sharded=True,
-        bucketed=adm.store_bucket_mod(d["postings"]) is not None)
+    store = adm._read_store_resolved(spark, d["postings"], sharded=True)
     shards = {str(r[0]) for r in
               store.select(SHARD_COL).distinct().collect()}
     assert shards == {"web", GLOBAL_SHARD}
