@@ -1091,9 +1091,11 @@ class Engine:
                        tau: float = 0.8, n: int = 3) -> DataFrame:
         """Ingest-time admission screen: per incoming doc, the
         is_dup/dup_of/jaccard verdict against the corpus behind an
-        already-materialized posting table — batch-sized work; the
-        corpus is only touched through the bucketed posting layout
-        (operators/dedup.incremental_dedup_verdict)."""
+        already-materialized posting table — batch-sized work through
+        the streaming sink's one screen (operators/dedup._screen_pairs
+        via incremental_dedup_verdict).  Computed when called: the
+        returned frame is checkpoint-backed and leaves no cached
+        frame behind."""
         from data_ingestion_challenge_spark.operators.dedup import (
             incremental_dedup_verdict,
         )

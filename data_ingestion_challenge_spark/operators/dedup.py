@@ -485,46 +485,109 @@ def winnow_fps_oracle_cte(n: int = 3, w: int = 4) -> str:
 
 # ------------------------------------------------ incremental (ingest)
 
-def incremental_jaccard_pairs(new_docs: DataFrame, posting: DataFrame,
-                              n: int = 3, tau: float = 0.8
-                              ) -> DataFrame:
-    """INGEST-TIME dedup: exact Jaccard ≥ τ pairs between an incoming
-    batch and the EXISTING corpus, via the corpus's maintained posting
-    table (Engine.materialize_postings) — the production flow where
-    new data is screened at arrival instead of re-deduping the whole
-    corpus per batch.  (The streaming admission sink runs its own
-    fused screen, streaming/admission._screen_pairs, with bucket
-    pruning and a sizes store; this operator backs the catalog-table
-    screen, Engine.dedup_incoming and the registered
-    incremental_dedup_verdict query.)
+# Ratify-join safety valve: above this many candidate pairs the pair
+# table is no longer "near-dup-sized" and its broadcast could exceed
+# the driver/broadcast memory limit — fall back to a shuffle join
+# (graceful degradation instead of a failed micro-batch).  ~1M rows of
+# (4 longs + bool) is tens of MB broadcast-side, comfortably inside
+# default executor memory.
+_PAIR_BROADCAST_MAX_ROWS = 1_000_000
 
-    Cost model at 100 TB: everything batch-sided is batch-sized; the
-    corpus is touched only through (a) one df aggregation over the
-    posting table (map-side combined), (b) the candidate equi-join of
-    the batch's PREFIX shingles against the bucketed posting table
-    (exchange-free on the corpus side), and (c) size/verify joins
-    restricted to candidate docs.  No corpus self-join ever happens.
 
-    Correctness of the ONE-SIDED prefix: J(A,B) ≥ τ implies
-    |A∩B| ≥ τ·|A∪B| ≥ τ·|A|, and any (|A| − ⌈τ|A|⌉ + 1)-subset of A
-    must then intersect A∩B (else the intersection fits inside the
-    remaining ⌈τ|A|⌉ − 1 elements) — so indexing only each NEW doc's
-    ⌊(1-τ)·|A|⌋+1 rarest-in-corpus shingles against the FULL corpus
-    postings admits every true pair; exact verification decides
-    membership.  Rarity ordering is purely a fan-out heuristic
-    (rare shingles have short corpus posting lists); shingles unseen
-    in the corpus rank rarest (df 0).
+def _batch_shingle_rel(all_post: DataFrame,
+                       bsh: DataFrame) -> DataFrame:
+    """The screen's corpus-side single-scan contract, factored so its
+    plan shape is independently auditable: the (corpus ∪ batch)
+    posting frame streams through ONE broadcast left-semi join
+    against the batch shingle set and is never shuffled — no
+    `Exchange hashpartitioning` may ever sit between the posting
+    store's file scan and this join (tests/test_admission.py pins
+    it).  The survivors are batch-df-bounded, so every downstream
+    exchange of the screen is batch-bounded too."""
+    return all_post.join(F.broadcast(bsh), "s", "left_semi")
 
-    Returns (doc_id, corpus_doc_id, jaccard): batch doc → corpus
-    near-duplicate.  Intra-batch duplicates are a separate (batch-
-    sized) concern — run ngram_jaccard_pairs on the batch itself.
-    """
+
+def _screen_pairs(new_post: DataFrame, batch_sizes: DataFrame,
+                  corpus_post: DataFrame | None,
+                  corpus_sizes: DataFrame | None,
+                  tau: float, caches: list) -> DataFrame:
+    """THE batch-vs-stored near-duplicate screen: ONE candidate+verify
+    pass finds batch-vs-batch near-dup pairs AND batch-vs-corpus
+    matches — (doc_id, corpus_doc_id, _corp, jaccard), where _corp
+    marks a corpus-side match.  The streaming admission sink and
+    incremental_dedup_verdict (the registered gate and
+    Engine.dedup_incoming) both run it.
+
+    Correctness of the ONE-SIDED prefix: it is order-free — for ANY
+    subset S of A with |S| = |A| − ⌈τ·|A|⌉ + 1, J(A,B) ≥ τ forces
+    S ∩ (A∩B) ≠ ∅ (else A∩B fits in the remaining ⌈τ|A|⌉ − 1
+    elements), so indexing each batch doc's prefix once against
+    corpus ∪ batch postings admits every true pair of BOTH kinds; the
+    exact verify decides membership, making the screen value-identical
+    to an in-batch PPJoin plus a full batch×corpus join (pinned by
+    tests/test_admission.py).  Rarity ordering (document frequency
+    over the batch's shingle occurrences) is a pure fan-out heuristic.
+
+    The ``_corp`` marker rides the union so a corpus doc and a batch
+    doc SHARING an id stay distinct sets: the re-ingested-id case
+    must still surface as a corpus match, while a batch doc never
+    matches its own postings.
+
+    Runs Spark jobs eagerly (``rel`` is checkpointed, the candidate
+    pairs counted); every frame it persists joins ``caches``, for the
+    caller to unpersist once the result is materialized."""
     eps = 1e-9
-    # Inline batch postings stay persisted for the lifetime of the
-    # returned plan (prefix ranks + verify + sizes all read them) and
-    # are LRU-evicted once unreferenced.
-    new_post = _postings(new_docs, n)
-    dfreq = posting.groupBy("s").agg(F.count("*").alias("_df"))
+    bpost = new_post.select("doc_id", "s", F.lit(False).alias("_corp"))
+    if corpus_post is not None:
+        all_post = corpus_post.select(
+            "doc_id", "s", F.lit(True).alias("_corp")
+        ).unionByName(bpost)
+        all_sizes = corpus_sizes.select(
+            "doc_id", "n", F.lit(True).alias("_corp")
+        ).unionByName(batch_sizes.select(
+            "doc_id", "n", F.lit(False).alias("_corp")))
+    else:
+        all_post = bpost
+        all_sizes = batch_sizes.select(
+            "doc_id", "n", F.lit(False).alias("_corp"))
+    # THE scale contract of the fused screen: the corpus posting set
+    # is scanned ONCE, semi-filtered down to the batch's shingles by
+    # a BROADCAST of the batch shingle set, and never shuffled — only
+    # the surviving `rel` rows (corpus occurrences of batch shingles,
+    # batch-df-bounded) flow into the downstream shuffles, which are
+    # therefore all batch-bounded (no corpus self-join, no corpus
+    # exchange by `s`).  The other broadcasts build on small
+    # frames: the rarity lookup (dfreq) and the candidate join's
+    # prefix side are BATCH-bounded (each smaller than bsh), and the
+    # final ratify join's pair table is near-dup-sized (broadcast only
+    # under a row cap).  The frames that grow with corpus overlap
+    # (rel, pa, the pre-ratify pair table) stay on shuffle joins ON
+    # PURPOSE — broadcasting them was measured SLOWER (serial driver
+    # collects).
+    # Value-identical: dfreq is only ever looked up for batch
+    # shingles, and the candidate / intersection joins can only match
+    # on batch shingles.
+    # No distinct() on the broadcast side: the semi join's broadcast
+    # hash build collapses duplicates itself — a distinct here is one
+    # extra batch shuffle per micro-batch for nothing.
+    bsh = new_post.select("s")
+    # Materialize rel EAGERLY (batch-df-bounded rows): the broadcast
+    # exchanges below are prepared concurrently, and a lazily-cached
+    # rel would be scanned once per concurrent subtree before the
+    # cache populates — re-reading the corpus 2-3× per batch.
+    _sc = new_post.sparkSession.sparkContext
+    _sc.setJobDescription("admission screen: corpus rel semi-join")
+    rel = _batch_shingle_rel(all_post, bsh).localCheckpoint()
+    caches.append(rel)
+    dfreq = rel.groupBy("s").agg(F.count("*").alias("_df"))
+    # rel is checkpoint/cache-backed, so the planner sees no usable
+    # size estimate for dfreq and would shuffle new_post by `s` to
+    # join a frame bounded by the batch's DISTINCT shingles (smaller
+    # than the bsh broadcast above).  Build on dfreq explicitly: the
+    # batch posting table flows straight to its doc_id window
+    # exchange — a scale-correct build side, wall-neutral at bench
+    # geometry.
+    dfreq = F.broadcast(dfreq)
     wspec = Window.partitionBy("doc_id").orderBy("_df", "s")
     ranked = (
         new_post.join(dfreq, "s", "left").fillna({"_df": 0})
@@ -532,64 +595,136 @@ def incremental_jaccard_pairs(new_docs: DataFrame, posting: DataFrame,
             wspec.rowsBetween(Window.unboundedPreceding,
                               Window.unboundedFollowing)))
         .withColumn("_pos", F.row_number().over(wspec)))
-    new_prefix = ranked.where(
+    prefix = ranked.where(
         col("_pos") <= F.floor((1 - tau) * col("n") + eps) + 1)
+    # Batch-batch candidates keep ONE direction only (_nid < _cid):
+    # the one-sided bound holds from EACH side of a true pair, so
+    # both directions always surface and keeping one is complete —
+    # and halves the batch-pair verify work.  Corpus candidates keep
+    # every (_nid, _cid), including equal ids (the re-ingested-id
+    # case); a batch doc never pairs with its own batch postings.
+    pre_side = prefix.select(col("doc_id").alias("_nid"), "s")
+    # Prefix rows are a batch-bounded SUBSET of new_post (≈(1−τ)·|A|+1
+    # rows per doc) — again smaller than the bsh broadcast — while the
+    # rel side grows with corpus overlap.  Building on the prefix side
+    # streams rel out of its cache with NO exchange by `s`.  The
+    # GROWING frames (rel, pa, inter pre-ratify) stay on shuffle joins
+    # on purpose.
     cand = (
-        new_prefix.select(col("doc_id").alias("_nid"), "s")
-        .join(posting.select(col("doc_id").alias("_cid"), "s"), "s")
-        .select("_nid", "_cid").distinct())
-    # Exact verification: intersection counts from the FULL batch
-    # postings × corpus postings, restricted to candidate pairs.
+        F.broadcast(pre_side)
+        .join(rel.select(col("doc_id").alias("_cid"), "s",
+                         col("_corp").alias("_ccorp")), "s")
+        .where(col("_ccorp") | (col("_nid") < col("_cid")))
+        .select("_nid", "_cid", "_ccorp").distinct())
     pa = (new_post.join(cand, new_post["doc_id"] == cand["_nid"])
-          .select("_nid", "_cid", "s"))
-    pb = posting.select(col("doc_id").alias("_pb"), col("s").alias("_sb"))
+          .select("_nid", "_cid", "_ccorp", "s"))
+    pb = rel.select(col("doc_id").alias("_pb"),
+                    col("s").alias("_sb"),
+                    col("_corp").alias("_pbc"))
     inter = (
-        pa.join(pb, (col("_cid") == col("_pb")) & (col("s") == col("_sb")))
-        .groupBy("_nid", "_cid").agg(F.count("*").alias("ic")))
-    sz_new = new_post.groupBy("doc_id").agg(F.count("*").alias("_na")) \
-        .withColumnRenamed("doc_id", "_nid")
-    sz_cor = (posting.groupBy("doc_id")
-              .agg(F.count("*").alias("_nb"))
-              .withColumnRenamed("doc_id", "_cid"))
+        pa.join(pb, (col("_cid") == col("_pb"))
+                & (col("s") == col("_sb"))
+                & (col("_ccorp") == col("_pbc")))
+        .groupBy("_nid", "_cid", "_ccorp")
+        .agg(F.count("*").alias("ic")))
+    sz_new = batch_sizes.select(col("doc_id").alias("_nid"),
+                                col("n").alias("_na"))
+    sz_other = all_sizes.select(col("doc_id").alias("_cid"),
+                                col("_corp").alias("_ccorp"),
+                                col("n").alias("_nb"))
     jac = col("ic") / (col("_na") + col("_nb") - col("ic"))
-    out = (
-        inter.join(sz_new, "_nid").join(sz_cor, "_cid")
+    # inter (the ratified candidate pairs) is NEAR-DUP-SIZED on every
+    # normal batch: broadcast it against the corpus-sized size store
+    # so the ratify join streams `all_sizes` instead of shuffling it.
+    # But the hint is only safe while that sizing assumption holds —
+    # an adversarial/high-overlap batch can make the candidate-pair
+    # table batch×corpus-overlap large, and an unconditional broadcast
+    # would then blow the driver/broadcast limit and FAIL the
+    # micro-batch where a shuffle join merely degrades.  inter is
+    # materialized here anyway (the ratify join would otherwise
+    # recompute the whole candidate pipeline), so the cardinality
+    # check is a count over cached partitions; above the threshold
+    # the join falls back to an ordinary shuffle join.
+    _sc.setJobDescription("admission screen: candidate intersection")
+    # persist + count: ONE job materializes the pair table AND yields
+    # the guard cardinality (localCheckpoint's eager materialization
+    # plus a separate cache-scan count() is two).  Lineage is kept,
+    # but every downstream consumer reads the InMemoryRelation, so
+    # nothing above this line re-executes.  The handle joins `caches`
+    # BEFORE the count runs: a failed count must still leave the
+    # caller able to unpersist it.
+    inter = inter.persist()
+    caches.append(inter)
+    n_pairs = inter.count()
+    pair_side = inter.join(F.broadcast(sz_new), "_nid")
+    if n_pairs <= _PAIR_BROADCAST_MAX_ROWS:
+        pair_side = F.broadcast(pair_side)
+    return (
+        sz_other.join(pair_side, ["_cid", "_ccorp"])
         .where(jac >= tau)
         .select(col("_nid").alias("doc_id"),
                 col("_cid").alias("corpus_doc_id"),
+                col("_ccorp").alias("_corp"),
                 F.round(jac, 4).alias("jaccard")))
-    return out
+
+
+def _best_corpus_match(pairs: DataFrame) -> DataFrame:
+    """(doc_id, dup_of, jaccard): each batch doc's best CORPUS match
+    among _screen_pairs' ``_corp`` rows — highest rounded jaccard,
+    ties → lowest corpus_doc_id.  The one verdict rule of the
+    admission sink's log and incremental_dedup_verdict (and of
+    incremental_verdict_oracle_sql's ``best`` CTE)."""
+    w = Window.partitionBy("doc_id").orderBy(
+        col("jaccard").desc(), col("corpus_doc_id"))
+    return (pairs.where(col("_corp"))
+            .withColumn("_r", F.row_number().over(w))
+            .where(col("_r") == 1)
+            .select("doc_id", col("corpus_doc_id").alias("dup_of"),
+                    "jaccard"))
 
 
 def incremental_dedup_verdict(new_docs: DataFrame, posting: DataFrame,
                               n: int = 3, tau: float = 0.8
                               ) -> DataFrame:
-    """Per-batch-doc admission verdict: (doc_id, is_dup, dup_of,
-    jaccard).  dup_of = the best corpus match (highest Jaccard, ties →
-    lowest corpus_doc_id) or NULL for admitted docs — the row an
-    ingestion service writes to its admission log."""
-    pairs = incremental_jaccard_pairs(new_docs, posting, n, tau)
-    w = Window.partitionBy("doc_id").orderBy(
-        col("jaccard").desc(), col("corpus_doc_id"))
-    best = (pairs.withColumn("_r", F.row_number().over(w))
-            .where(col("_r") == 1).drop("_r"))
-    return (new_docs.select("doc_id")
-            .join(best, "doc_id", "left")
-            .select("doc_id",
-                    col("corpus_doc_id").isNotNull().alias("is_dup"),
-                    col("corpus_doc_id").alias("dup_of"),
-                    "jaccard"))
+    """INGEST-TIME dedup verdict per batch doc: (doc_id, is_dup,
+    dup_of, jaccard) against the corpus behind ``posting`` (e.g. a
+    table from Engine.materialize_postings) — the row an ingestion
+    service writes to its admission log; dup_of = _best_corpus_match
+    or NULL.  Runs the sink's screen (_screen_pairs) with full corpus
+    sizes and keeps its corpus-side pairs.  The result is computed
+    here (checkpoint-backed); every frame cached on the way is
+    released before returning."""
+    sc = new_docs.sparkSession.sparkContext
+    label = sc.getLocalProperty("spark.job.description")
+    new_post = _postings(new_docs, n)
+    caches = [new_post]
+    try:
+        n_col = F.count("*").alias("n")
+        pairs = _screen_pairs(
+            new_post, new_post.groupBy("doc_id").agg(n_col),
+            posting, posting.groupBy("doc_id").agg(n_col), tau,
+            caches=caches)
+        return (new_docs.select("doc_id")
+                .join(_best_corpus_match(pairs), "doc_id", "left")
+                .select("doc_id",
+                        col("dup_of").isNotNull().alias("is_dup"),
+                        "dup_of", "jaccard")
+                .localCheckpoint())
+    finally:
+        for h in caches:
+            h.unpersist()
+        sc.setJobDescription(label)
 
 
 def incremental_verdict_oracle_sql(batch_pred: str, n: int = 3,
                                    tau: float = 0.8) -> str:
     """DuckDB twin of incremental_dedup_verdict over the `documents`
     table split into batch rows (``batch_pred``) and corpus rows
-    (its negation) — registration-ready for a driver-gated query
-    (round-6 candidate); until then tests/test_operators.py runs the
-    comparison locally.  Columns and tie-breaks mirror the Spark op
+    (its negation) — the oracle of the registered
+    incremental_dedup_verdict query (plans/curation_q.py, batch =
+    ``doc_id % 5 = 0``).  Columns and tie-breaks mirror the Spark op
     exactly: best match = highest ROUNDED jaccard, then lowest
-    corpus_doc_id."""
+    corpus_doc_id (_best_corpus_match)."""
     return f"""
     WITH d AS (SELECT doc_id, string_split(text, ' ') w
                FROM documents),

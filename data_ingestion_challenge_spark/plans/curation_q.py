@@ -5,7 +5,8 @@ registration of the operators built in round 5):
   reservoir sampling, token-share drift between snapshots, overlapping
   chunk windows, per-doc snapshot diff, n-gram novelty;
 - the ingest-time admission screen's verdict
-  (operators/dedup.incremental_dedup_verdict) on the standard
+  (operators/dedup.incremental_dedup_verdict — the streaming sink's
+  one screen, operators/dedup._screen_pairs) on the standard
   doc_id%5 batch/corpus split;
 - the two-level (coarse-quantized) IVF probe's recall gate
   (operators/similarity.ivf2_probe_assignments) — the 100 TB
@@ -146,26 +147,24 @@ def ngram_novelty(cat: Catalog) -> DataFrame:
     oracle=incremental_verdict_oracle_sql("doc_id % 5 = 0"),
 )
 def incremental_dedup_verdict(cat: Catalog) -> DataFrame:
-    """INGEST-TIME dedup (the production arrival screen): everything
-    batch-sized except the corpus-posting equi-join; one-sided prefix
-    filter (rarest-in-corpus shingles) bounds candidates, exact
-    verification decides — never a corpus self-join
-    (operators/dedup.incremental_jaccard_pairs' cost model)."""
+    """INGEST-TIME dedup (the production arrival screen): the
+    admission sink's one screen (operators/dedup._screen_pairs) —
+    everything batch-sized except the semi-filtered corpus posting
+    scan; one-sided prefix filter bounds candidates, exact
+    verification decides, never a corpus self-join."""
     from data_ingestion_challenge_spark.operators.dedup import (
-        _postings,
-    )
-    from data_ingestion_challenge_spark.operators.dedup import (
-        incremental_dedup_verdict as _verdict,
+        _postings, incremental_dedup_verdict as _verdict,
     )
     docs = cat.documents
     corpus = docs.where(docs.doc_id % 5 != 0)
     batch = docs.where(docs.doc_id % 5 == 0)
     posting = _postings(corpus, 3)
-    out = _verdict(batch, posting, n=3, tau=0.8)
-    # posting stays persisted for the plan's lifetime (df agg +
-    # candidate + verify all read it); LRU-evicted once unreferenced
-    # — same contract as ngram_novelty's inline posting.
-    return out
+    # The verdict comes back checkpoint-backed, so the inline corpus
+    # posting is released before returning.
+    try:
+        return _verdict(batch, posting, n=3, tau=0.8)
+    finally:
+        posting.unpersist()
 
 
 # ------------------------------------------------- ivf2 recall gate

@@ -4,11 +4,14 @@ ingestion — the end-to-end loop an LLM-data ingestion service runs.
 Per micro-batch of arriving documents:
 
 1. exact dedup inside the batch (md5, keep min doc_id);
-2. near-dup screen — ONE fused candidate+verify pass
-   (``_screen_pairs``) finds batch-vs-batch pairs AND batch-vs-corpus
-   matches against the INCREMENTALLY MAINTAINED posting store (never
-   a corpus rescan; the corpus read prunes to the batch's shingle
-   buckets);
+2. near-dup screen — the package's one batch-vs-stored screen
+   (``operators/dedup._screen_pairs``, also behind
+   ``incremental_dedup_verdict`` and ``Engine.dedup_incoming``): ONE
+   fused candidate+verify pass finds batch-vs-batch pairs AND
+   batch-vs-corpus matches against the INCREMENTALLY MAINTAINED
+   posting store (never a corpus rescan; the corpus read prunes to
+   the batch's shingle buckets), and ``_best_corpus_match`` picks each
+   survivor's dup target;
 3. commit — admitted docs land in the transactional corpus table
    (txn.TxnTable) in one atomic commit tagged (app, batch_id): a
    crash-replayed batch is skipped whole (exactly-once).  The default
@@ -40,6 +43,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+# The one near-duplicate screen lives with the dedup operators.  The
+# sink looks _screen_pairs up through THIS module's namespace at call
+# time, so a wrapper patched onto admission._screen_pairs (bench.py's
+# screen timer, the sidecar/shard spy tests) sees every screen.
+from data_ingestion_challenge_spark.operators.dedup import (
+    _best_corpus_match, _postings, _screen_pairs, ngram_jaccard_pairs,
+)
+
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string"
 
 # Shingle-hash partition fan-out of a FRESH posting store (an existing
@@ -50,14 +61,6 @@ DOCS_SCHEMA = "doc_id long, text string, lang string, source string"
 N_SHINGLE_BUCKETS = 64
 
 _APP = "doc_admission"
-
-# Ratify-join safety valve: above this many candidate pairs the pair
-# table is no longer "near-dup-sized" and its broadcast could exceed
-# the driver/broadcast memory limit — fall back to a shuffle join
-# (graceful degradation instead of a failed micro-batch).  ~1M rows of
-# (4 longs + bool) is tens of MB broadcast-side, comfortably inside
-# default executor memory.
-_PAIR_BROADCAST_MAX_ROWS = 1_000_000
 
 _META = "_admission_meta.json"
 
@@ -936,185 +939,6 @@ def _collapse_exact(batch: DataFrame) -> DataFrame:
             .where(col("_r") == 1).drop("_r"))
 
 
-def _batch_shingle_rel(all_post: DataFrame,
-                       bsh: DataFrame) -> DataFrame:
-    """The screen's corpus-side single-scan contract, factored so its
-    plan shape is independently auditable: the (corpus ∪ batch)
-    posting frame streams through ONE broadcast left-semi join
-    against the batch shingle set and is never shuffled — no
-    `Exchange hashpartitioning` may ever sit between the posting
-    store's file scan and this join (tests/test_admission.py pins
-    it).  The survivors are batch-df-bounded, so every downstream
-    exchange of the screen is batch-bounded too."""
-    return all_post.join(F.broadcast(bsh), "s", "left_semi")
-
-
-def _screen_pairs(new_post: DataFrame, batch_sizes: DataFrame,
-                  corpus_post: DataFrame | None,
-                  corpus_sizes: DataFrame | None,
-                  tau: float,
-                  caches: list | None = None) -> DataFrame:
-    """ONE candidate+verify pass for BOTH screens a micro-batch needs:
-    batch-vs-batch near-dup pairs AND batch-vs-corpus matches —
-    (doc_id, corpus_doc_id, _corp, jaccard), where _corp marks a
-    corpus-side match.
-
-    The r5 pipeline ran these as two separate pipelines (an in-batch
-    PPJoin, then operators/dedup.incremental_jaccard_pairs against the
-    corpus) — ~26 batch-sized shuffle stages per micro-batch, the
-    measured throughput floor.  They fuse exactly because the
-    ONE-SIDED prefix bound is order-free: for ANY subset S of A with
-    |S| = |A| − ⌈τ·|A|⌉ + 1, J(A,B) ≥ τ forces S ∩ (A∩B) ≠ ∅ (else
-    A∩B fits in the remaining ⌈τ|A|⌉ − 1 elements), so indexing each
-    batch doc's prefix once against corpus ∪ batch postings admits
-    every true pair of BOTH kinds; the exact verify decides
-    membership, making the fused screen value-identical to the two
-    pipelines it replaces (pinned by tests/test_admission.py).
-    Rarity ordering (corpus+batch document frequency) remains a pure
-    fan-out heuristic.
-
-    The ``_corp`` marker rides the union so a corpus doc and a batch
-    doc SHARING an id stay distinct sets: the re-ingested-id case
-    must still surface as a corpus match, while a batch doc never
-    matches its own postings.  Cost model unchanged from the
-    incremental screen: everything batch-sized except the pruned
-    corpus-posting equi-joins."""
-    eps = 1e-9
-    bpost = new_post.select("doc_id", "s", F.lit(False).alias("_corp"))
-    if corpus_post is not None:
-        all_post = corpus_post.select(
-            "doc_id", "s", F.lit(True).alias("_corp")
-        ).unionByName(bpost)
-        all_sizes = corpus_sizes.select(
-            "doc_id", "n", F.lit(True).alias("_corp")
-        ).unionByName(batch_sizes.select(
-            "doc_id", "n", F.lit(False).alias("_corp")))
-    else:
-        all_post = bpost
-        all_sizes = batch_sizes.select(
-            "doc_id", "n", F.lit(False).alias("_corp"))
-    # THE scale contract of the fused screen: the corpus posting set
-    # is scanned ONCE, semi-filtered down to the batch's shingles by
-    # a BROADCAST of the batch shingle set, and never shuffled — only
-    # the surviving `rel` rows (corpus occurrences of batch shingles,
-    # batch-df-bounded) flow into the downstream shuffles, which are
-    # therefore all batch-bounded.  The pre-r9 plan shuffled the
-    # whole pruned corpus posting set by `s` twice per micro-batch
-    # (candidate join + intersection join): at a 100 TB corpus those
-    # two exchanges dominate.  The other broadcasts build on small
-    # frames: the rarity lookup (dfreq) and the candidate join's
-    # prefix side are BATCH-bounded (each smaller than bsh), and the
-    # final ratify join's pair table is near-dup-sized (broadcast only
-    # under a row cap).  The frames that grow with corpus overlap
-    # (rel, pa, the pre-ratify pair table) stay on shuffle joins ON
-    # PURPOSE — broadcasting them was measured SLOWER (serial driver
-    # collects).
-    # Value-identical: dfreq is only ever looked up for batch
-    # shingles, and the candidate / intersection joins can only match
-    # on batch shingles.
-    # No distinct() on the broadcast side: the semi join's broadcast
-    # hash build collapses duplicates itself — a distinct here is one
-    # extra batch shuffle per micro-batch for nothing.
-    bsh = new_post.select("s")
-    # Materialize rel EAGERLY (batch-df-bounded rows): the broadcast
-    # exchanges below are prepared concurrently, and a lazily-cached
-    # rel would be scanned once per concurrent subtree before the
-    # cache populates — re-reading the corpus 2-3× per batch.
-    _sc = new_post.sparkSession.sparkContext
-    _sc.setJobDescription("admission screen: corpus rel semi-join")
-    rel = _batch_shingle_rel(all_post, bsh).localCheckpoint()
-    if caches is not None:
-        caches.append(rel)
-    dfreq = rel.groupBy("s").agg(F.count("*").alias("_df"))
-    # rel is checkpoint/cache-backed, so the planner sees no usable
-    # size estimate for dfreq and would shuffle new_post by `s` to
-    # join a frame bounded by the batch's DISTINCT shingles (smaller
-    # than the bsh broadcast above).  Build on dfreq explicitly: the
-    # batch posting table flows straight to its doc_id window
-    # exchange — a scale-correct build side, wall-neutral at bench
-    # geometry.
-    dfreq = F.broadcast(dfreq)
-    wspec = Window.partitionBy("doc_id").orderBy("_df", "s")
-    ranked = (
-        new_post.join(dfreq, "s", "left").fillna({"_df": 0})
-        .withColumn("n", F.count("*").over(
-            wspec.rowsBetween(Window.unboundedPreceding,
-                              Window.unboundedFollowing)))
-        .withColumn("_pos", F.row_number().over(wspec)))
-    prefix = ranked.where(
-        col("_pos") <= F.floor((1 - tau) * col("n") + eps) + 1)
-    # Batch-batch candidates keep ONE direction only (_nid < _cid):
-    # the one-sided bound holds from EACH side of a true pair, so
-    # both directions always surface and keeping one is complete —
-    # and halves the batch-pair verify work.  Corpus candidates keep
-    # every (_nid, _cid), including equal ids (the re-ingested-id
-    # case); a batch doc never pairs with its own batch postings.
-    pre_side = prefix.select(col("doc_id").alias("_nid"), "s")
-    # Prefix rows are a batch-bounded SUBSET of new_post (≈(1−τ)·|A|+1
-    # rows per doc) — again smaller than the bsh broadcast — while the
-    # rel side grows with corpus overlap.  Building on the prefix side
-    # streams rel out of its cache with NO exchange by `s`; the old
-    # shuffle join exchanged both sides.  The GROWING frames (rel, pa,
-    # inter pre-ratify) stay on shuffle joins on purpose.
-    cand = (
-        F.broadcast(pre_side)
-        .join(rel.select(col("doc_id").alias("_cid"), "s",
-                         col("_corp").alias("_ccorp")), "s")
-        .where(col("_ccorp") | (col("_nid") < col("_cid")))
-        .select("_nid", "_cid", "_ccorp").distinct())
-    pa = (new_post.join(cand, new_post["doc_id"] == cand["_nid"])
-          .select("_nid", "_cid", "_ccorp", "s"))
-    pb = rel.select(col("doc_id").alias("_pb"),
-                    col("s").alias("_sb"),
-                    col("_corp").alias("_pbc"))
-    inter = (
-        pa.join(pb, (col("_cid") == col("_pb"))
-                & (col("s") == col("_sb"))
-                & (col("_ccorp") == col("_pbc")))
-        .groupBy("_nid", "_cid", "_ccorp")
-        .agg(F.count("*").alias("ic")))
-    sz_new = batch_sizes.select(col("doc_id").alias("_nid"),
-                                col("n").alias("_na"))
-    sz_other = all_sizes.select(col("doc_id").alias("_cid"),
-                                col("_corp").alias("_ccorp"),
-                                col("n").alias("_nb"))
-    jac = col("ic") / (col("_na") + col("_nb") - col("ic"))
-    # inter (the ratified candidate pairs) is NEAR-DUP-SIZED on every
-    # normal batch: broadcast it against the corpus-sized size store
-    # so the ratify join streams `all_sizes` instead of shuffling it.
-    # But the hint is only safe while that sizing assumption holds —
-    # an adversarial/high-overlap batch can make the candidate-pair
-    # table batch×corpus-overlap large, and an unconditional broadcast
-    # would then blow the driver/broadcast limit and FAIL the
-    # micro-batch where a shuffle join merely degrades.  inter is
-    # materialized here anyway (the ratify join would otherwise
-    # recompute the whole candidate pipeline), so the cardinality
-    # check is a count over cached partitions; above the threshold
-    # the join falls back to an ordinary shuffle join.
-    _sc.setJobDescription("admission screen: candidate intersection")
-    # persist + count: ONE job materializes the pair table AND yields
-    # the guard cardinality (localCheckpoint's eager materialization
-    # plus a separate cache-scan count() is two).  Lineage is kept,
-    # but every downstream consumer reads the InMemoryRelation, so
-    # nothing above this line re-executes.  The handle joins `caches`
-    # BEFORE the count runs: a failed count must still leave the
-    # caller able to unpersist it.
-    inter = inter.persist()
-    if caches is not None:
-        caches.append(inter)
-    n_pairs = inter.count()
-    pair_side = inter.join(F.broadcast(sz_new), "_nid")
-    if n_pairs <= _PAIR_BROADCAST_MAX_ROWS:
-        pair_side = F.broadcast(pair_side)
-    return (
-        sz_other.join(pair_side, ["_cid", "_ccorp"])
-        .where(jac >= tau)
-        .select(col("_nid").alias("doc_id"),
-                col("_cid").alias("corpus_doc_id"),
-                col("_ccorp").alias("_corp"),
-                F.round(jac, 4).alias("jaccard")))
-
-
 def document_admission_sink(spark: SparkSession, table_path: str,
                             postings_dir: str, log_dir: str,
                             n_buckets: int = 32, n: int = 3,
@@ -1300,10 +1124,6 @@ def document_admission_sink(spark: SparkSession, table_path: str,
 
     def _admit_body(batch_df: DataFrame, batch_id: int,
                     tag: str) -> None:
-        from data_ingestion_challenge_spark.operators.dedup import (
-            _postings,
-        )
-
         # The store's bucket modulus is read from its persisted meta,
         # NOT the current constant — a raised N_SHINGLE_BUCKETS must
         # never mis-prune an existing store.
@@ -1563,17 +1383,10 @@ def document_admission_sink(spark: SparkSession, table_path: str,
                         .alias("doc_id")).distinct())
         survivors = exact.join(drop, "doc_id", "left_anti")
         # Corpus verdict for SURVIVORS only (a doc dropped in-batch
-        # is logged with its in-batch witness, dup_of NULL): best
-        # corpus match = highest rounded jaccard, ties → lowest
-        # corpus_doc_id — same contract as the registered
+        # is logged with its in-batch witness, dup_of NULL): the one
+        # best-match rule, shared with the registered
         # incremental_dedup_verdict query.
-        wbest = Window.partitionBy("doc_id").orderBy(
-            col("jaccard").desc(), col("corpus_doc_id"))
-        best = (pairs.where(col("_corp"))
-                .withColumn("_r", F.row_number().over(wbest))
-                .where(col("_r") == 1)
-                .select("doc_id", col("corpus_doc_id").alias("dup_of"),
-                        "jaccard"))
+        best = _best_corpus_match(pairs)
         verdict = (survivors.select("doc_id")
                    .join(best, "doc_id", "left")
                    .select("doc_id",
@@ -1839,10 +1652,6 @@ def sweep_cross_shard_dups(spark: SparkSession, postings_dir: str,
     so a later fold cannot swap directories mid-scan.  Refuses an
     unsharded store — there the incremental screen already sees
     every pair, and the full audit is dedup_ngram_jaccard."""
-    from data_ingestion_challenge_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
     if store_shard_col(postings_dir) is None:
         raise ValueError(
             f"{postings_dir}: store is not sharded — the incremental "

@@ -33,11 +33,12 @@ def pytest_collection_modifyitems(config, items):
     `*_matches_duckdb_oracle` parity test, a plan-pin module
     (test_plans_scale.py, test_r*_plans.py) or
     test_txn.py::test_merge_model_property, the model-based reference
-    for MERGE, or one of the TxnTable log-replay and merged-read pins
-    or the in-place posting-store fold tests named in
-    tests/test_gate_policy.py.  It DOES demote most hypothesis
-    equivalence properties (test_properties.py) and most of the sharded-sink battery
-    (test_shard_sink.py); those run only in the full suite.  These
+    for MERGE, or one of the TxnTable log-replay and merged-read pins,
+    the in-place posting-store fold tests or the near-duplicate screen
+    equivalence tests named in tests/test_gate_policy.py.  It DOES
+    demote most hypothesis equivalence properties (test_properties.py)
+    and most of the sharded-sink battery (test_shard_sink.py); those
+    run only in the full suite.  These
     keep rules, and that every listed id names an existing test, are
     enforced by tests/test_gate_policy.py."""
     slow = slow_ids()
@@ -59,6 +60,29 @@ def spark():
 def cat(spark):
     from data_ingestion_challenge_spark.catalog import Catalog
     return Catalog(spark, SF_DIR)
+
+
+def screen_corpus_pairs(batch, posting, tau: float = 0.8) -> set:
+    """The (doc_id, corpus_doc_id, jaccard) corpus-side pairs of
+    _screen_pairs, built as incremental_dedup_verdict builds it."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_challenge_spark.operators.dedup import (
+        _postings, _screen_pairs,
+    )
+
+    bp = _postings(batch, 3)
+    caches = [bp]
+    try:
+        n_col = F.count("*").alias("n")
+        return {(r.doc_id, r.corpus_doc_id, r.jaccard)
+                for r in _screen_pairs(
+                    bp, bp.groupBy("doc_id").agg(n_col), posting,
+                    posting.groupBy("doc_id").agg(n_col), tau,
+                    caches=caches).collect() if r._corp}
+    finally:
+        for h in caches:
+            h.unpersist()
 
 
 def plan_string(spark, name: str) -> str:

@@ -344,20 +344,18 @@ def test_admission_lease_blocks_second_stream(spark, dirs, tmp_path):
 
 def test_fused_screen_equals_separate_pipelines(spark):
     """_screen_pairs (one fused candidate+verify pass) must produce
-    EXACTLY the pairs of the two pipelines it replaced: the in-batch
-    PPJoin (ngram_jaccard_pairs on the batch alone) and the
-    vs-corpus incremental screen (incremental_jaccard_pairs) — on a
-    randomized corpus with planted near-dups, exact dups, short docs
-    and a same-id batch/corpus collision."""
+    EXACTLY the pairs of two independent references: the in-batch
+    PPJoin (ngram_jaccard_pairs on the batch alone) and a brute-force
+    Python jaccard over every batch×corpus row pair — on a randomized
+    corpus with planted near-dups, exact dups, short docs and a
+    same-id batch/corpus collision."""
     import random
+    from decimal import ROUND_HALF_UP, Decimal
 
     from pyspark.sql import functions as F
 
     from data_ingestion_challenge_spark.operators.dedup import (
-        _postings, incremental_jaccard_pairs, ngram_jaccard_pairs,
-    )
-    from data_ingestion_challenge_spark.streaming.admission import (
-        _screen_pairs,
+        _postings, _screen_pairs, ngram_jaccard_pairs,
     )
 
     rng = random.Random(11)
@@ -400,11 +398,23 @@ def test_fused_screen_equals_separate_pipelines(spark):
         want_batch = {(r.doc_a, r.doc_b, r.jaccard)
                       for r in ngram_jaccard_pairs(
                           batch, n=3, tau=tau, posting=bp).collect()}
-        want_corpus = {tuple(r) for r in incremental_jaccard_pairs(
-            batch, cp.select("doc_id", "s"), n=3, tau=tau).collect()}
     finally:
         for h in caches:
             h.unpersist()
+
+    def shingles(text):
+        w = text.split(" ")
+        return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
+
+    # Spark rounds HALF_UP; an exact decimal ratio rounds the same way
+    want_corpus = set()
+    for b_id, b_text in batch_rows:
+        for c_id, c_text in corpus_rows:
+            A, B = shingles(b_text), shingles(c_text)
+            if A and B and len(A & B) / len(A | B) >= tau:
+                jac = (Decimal(len(A & B)) / Decimal(len(A | B))
+                       ).quantize(Decimal("0.0001"), ROUND_HALF_UP)
+                want_corpus.add((b_id, c_id, float(jac)))
     assert got_batch == want_batch and want_batch  # planted pair found
     assert got_corpus == want_corpus and want_corpus
     # the same-id same-text collision surfaces as a corpus self-match
@@ -419,28 +429,24 @@ def test_ratify_broadcast_guard_falls_back_to_shuffle(spark,
     values must be identical either way."""
     from pyspark.sql import functions as F
 
-    from data_ingestion_challenge_spark.operators.dedup import (
-        _postings,
-    )
-    from data_ingestion_challenge_spark.streaming import admission
+    from data_ingestion_challenge_spark.operators import dedup
 
     batch = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e f g"), (3, "x y z w v")],
         "doc_id long, text string")
-    bp = _postings(batch, 3)
+    bp = dedup._postings(batch, 3)
     caches = [bp]
     try:
         bs = bp.groupBy("doc_id").agg(F.count("*").alias("n"))
 
         def _pairs():
             return {(r.doc_id, r.corpus_doc_id, r.jaccard)
-                    for r in admission._screen_pairs(
+                    for r in dedup._screen_pairs(
                         bp, bs, None, None, 0.5,
                         caches=caches).collect()}
 
         want = _pairs()
-        monkeypatch.setattr(admission,
-                            "_PAIR_BROADCAST_MAX_ROWS", 0)
+        monkeypatch.setattr(dedup, "_PAIR_BROADCAST_MAX_ROWS", 0)
         assert _pairs() == want and want
     finally:
         for h in caches:
@@ -1123,7 +1129,7 @@ def test_screen_corpus_side_never_shuffles(spark, tmp_path):
     shingles is the only exchange allowed)."""
     from pyspark.sql import functions as F
 
-    from data_ingestion_challenge_spark.streaming.admission import (
+    from data_ingestion_challenge_spark.operators.dedup import (
         _batch_shingle_rel,
     )
 

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_challenge_spark.plans import QUERIES
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, screen_corpus_pairs
 
 
 def test_entry_smoke(spark):
@@ -380,10 +380,10 @@ def test_keep_list_materialized_ivf_equals_inline(spark, cat, tmp_path):
 
 
 def test_incremental_jaccard_equals_full_cross_pairs(spark, cat):
-    """Ingest-time dedup must find EXACTLY the full-corpus jaccard
-    pairs that straddle the batch/corpus split — the one-sided prefix
-    admits every true pair (completeness) and exact verification
-    rejects everything else (soundness)."""
+    """The ingest-time screen's corpus side must find EXACTLY the
+    full-corpus jaccard pairs that straddle the batch/corpus split —
+    the one-sided prefix admits every true pair (completeness) and
+    exact verification rejects everything else (soundness)."""
     from data_ingestion_challenge_spark.operators import dedup as D
 
     docs = cat.documents
@@ -391,9 +391,7 @@ def test_incremental_jaccard_equals_full_cross_pairs(spark, cat):
     batch = docs.where(docs.doc_id % 5 == 0)
     posting = D._postings(corpus, 3)
     try:
-        inc = {(r.doc_id, r.corpus_doc_id, r.jaccard)
-               for r in D.incremental_jaccard_pairs(
-                   batch, posting, n=3, tau=0.8).collect()}
+        inc = screen_corpus_pairs(batch, posting)
         full = D.ngram_jaccard_pairs(docs, n=3, tau=0.8).collect()
         batch_ids = {r.doc_id for r in batch.select("doc_id").collect()}
         expect = set()
@@ -410,7 +408,8 @@ def test_incremental_jaccard_equals_full_cross_pairs(spark, cat):
 
 def test_incremental_dedup_verdict(spark, cat):
     """Every batch doc gets exactly one verdict row; dup_of is the
-    best-jaccard (tie → lowest id) corpus match; non-dups are NULL."""
+    best-jaccard (tie → lowest id) corpus match among the screen's
+    corpus-side pairs; non-dups are NULL."""
     from data_ingestion_challenge_spark.operators import dedup as D
 
     docs = cat.documents
@@ -418,17 +417,17 @@ def test_incremental_dedup_verdict(spark, cat):
     batch = docs.where(docs.doc_id % 5 == 0)
     posting = D._postings(corpus, 3)
     try:
-        pairs = D.incremental_jaccard_pairs(batch, posting,
-                                            tau=0.8).collect()
+        pairs = screen_corpus_pairs(batch, posting)
         verdict = D.incremental_dedup_verdict(batch, posting,
                                               tau=0.8).collect()
         assert len(verdict) == batch.count()
         best = {}
-        for r in pairs:
-            cur = best.get(r.doc_id)
-            key = (-r.jaccard, r.corpus_doc_id)
+        for doc_id, corpus_doc_id, jaccard in pairs:
+            cur = best.get(doc_id)
+            key = (-jaccard, corpus_doc_id)
             if cur is None or key < cur[0]:
-                best[r.doc_id] = (key, r.corpus_doc_id, r.jaccard)
+                best[doc_id] = (key, corpus_doc_id, jaccard)
+        assert best
         for v in verdict:
             if v.doc_id in best:
                 assert v.is_dup and v.dup_of == best[v.doc_id][1]
@@ -437,6 +436,43 @@ def test_incremental_dedup_verdict(spark, cat):
                 assert not v.is_dup and v.dup_of is None
     finally:
         posting.unpersist()
+
+
+def test_one_near_dup_screen_and_one_verdict_rule():
+    """Static check of the package: _screen_pairs is defined once, in
+    operators/dedup.py, and alone calls _batch_shingle_rel; no module
+    defines incremental_jaccard_pairs; and only _best_corpus_match
+    orders by jaccard / corpus_doc_id (the best-match window)."""
+    import ast
+    import pathlib
+
+    import data_ingestion_challenge_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    defs, uses = [], set()
+    for path in sorted(root.rglob("*.py")):
+        mod = path.relative_to(root).as_posix()
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            defs.append((mod, fn.name))
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.Call):
+                    continue
+                name = getattr(node.func, "id",
+                               getattr(node.func, "attr", None))
+                consts = {c.value for a in node.args for c in ast.walk(a)
+                          if isinstance(c, ast.Constant)}
+                if name == "_batch_shingle_rel" or (
+                        name == "orderBy"
+                        and consts & {"jaccard", "corpus_doc_id"}):
+                    uses.add((name, mod, fn.name))
+    assert [d for d in defs if d[1] == "_screen_pairs"] == [
+        ("operators/dedup.py", "_screen_pairs")]
+    assert not [d for d in defs if d[1] == "incremental_jaccard_pairs"]
+    assert uses == {
+        ("_batch_shingle_rel", "operators/dedup.py", "_screen_pairs"),
+        ("orderBy", "operators/dedup.py", "_best_corpus_match")}, uses
 
 
 def test_engine_dedup_incoming_via_materialized_postings(spark, tmp_path):
@@ -470,28 +506,24 @@ def test_engine_dedup_incoming_via_materialized_postings(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_incremental_verdict_matches_duckdb_oracle(spark, cat):
-    """The r6 registration candidate: incremental_dedup_verdict vs its
-    DuckDB oracle twin on the standard doc_id%5 batch/corpus split."""
-    import duckdb
+def test_engine_dedup_incoming_leaves_no_cached_frame(spark, tmp_path):
+    """A long-lived service calls dedup_incoming once per arriving
+    batch: each call must release every frame it cached, so distinct
+    batches never accrete entries in the session's cache manager."""
+    from data_ingestion_challenge_spark.api import Engine
 
-    from data_ingestion_challenge_spark.operators import dedup as D
-
-    docs = cat.documents
-    corpus = docs.where(docs.doc_id % 5 != 0)
-    batch = docs.where(docs.doc_id % 5 == 0)
-    posting = D._postings(corpus, 3)
+    eng = Engine(SF_DIR, spark=spark)
+    table = "test_incoming_cache_postings"
     try:
-        got = {tuple(r) for r in D.incremental_dedup_verdict(
-            batch, posting, n=3, tau=0.8).collect()}
+        eng.materialize_postings(table, str(tmp_path / "post"))
+        docs = eng.table("documents")
+        spark.catalog.clearCache()
+        for k in range(3):
+            eng.dedup_incoming(docs.where(docs.doc_id % 3 == k),
+                               table).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     finally:
-        posting.unpersist()
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM "
-            f"'{SF_DIR}/documents.parquet'")
-    want = {tuple(r) for r in con.sql(
-        D.incremental_verdict_oracle_sql("doc_id % 5 = 0")).fetchall()}
-    assert got == want and got
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_ivf2_probe_recall_and_determinism(spark):

@@ -370,37 +370,35 @@ def test_jaccard_bucketed_posting_no_shingle_exchange(spark):
     spark.sql("DROP TABLE IF EXISTS audit_pref_sc")
 
 
-def test_incremental_dedup_no_corpus_side_shingle_exchange(spark):
-    """Engine.dedup_incoming reads the corpus through the bucketed
-    posting table: the candidate join must not re-shuffle the CORPUS
-    postings on s.  The batch side (prefix ranks, verify expansion)
-    may exchange — it is batch-sized; what must never appear is a
-    shingle exchange fed directly by the bucketed corpus scan."""
-    import re
-    import tempfile
-
+def test_incremental_dedup_no_corpus_side_shingle_exchange(
+        spark, monkeypatch, tmp_path):
+    """Engine.dedup_incoming reads the corpus through a bucketed
+    posting table: the screen's corpus-side semi join must scan it
+    ONCE and never shuffle it on s — the batch shingles broadcast."""
     from data_ingestion_challenge_spark.api import Engine
-    from data_ingestion_challenge_spark.catalog import Catalog
     from data_ingestion_challenge_spark.operators import dedup as D
 
-    sf = "/root/testdata/sf0.001"
-    eng = Engine(sf, spark=spark)
-    eng.materialize_postings("audit_inc_post", tempfile.mkdtemp())
-    docs = Catalog(spark, sf).documents
-    batch = docs.where(docs.doc_id % 7 == 0)
-    df = D.incremental_jaccard_pairs(
-        batch, spark.table("audit_inc_post"), n=3, tau=0.8)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # No shuffle keyed on the shingle at all: the candidate and verify
-    # joins ride the bucketing / broadcast the batch side.  (The
-    # doc_id-and-s exchanges of the batch's _postings distinct are
-    # keyed on doc_id first and so don't match.)
-    for ex in re.findall(r"Exchange hashpartitioning\(([^,]+)", plan):
-        assert not ex.strip().startswith("s#"), \
-            f"shingle-keyed exchange on the corpus join: {ex}"
-    # And the corpus table is actually read through its buckets.
-    assert "Bucketed: true" in plan
-    spark.sql("DROP TABLE IF EXISTS audit_inc_post")
+    plans, orig = [], D._batch_shingle_rel
+
+    def _spy(all_post, bsh):
+        rel = orig(all_post, bsh)
+        plans.append(rel._jdf.queryExecution().executedPlan().toString())
+        return rel
+
+    monkeypatch.setattr(D, "_batch_shingle_rel", _spy)
+    eng = Engine(SF_DIR, spark=spark)
+    eng.materialize_postings("audit_inc_post", str(tmp_path / "post"))
+    try:
+        docs = eng.catalog.documents
+        eng.dedup_incoming(docs.where(docs.doc_id % 7 == 0),
+                           "audit_inc_post").collect()
+        (plan,) = plans  # dedup_incoming ran the one screen
+        # (the batch _postings distinct is keyed on doc_id first)
+        assert not re.search(r"Exchange hashpartitioning\(s#", plan)
+        assert plan.count("default.audit_inc_post[") == 1
+        assert "BroadcastExchange" in plan
+    finally:
+        spark.sql("DROP TABLE IF EXISTS audit_inc_post")
 
 
 def test_bpe_pmi_top_k_distributed(spark):

@@ -396,13 +396,13 @@ def test_passjoin_segments_equal_naive_all_pairs(spark, docs, edits):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(_corpus, st.integers(min_value=0, max_value=7))
 def test_incremental_dedup_equals_naive_cross_pairs(spark, docs, seed):
-    """incremental_jaccard_pairs (one-sided prefix vs full corpus
-    postings) must find EXACTLY the naive batch×corpus pairs with
+    """The screen's corpus side (_screen_pairs' _corp rows: one-sided
+    prefix vs full corpus postings, built as incremental_dedup_verdict
+    builds it) must find EXACTLY the naive batch×corpus pairs with
     J ≥ τ, for arbitrary random corpora and batch splits — the
     completeness lemma under test, not just one fixture."""
-    from data_ingestion_challenge_spark.operators.dedup import (
-        _postings, incremental_jaccard_pairs,
-    )
+    from data_ingestion_challenge_spark.operators.dedup import _postings
+    from tests.conftest import screen_corpus_pairs
 
     # Deterministic split: ids ≡ seed (mod 3) form the batch.
     batch_ids = {i for i in range(len(docs)) if i % 3 == seed % 3}
@@ -415,9 +415,7 @@ def test_incremental_dedup_equals_naive_cross_pairs(spark, docs, seed):
     batch = df.where(df.doc_id.isin(list(batch_ids)))
     posting = _postings(corpus, 3)
     try:
-        got = {(r.doc_id, r.corpus_doc_id) for r in
-               incremental_jaccard_pairs(batch, posting, n=3,
-                                         tau=0.8).collect()}
+        got = {p[:2] for p in screen_corpus_pairs(batch, posting)}
     finally:
         posting.unpersist()
     shingles = [

@@ -21,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import data_ingestion_challenge_spark.streaming.admission as adm
+from data_ingestion_challenge_spark.operators.dedup import _batch_shingle_rel
 from data_ingestion_challenge_spark.streaming import sidecar as sc
 
 
@@ -450,7 +451,7 @@ def test_drop_predicate_keeps_corpus_side_unshuffled(spark, tmp_path):
               .where(~drop).select("doc_id", "s"))
     bsh = (spark.createDataFrame([("a1",), ("z2",)], "s string")
            .localCheckpoint())
-    rel = adm._batch_shingle_rel(
+    rel = _batch_shingle_rel(
         corpus.withColumn("_corp", F.lit(True)), bsh)
     prev = spark.conf.get("spark.sql.maxMetadataStringLength")
     spark.conf.set("spark.sql.maxMetadataStringLength", "4000")
