@@ -1013,7 +1013,7 @@ def _screen_store_ladder(spark, sf_dir: str,
                                    f"ingest_batch={ftag}")
                 adm._write_postings_layout(filler, run, mod)
                 adm._write_sizes_run(
-                    spark, run,
+                    spark.read.parquet(run),
                     os.path.join(grow["sizes"],
                                  f"ingest_batch={ftag}"))
                 ftag -= 1
@@ -1152,7 +1152,7 @@ def _screen_store_ladder(spark, sf_dir: str,
                     adm._write_postings_layout(df, run, mod,
                                                shard_col=sh)
                     adm._write_sizes_run(
-                        spark, run,
+                        spark.read.parquet(run),
                         os.path.join(dirs["sizes"],
                                      f"ingest_batch={tag}"))
                     _sc.build_run_sidecar(spark, dirs["postings"],
@@ -1201,7 +1201,7 @@ def _screen_store_ladder(spark, sf_dir: str,
             adm._write_postings_layout(allp, run, smod)
             os.makedirs(sdirs["sizes"], exist_ok=True)
             adm._write_sizes_run(
-                spark, run,
+                spark.read.parquet(run),
                 os.path.join(sdirs["sizes"], "ingest_batch=-1"))
             scaled = {"decade": d, "s_bucket_mod": smod,
                       "store_rows": have,

@@ -166,9 +166,8 @@ class Engine:
 
     def ingest_documents(self, watch_dir: str, table_path: str,
                          postings_dir: str, log_dir: str,
-                         checkpoint: str, tau: float = 0.8,
-                         n: int = 3,
-                         sizes_dir: str | None = None,
+                         checkpoint: str, sizes_dir: str,
+                         tau: float = 0.8, n: int = 3,
                          compact_every: int | None = None,
                          vectors_path: str | None = None,
                          ivf_table: str | None = None,
@@ -182,14 +181,16 @@ class Engine:
         vs-corpus dedup, exactly-once commit into a transactional
         corpus table, incremental posting maintenance, per-doc
         admission log) — streaming/admission.py.  Returns the corpus
-        TxnTable; re-call to pick up new drops.  ``compact_every``
-        auto-folds the posting/sizes increments into their base
-        partition in place whenever that many have accumulated (and,
-        in append mode, the corpus table's run ladder on the same
-        cadence).  ``commit_mode`` / ``max_files_per_trigger`` pass
-        through to the sink: append-run commits (O(batch)) and
-        backlog-coalescing triggers are the defaults —
-        streaming/admission.py documents both.
+        TxnTable; re-call to pick up new drops.  ``sizes_dir`` is the
+        per-doc shingle-count store kept next to ``postings_dir``;
+        the screen reads every corpus doc's size from it.
+        ``compact_every`` auto-folds the posting/sizes increments
+        into compacted runs in place whenever that many have
+        accumulated (and, in append mode, the corpus table's run
+        ladder on the same cadence).  ``commit_mode`` /
+        ``max_files_per_trigger`` pass through to the sink:
+        append-run commits (O(batch)) and backlog-coalescing triggers
+        are the defaults — streaming/admission.py documents both.
 
         Pass ``vectors_path`` (a parquet of (vec_id, embedding) with
         vec_id == doc_id, e.g. the embedding service's output for the
@@ -442,12 +443,13 @@ class Engine:
 
     def compact_admission_in_place(self, postings_dir: str,
                                    table_path: str,
-                                   sizes_dir: str | None = None,
+                                   sizes_dir: str,
                                    level: str = "auto") -> int:
         """In-place stepped-merge maintenance of an admission posting
-        store (streaming/admission.compact_store_in_place): folds
-        committed increments into compacted runs and cascades merges
-        up the geometric size ladder.  MUST be called while no
+        store and its sizes store
+        (streaming/admission.compact_store_in_place): folds committed
+        increments into compacted runs and cascades merges up the
+        geometric size ladder.  MUST be called while no
         admission stream is live on the store (the sink runs this
         itself via ``compact_every``; a manual call takes the same
         exclusivity contract).  Returns folded-increment count."""

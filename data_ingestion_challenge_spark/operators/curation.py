@@ -266,6 +266,8 @@ def ngram_novelty(docs: DataFrame, n: int = 3) -> DataFrame:
     exactly as build_prefix's df stage) → per-doc aggregate.  Docs
     shorter than n words have no shingles and emit n_grams = 0 with
     NULL novelty.  Linear; one shuffle on the shingle, one on doc_id.
+    Computed when called (checkpoint-backed), so it leaves no cached
+    frame behind.
     """
     from data_ingestion_challenge_spark.operators.dedup import _postings
 
@@ -284,10 +286,11 @@ def ngram_novelty(docs: DataFrame, n: int = 3) -> DataFrame:
                    F.round(col("n_novel") / col("n_grams"), 4)
                    .alias("novelty"))
            .orderBy("doc_id"))
-    # posting stays persisted while `out` is alive (df agg + per-doc
-    # join both read it; unpersisting before execution would double
-    # the shingle pipeline) — same LRU lifetime contract as
-    # ngram_jaccard_pairs' inline posting.
+    # The persisted postings feed both the df agg and the per-doc
+    # join; release them once the result is materialized, as
+    # incremental_dedup_verdict does.
+    out = out.localCheckpoint()
+    posting.unpersist()
     return out
 
 

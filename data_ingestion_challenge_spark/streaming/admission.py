@@ -19,11 +19,12 @@ Per micro-batch of arriving documents:
    docs/TXN_RUNS_DESIGN.md); reads resolve latest-wins per key and
    the run ladder folds on the ``compact_every`` cadence;
 4. maintenance — the admitted docs' postings land in
-   ``postings_dir/ingest_batch=<id>/s_bucket=<b>/`` and the full
-   admission log (every verdict, kept or rejected, with the dup
-   target) in ``log_dir/ingest_batch=<id>/``; both are per-batch
-   OVERWRITES, so a replayed batch rewrites the same files instead of
-   duplicating.
+   ``postings_dir/ingest_batch=<id>/s_bucket=<b>/``, their shingle
+   counts (the screen's corpus |B|) in ``sizes_dir/ingest_batch=<id>/``
+   and the full admission log (every verdict, kept or rejected, with
+   the dup target) in ``log_dir/ingest_batch=<id>/``; all three are
+   per-batch OVERWRITES, so a replayed batch rewrites the same files
+   instead of duplicating.
 
 Scale notes (100 TB): every stage is batch-sized except the corpus
 screen, which touches the corpus only through the posting store's
@@ -443,9 +444,7 @@ def recover_compaction(postings_dir: str,
         # No swap in flight: a pre-manifest crash may still have left
         # staging junk; a later fold overwrites it, but clear it so
         # the store dir stays inspectable.
-        for d in (postings_dir, sizes_dir):
-            if d is None:
-                continue
+        for d in filter(None, (postings_dir, sizes_dir)):
             staging = os.path.join(d, _COMPACTING)
             if os.path.isdir(staging):
                 shutil.rmtree(staging, ignore_errors=True)
@@ -454,7 +453,8 @@ def recover_compaction(postings_dir: str,
         plan = json.load(fh)
     base_tag = plan.get("base_tag", "-1")
     _finish_swap(postings_dir, plan["postings"], base_tag)
-    sdir = sizes_dir if sizes_dir is not None else plan.get("sizes_dir")
+    # an older manifest may hold "sizes_dir": null and no sizes tags
+    sdir = sizes_dir or plan.get("sizes_dir")
     if plan.get("sizes") and sdir:
         _finish_swap(sdir, plan["sizes"], base_tag)
     os.unlink(manifest)
@@ -505,7 +505,7 @@ _MAJOR_RATIO = 0.5
 
 
 def compact_store_in_place(spark: SparkSession, postings_dir: str,
-                           table, sizes_dir: str | None = None,
+                           table, sizes_dir: str,
                            level: str = "major",
                            bloom_sidecars: bool = True) -> int:
     """Fold the admission posting store's per-batch increments into
@@ -547,20 +547,18 @@ def compact_store_in_place(spark: SparkSession, postings_dir: str,
     the replay self-match its own survivors and silently drop them.
     Compacted runs (negative tags) are always committed data.
 
-    Crash protocol, per fold: the new run (and, when ``sizes_dir`` is
-    given, a sizes run RECOMPUTED from the folded postings — covering
-    by construction, even for tags that predate the sizes store) is
-    staged under ``_compacting/`` (underscore: invisible to Spark's
-    listing), then a manifest naming the folded tags AND the target
-    run tag is published atomically, then tags are deleted and the
-    run renamed in.  A crash before the manifest changes nothing;
-    after it, recover_compaction() completes the swap before the next
-    screen; a crash between cascade steps simply leaves a legal run
-    set for the next cadence tick to continue from.  When
-    ``sizes_dir`` is given, any pre-existing run missing its sizes
-    twin is BACKFILLED (staged + atomic rename) so sizes coverage
-    heals instead of forcing the screen's full-aggregation fallback
-    forever.
+    Crash protocol, per fold: the new run and its sizes run
+    (RECOMPUTED from the folded postings — covering by construction,
+    even for tags that predate the sizes store) are staged under
+    ``_compacting/`` (underscore: invisible to Spark's listing), then
+    a manifest naming the folded tags AND the target run tag is
+    published atomically, then tags are deleted and the runs renamed
+    in.  A crash before the manifest changes nothing; after it,
+    recover_compaction() completes the swap before the next screen; a
+    crash between cascade steps simply leaves a legal run set for the
+    next cadence tick to continue from.  A run or increment that
+    lacks its sizes twin for any other reason is healed by the
+    screen (_backfill_sizes) before it reads the sizes store.
 
     ``bloom_sidecars`` (default True) refreshes each folded run's
     per-bucket bloom sidecar after its swap (streaming/sidecar.py):
@@ -569,9 +567,8 @@ def compact_store_in_place(spark: SparkSession, postings_dir: str,
     less scan; pass False to A/B the screen without them.
 
     Returns the number of folded increments.  A 0 return does NOT
-    mean nothing ran: the auto cascade and the sizes backfill execute
-    regardless, so a call on a quiesced store still heals a crashed
-    mid-cascade run set or missing sizes coverage."""
+    mean nothing ran: the auto cascade executes regardless, so a call
+    on a quiesced store still heals a crashed mid-cascade run set."""
     if level not in ("major", "auto"):
         raise ValueError(f"level must be major|auto, got {level!r}")
     recover_compaction(postings_dir, sizes_dir)
@@ -608,23 +605,20 @@ def compact_store_in_place(spark: SparkSession, postings_dir: str,
         _write_postings_layout(post, dst, mod,
                                shard_col=SHARD_COL if sharded
                                else None)
-        sfolded: list[str] = []
-        if sizes_dir is not None:
-            # The sizes run comes from the folded POSTINGS, not a
-            # union of sizes tags: n is by definition the doc's
-            # posting count, and deriving it from the data being
-            # folded covers every folded doc even when some folded
-            # tag predates the sizes store (a union of sizes tags
-            # would silently UNDER-cover, and an under-covering store
-            # admits missed dups).  Read back the STAGED run rather
-            # than re-scanning every increment.
-            sfolded = sorted(t for t in _batch_tags(sizes_dir)
-                             if t in set(folded))
-            _write_sizes_run(spark, dst,
-                             os.path.join(sizes_dir, _COMPACTING,
-                                          f"ingest_batch={base_tag}"))
-            if base_tag not in sfolded:
-                sfolded.append(base_tag)
+        # The sizes run comes from the folded POSTINGS, not a union
+        # of sizes tags: n is by definition the doc's posting count,
+        # and deriving it from the data being folded covers every
+        # folded doc even when some folded tag predates the sizes
+        # store (a union of sizes tags would silently UNDER-cover,
+        # and an under-covering store admits missed dups).  Read back
+        # the STAGED run rather than re-scanning every increment.
+        sfolded = sorted(t for t in _batch_tags(sizes_dir)
+                         if t in set(folded))
+        _write_sizes_run(spark.read.parquet(dst),
+                         os.path.join(sizes_dir, _COMPACTING,
+                                      f"ingest_batch={base_tag}"))
+        if base_tag not in sfolded:
+            sfolded.append(base_tag)
         manifest = os.path.join(postings_dir, _COMPACT_MANIFEST)
         tmp = manifest + ".tmp"
         with open(tmp, "w") as fh:
@@ -633,8 +627,7 @@ def compact_store_in_place(spark: SparkSession, postings_dir: str,
                        "base_tag": base_tag}, fh)
         os.replace(tmp, manifest)
         _finish_swap(postings_dir, folded, base_tag)
-        if sizes_dir is not None:
-            _finish_swap(sizes_dir, sfolded, base_tag)
+        _finish_swap(sizes_dir, sfolded, base_tag)
         os.unlink(manifest)
         # Bloom sidecar (screen lever #2, docs/SCREEN_SCALING.md):
         # built AFTER the swap publishes the run, from the run's own
@@ -716,47 +709,40 @@ def compact_store_in_place(spark: SparkSession, postings_dir: str,
             members = groups[tgt]
             if members != [tgt]:
                 _fold(sorted(set(members), key=str), tgt)
-    if sizes_dir is not None:
-        _backfill_sizes(spark, postings_dir, sizes_dir)
     return n_inc
 
 
-def _write_sizes_run(spark: SparkSession, postings_path: str,
-                     dst: str) -> None:
+def _write_sizes_run(postings: DataFrame, dst: str) -> None:
     """The sizes-run layout contract in ONE place: (doc_id, n) with
-    n = the doc's posting count in ``postings_path``, one file.  Both
-    fold staging and coverage backfill derive sizes through here so
-    the layout/count rule cannot diverge between the two writers."""
-    (spark.read.parquet(postings_path).groupBy("doc_id")
+    n = the doc's posting count in ``postings``, one file.  Every
+    sizes writer (batch increments, fold staging, the screen's heal)
+    goes through here so the layout/count rule cannot diverge."""
+    (postings.groupBy("doc_id")
      .agg(F.count("*").alias("n"))
      .coalesce(1).write.mode("overwrite").parquet(dst))
 
 
 def _backfill_sizes(spark: SparkSession, postings_dir: str,
-                    sizes_dir: str) -> None:
-    """Heal sizes coverage for compacted RUNS that predate the sizes
-    store (e.g. a store compacted before sizes_dir was enabled):
-    recompute each missing run's (doc_id, n) from its own postings,
-    staged then atomically renamed — a crash mid-write can never
-    publish a partial (under-covering) sizes partition.  Without
-    this, the screen's coverage check fails every batch and falls
-    back to a full posting-store aggregation indefinitely."""
-    have = _batch_tags(sizes_dir)
-    for t in sorted(_batch_tags(postings_dir)):
-        if not _is_base(t) or t in have:
-            continue
+                    sizes_dir: str, tags: set[str]) -> None:
+    """The one sizes heal: give each posting tag in ``tags`` — tags
+    without a sizes twin (a run older than the sizes store, an
+    increment whose sizes write was lost, an orphan increment of a
+    lost checkpoint) — its (doc_id, n) partition, recomputed from the
+    tag's own postings, staged, then atomically renamed — a crash
+    mid-write never publishes a partial (under-covering) partition.
+    The explicit-schema read heals a file-less tag to an empty one."""
+    import shutil
+
+    sharded = store_shard_col(postings_dir) is not None
+    for t in sorted(tags):
         src = os.path.join(postings_dir, f"ingest_batch={t}")
-        staged = os.path.join(sizes_dir, _COMPACTING,
-                              f"backfill_{t}")
-        _write_sizes_run(spark, src, staged)
-        os.makedirs(sizes_dir, exist_ok=True)
-        final = os.path.join(sizes_dir, f"ingest_batch={t}")
-        if not os.path.isdir(final):
-            os.rename(staged, final)
-    staging = os.path.join(sizes_dir, _COMPACTING)
-    if os.path.isdir(staging):
-        import shutil
-        shutil.rmtree(staging, ignore_errors=True)
+        staged = os.path.join(sizes_dir, _COMPACTING, f"backfill_{t}")
+        _write_sizes_run(_read_store(spark, postings_dir, paths=[src],
+                                     sharded=sharded, bucketed=True),
+                         staged)
+        os.rename(staged, os.path.join(sizes_dir, f"ingest_batch={t}"))
+    shutil.rmtree(os.path.join(sizes_dir, _COMPACTING),
+                  ignore_errors=True)
 
 
 def _batch_tags(d: str) -> set[str]:
@@ -941,9 +927,9 @@ def _collapse_exact(batch: DataFrame) -> DataFrame:
 
 def document_admission_sink(spark: SparkSession, table_path: str,
                             postings_dir: str, log_dir: str,
+                            sizes_dir: str,
                             n_buckets: int = 32, n: int = 3,
                             tau: float = 0.8,
-                            sizes_dir: str | None = None,
                             run_id: str | None = None,
                             compact_every: int | None = None,
                             commit_mode: str = "append",
@@ -957,10 +943,11 @@ def document_admission_sink(spark: SparkSession, table_path: str,
     Posting increments are partitioned by ``s_bucket``
     (pmod(hash(s), mod) with the modulus pinned in the store's meta —
     N_SHINGLE_BUCKETS for a fresh store) so the screen's corpus reads
-    prune to the batch's shingle buckets.  Pass ``sizes_dir`` to
-    also maintain the per-doc shingle-count store — with it, NO stage
-    of the screen reads the full posting store (the sizes fallback is
-    the one remaining full pass otherwise).
+    prune to the batch's shingle buckets.  ``sizes_dir`` is the
+    per-doc shingle-count store maintained next to the postings (one
+    ``ingest_batch=<tag>`` partition of (doc_id, n) per posting tag):
+    the screen reads every corpus |B| from it, so NO stage of the
+    screen reads the full posting store.
 
     ``run_id`` scopes batch ids to one checkpoint lifetime: micro-batch
     ids restart at 0 whenever a stream gets a fresh checkpoint dir, so
@@ -1189,11 +1176,13 @@ def document_admission_sink(spark: SparkSession, table_path: str,
         # ONE store listing per batch: the corpus check, the sidecar
         # loop, and the sizes-coverage check all read this same set
         # (three scandirs per batch otherwise, plus a needless window
-        # where the listings could disagree under the lease).
-        corpus_tags = _batch_tags(postings_dir)
-        have_corpus = bool(corpus_tags)
+        # where the listings could disagree under the lease).  This
+        # batch's own tag is never corpus: the replay of a first-ever
+        # batch that crashed after its posting write finds only its
+        # own tag and screens against no corpus at all.
+        corpus_tags = _batch_tags(postings_dir) - {tag}
         corpus_posting = corpus_sizes = None
-        if have_corpus:
+        if corpus_tags:
             sc.setJobDescription(
                 f"admission b{batch_id}: corpus prune probes")
             # basePath surfaces the ingest_batch partition column;
@@ -1240,7 +1229,7 @@ def document_admission_sink(spark: SparkSession, table_path: str,
                 from data_ingestion_challenge_spark.streaming import (
                     sidecar as _sc,
                 )
-                for t in corpus_tags - {tag}:
+                for t in corpus_tags:
                     loaded = _sc.load_run_sidecar(postings_dir, t)
                     if loaded is not None:
                         scs[t] = loaded
@@ -1293,7 +1282,7 @@ def document_admission_sink(spark: SparkSession, table_path: str,
                 # Verdict-identical: a row passes iff its effective
                 # shard is in the batch set, same as the pre-r18
                 # all-dirs prune.  Corpus SIZES stay
-                # unsharded/unpruned (they read `raw`): a doc's
+                # unsharded/unpruned (the sizes store): a doc's
                 # sizes row is only consulted via candidates, and
                 # candidates only arise from scanned rows.
                 batch_shards = sorted(
@@ -1319,52 +1308,36 @@ def document_admission_sink(spark: SparkSession, table_path: str,
             if drop_pred is not None:
                 filtered = filtered.where(~drop_pred)
             corpus_posting = filtered.select("doc_id", "s")
-            # The sizes store is only SOUND if it covers every
-            # posting increment: the size join is what ratifies a
-            # candidate, so a corpus doc missing from it could never
-            # be flagged as a dup target.  Coverage = every posting
-            # batch tag has a sizes tag (a store enabled mid-life
-            # fails this and falls back to the full aggregation
-            # until compaction produces a covered store).  Corpus
-            # sizes must be FULL counts either way — a pruned
-            # aggregate would undercount |B| and inflate jaccard.
-            # The store must also be NON-EMPTY: on the replay of a
-            # first-ever batch that crashed after its posting write
-            # but before its sizes write, the needed-tag set is
-            # empty ({own tag} − {own tag} ⊆ ∅ holds) while
-            # sizes_dir may not even exist — reading it would raise
-            # PATH_NOT_FOUND on every retry, permanently wedging the
-            # stream.  An empty/absent store falls back to the raw
-            # aggregation (itself empty-correct when the only
-            # partition is the excluded own tag).
-            sizes_tags = (_batch_tags(sizes_dir)
-                          if sizes_dir is not None else set())
-            if (sizes_tags
-                    and corpus_tags - {tag} <= sizes_tags):
-                corpus_sizes = (_read_store(
-                    spark, sizes_dir,
-                    data_schema="doc_id long, n long")
-                    .where(col("ingest_batch") != F.lit(tag)))
-                # Sizes are NEVER pruned by the bloom skip — not even
-                # for fully-dropped runs.  The r15 spelling dropped a
-                # fully-missed run's sizes partition, reasoning its
-                # docs can't become candidates; that silently assumed
-                # a doc's postings live in exactly one run, which
-                # RE-INGESTED doc_ids violate (changed content below
-                # τ re-admits the same id: old postings+sizes stay in
-                # the original run, new rows land in a later one,
-                # until a fold merges them).  If only the NEW run
-                # overlaps the batch, the old run is fully dropped —
-                # but the ratify join on doc_id must still see BOTH n
-                # values to stay bit-identical with the unassisted
-                # screen (the smaller old n can cross τ alone).  The
-                # sizes read is one row per doc per run — orders
-                # below the posting scan the blooms actually skip —
-                # so the sound read costs ~nothing.
-                corpus_sizes = corpus_sizes.select("doc_id", "n")
-            else:
-                corpus_sizes = (raw.groupBy("doc_id")
-                                .agg(F.count("*").alias("n")))
+            # Corpus sizes are FULL per-doc counts from the sizes
+            # store (a pruned posting aggregate would undercount |B|
+            # and inflate jaccard).  The size join is what ratifies a
+            # candidate, so a corpus tag without a sizes twin would
+            # hide its docs as dup targets: heal those tags first.
+            missing = corpus_tags - _batch_tags(sizes_dir)
+            if missing:
+                sc.setJobDescription(
+                    f"admission b{batch_id}: heal corpus sizes")
+                _backfill_sizes(spark, postings_dir, sizes_dir, missing)
+            # Sizes are NEVER pruned by the bloom skip — not even
+            # for fully-dropped runs.  The r15 spelling dropped a
+            # fully-missed run's sizes partition, reasoning its
+            # docs can't become candidates; that silently assumed
+            # a doc's postings live in exactly one run, which
+            # RE-INGESTED doc_ids violate (changed content below
+            # τ re-admits the same id: old postings+sizes stay in
+            # the original run, new rows land in a later one,
+            # until a fold merges them).  If only the NEW run
+            # overlaps the batch, the old run is fully dropped —
+            # but the ratify join on doc_id must still see BOTH n
+            # values to stay bit-identical with the unassisted
+            # screen (the smaller old n can cross τ alone).  The
+            # sizes read is one row per doc per run — orders
+            # below the posting scan the blooms actually skip —
+            # so the sound read costs ~nothing.
+            corpus_sizes = (_read_store(
+                spark, sizes_dir, data_schema="doc_id long, n long")
+                .where(col("ingest_batch") != F.lit(tag))
+                .select("doc_id", "n"))
         # ONE fused candidate+verify pass for both screens; the pair
         # table is near-dup-sized — pin it, every downstream frame
         # (drop set, verdict, log) is then a cheap join of caches.
@@ -1476,25 +1449,17 @@ def document_admission_sink(spark: SparkSession, table_path: str,
                 else None)
 
         def _write_sizes():
-            # One file: batch-doc-count rows.
             sc.setJobDescription(f"admission b{batch_id}: write sizes")
-            (adm_post.groupBy("doc_id")
-             .agg(F.count("*").alias("n"))
-             .coalesce(1)
-             .write.mode("overwrite")
-             .parquet(os.path.join(sizes_dir,
-                                   f"ingest_batch={tag}")))
+            _write_sizes_run(adm_post, os.path.join(
+                sizes_dir, f"ingest_batch={tag}"))
 
         def _write_postings_and_sizes():
             if adm_post.isEmpty():
                 return
-            if sizes_dir is not None:
-                with ThreadPoolExecutor(max_workers=1) as sub:
-                    fs = sub.submit(_write_sizes)
-                    _write_postings()
-                    fs.result()
-            else:
+            with ThreadPoolExecutor(max_workers=1) as sub:
+                fs = sub.submit(_write_sizes)
                 _write_postings()
+                fs.result()
 
         pool = ThreadPoolExecutor(max_workers=2)
         try:
@@ -1537,9 +1502,9 @@ def document_admission_sink(spark: SparkSession, table_path: str,
 def run_document_admission(spark: SparkSession, watch_dir: str,
                            table_path: str, postings_dir: str,
                            log_dir: str, checkpoint: str,
+                           sizes_dir: str,
                            n_buckets: int = 32, n: int = 3,
                            tau: float = 0.8,
-                           sizes_dir: str | None = None,
                            compact_every: int | None = None,
                            commit_mode: str = "append",
                            max_files_per_trigger: int = 64,
@@ -1676,22 +1641,22 @@ def sweep_cross_shard_dups(spark: SparkSession, postings_dir: str,
         # RESOLVED read (r18): a doc whose postings still sit in a
         # mixed increment contributes its doc_shard value to the
         # shard set, identical to the pre-r18 dir value.
-        raw = _read_store_resolved(spark, postings_dir, sharded=True)
+        store = _read_store_resolved(spark, postings_dir, sharded=True)
         if table_path is not None:
             from data_ingestion_challenge_spark.txn import TxnTable
             committed = (TxnTable(spark, table_path, key="doc_id")
                          .read().select("doc_id"))
-            raw = raw.join(committed, "doc_id", "left_semi")
+            store = store.join(committed, "doc_id", "left_semi")
         # Materialize the store scan ONCE: ngram_jaccard_pairs
         # references its posting frame several times (df/window,
         # candidate join, sizes, verify) and the shard map reads it
         # again — uncached, one sweep would pay ~5 full store scans.
-        post = (raw.select("doc_id", "s").distinct()
+        post = (store.select("doc_id", "s").distinct()
                 .localCheckpoint())
         # collect_set dedups map-side in its partial aggregate — a
         # distinct() here would be a second full shuffle for nothing
-        shards = (raw.select("doc_id",
-                             col(SHARD_COL).alias("_sh"))
+        shards = (store.select("doc_id",
+                               col(SHARD_COL).alias("_sh"))
                   .groupBy("doc_id")
                   .agg(F.collect_set("_sh").alias("shards"))
                   .localCheckpoint())

@@ -82,6 +82,7 @@ class _Replay:
     txns: dict[str, int]        # {app: highest committed batch_id}
     schema: str | None          # StructType JSON; None on vintage tables
     carried_marks: bool         # False: marks below a legacy ckpt lost
+    n_buckets: int | None       # bucket count; None on vintage tables
 
 
 def _log_dir(path: str) -> str:
@@ -162,7 +163,8 @@ class TxnTable:
         # The version() pre-check has a race window (two creators can
         # both see an empty log); the v1 claim is the real arbiter.
         if not t._claim(1, {"op": "create", "add": add, "remove": [],
-                            "schema": df.schema.json()}):
+                            "schema": df.schema.json(),
+                            "n_buckets": n_buckets}):
             t._discard(add)
             raise FileExistsError(
                 f"{path}: another writer created the table first")
@@ -214,7 +216,8 @@ class TxnTable:
         return snap.version
 
     def _write_checkpoint(self, snap: _Replay) -> None:
-        # txn marks and the table schema ride every checkpoint:
+        # txn marks, the table schema and the bucket count ride
+        # every checkpoint:
         # expire_log() deletes the records below it, and without the
         # carried marks a replayed streaming batch would pass the
         # exactly-once gate (double-count) — Delta checkpoints carry
@@ -228,7 +231,8 @@ class TxnTable:
                        "added_at": snap.added_at,
                        "runs": sorted(snap.runs),
                        "delta_runs": sorted(snap.delta),
-                       "txns": snap.txns, "schema": snap.schema}, fh)
+                       "txns": snap.txns, "schema": snap.schema,
+                       "n_buckets": snap.n_buckets}, fh)
         os.replace(tmp, path)
 
     def _replay(self, upto: int | None = None) -> _Replay:
@@ -272,6 +276,7 @@ class TxnTable:
         delta = {f for f in ck.get("delta_runs", []) if f in active}
         txns = dict(ck.get("txns", {}))
         schema = ck.get("schema")
+        n_buckets = ck.get("n_buckets")
         for v in range(v0 + 1, head + 1):
             rec = self._commit_record(v)
             for f in rec["remove"]:
@@ -298,8 +303,20 @@ class TxnTable:
                 txns[t["app"]] = max(txns.get(t["app"], -1),
                                      int(t["batch_id"]))
             schema = schema or rec.get("schema")
+            n_buckets = n_buckets or rec.get("n_buckets")
         return _Replay(head, active, added_at, runs, delta, txns,
-                       schema, carried_marks)
+                       schema, carried_marks, n_buckets)
+
+    def _bucket_count(self, snap: _Replay) -> int:
+        """The handle's bucket count, for every bucket computation —
+        refused when it differs from the count recorded at create (a
+        second bucket function misroutes point reads and commits).
+        A vintage log that recorded none is not checked."""
+        if snap.n_buckets not in (None, self.n_buckets):
+            raise ValueError(
+                f"{self.path}: handle n_buckets={self.n_buckets}, "
+                f"table created with n_buckets={snap.n_buckets}")
+        return self.n_buckets
 
     # -------------------------------------------------------- reads
     def point_read(self, value) -> DataFrame:
@@ -324,8 +341,8 @@ class TxnTable:
                 f"point_read routes via the Murmur3-long replication "
                 f"and needs an integral key, got {type(value).__name__}"
                 f" — use read().where(...) for non-integral keys")
-        b = _murmur3_long(value) % self.n_buckets
         snap = self._replay()
+        b = _murmur3_long(value) % self._bucket_count(snap)
         return self._read(snap, {f: snap.added_at[f]
                                  for f, fb in snap.active.items()
                                  if fb == b},
@@ -426,13 +443,14 @@ class TxnTable:
         differ from the recorded table schema is refused before any
         file is written (create() and vintage tables have none to
         check against)."""
-        schema = self._replay().schema
-        if schema is not None:
-            _check_schema(df, schema)
+        snap = self._replay()
+        if snap.schema is not None:
+            _check_schema(df, snap.schema)
+        n_buckets = self._bucket_count(snap)
         staging = tempfile.mkdtemp(prefix="txn_stage_")
         try:
             (df.withColumn(_BUCKET, F.pmod(F.hash(col(self.key)),
-                                           F.lit(self.n_buckets)))
+                                           F.lit(n_buckets)))
              .repartition(_BUCKET)
              .write.mode("overwrite").partitionBy(_BUCKET)
              .parquet(staging))
@@ -567,7 +585,8 @@ class TxnTable:
         if commit_mode not in ("merge", "delta"):
             raise ValueError(
                 f"commit_mode must be merge|delta, got {commit_mode!r}")
-        if batch_id <= self.last_txn(app):
+        snap = self._replay()
+        if batch_id <= snap.txns.get(app, -1):
             return None
         if commit_mode == "delta":
             want = {self.key, *sum_cols}
@@ -583,7 +602,8 @@ class TxnTable:
         # valid within the batch, and the optimistic retry may need
         # to re-derive the sums more than once.
         inc = batch_agg.localCheckpoint()
-        bcol = F.pmod(F.hash(col(self.key)), F.lit(self.n_buckets))
+        bcol = F.pmod(F.hash(col(self.key)),
+                      F.lit(self._bucket_count(snap)))
         touched = {r[0] for r in
                    inc.select(bcol.alias("b")).distinct().collect()}
         if not touched:
@@ -1188,7 +1208,8 @@ class TxnTable:
                     f"merge_into: updates has >1 row for key "
                     f"{dup[0][0]!r}; MERGE requires at most one "
                     f"source row per key")
-        bcol = F.pmod(F.hash(col(self.key)), F.lit(self.n_buckets))
+        bcol = F.pmod(F.hash(col(self.key)),
+                      F.lit(self._bucket_count(snap)))
         changed = updates.select(bcol.alias("b"))
         drop_keys = updates.select(self.key)
         if deletes is not None:

@@ -34,8 +34,9 @@ def pytest_collection_modifyitems(config, items):
     (test_plans_scale.py, test_r*_plans.py) or
     test_txn.py::test_merge_model_property, the model-based reference
     for MERGE, or one of the TxnTable log-replay and merged-read pins,
-    the in-place posting-store fold tests or the near-duplicate screen
-    equivalence tests named in tests/test_gate_policy.py.  It DOES
+    the in-place posting-store fold tests, the near-duplicate screen
+    equivalence tests or the sizes-store screen and heal tests named
+    in tests/test_gate_policy.py.  It DOES
     demote most hypothesis equivalence properties (test_properties.py)
     and most of the sharded-sink battery (test_shard_sink.py); those
     run only in the full suite.  These

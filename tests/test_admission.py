@@ -38,7 +38,8 @@ NOVEL_NEAR = ("completely unrelated content about distributed query "
 @pytest.fixture()
 def dirs(tmp_path):
     return {k: str(tmp_path / k)
-            for k in ("watch", "table", "postings", "log", "ckpt")}
+            for k in ("watch", "table", "postings", "log", "ckpt",
+                      "sizes")}
 
 
 def test_admission_end_to_end(spark, dirs):
@@ -47,7 +48,7 @@ def test_admission_end_to_end(spark, dirs):
         _doc(1, LONG_A), _doc(2, NOVEL), _doc(3, LONG_A)])
     table = run_document_admission(
         spark, dirs["watch"], dirs["table"], dirs["postings"],
-        dirs["log"], dirs["ckpt"])
+        dirs["log"], dirs["ckpt"], sizes_dir=dirs["sizes"])
     kept1 = {r.doc_id for r in table.read().collect()}
     assert kept1 == {1, 2}  # 3 = exact dup of 1, dropped in-batch
 
@@ -60,7 +61,7 @@ def test_admission_end_to_end(spark, dirs):
                  "of this admission pipeline test corpus")])
     table = run_document_admission(
         spark, dirs["watch"], dirs["table"], dirs["postings"],
-        dirs["log"], dirs["ckpt"])
+        dirs["log"], dirs["ckpt"], sizes_dir=dirs["sizes"])
     kept2 = {r.doc_id for r in table.read().collect()}
     assert kept2 == {1, 2, 12}
 
@@ -86,7 +87,8 @@ def test_admission_end_to_end(spark, dirs):
 
 def test_admission_replay_is_exactly_once(spark, dirs):
     admit, table = document_admission_sink(
-        spark, dirs["table"], dirs["postings"], dirs["log"])
+        spark, dirs["table"], dirs["postings"], dirs["log"],
+        sizes_dir=dirs["sizes"])
     b1 = spark.createDataFrame(
         [(1, LONG_A, "en", "web"), (2, NOVEL, "en", "web")],
         DOCS_SCHEMA)
@@ -128,7 +130,7 @@ def test_engine_ingest_documents(spark, dirs):
     eng = Engine(SF_DIR, spark=spark)
     table = eng.ingest_documents(
         dirs["watch"], dirs["table"], dirs["postings"], dirs["log"],
-        dirs["ckpt"])
+        dirs["ckpt"], sizes_dir=dirs["sizes"])
     assert {r.doc_id for r in table.read().collect()} == {7}
 
 
@@ -199,7 +201,7 @@ def test_fresh_checkpoint_restart_does_not_lose_docs(spark, dirs,
           [_doc(1, LONG_A), _doc(2, NOVEL)])
     run_document_admission(
         spark, dirs["watch"], dirs["table"], dirs["postings"],
-        dirs["log"], dirs["ckpt"])
+        dirs["log"], dirs["ckpt"], sizes_dir=dirs["sizes"])
 
     _drop(os.path.join(dirs["watch"], "d2.jsonl"),
           [_doc(30, "a brand new batch of words that matches nothing "
@@ -207,7 +209,7 @@ def test_fresh_checkpoint_restart_does_not_lose_docs(spark, dirs,
     fresh_ckpt = str(tmp_path / "ckpt2")
     table = run_document_admission(
         spark, dirs["watch"], dirs["table"], dirs["postings"],
-        dirs["log"], fresh_ckpt)
+        dirs["log"], fresh_ckpt, sizes_dir=dirs["sizes"])
     assert {r.doc_id for r in table.read().collect()} == {1, 2, 30}
     # Old run's postings survive (no partition clobbering): every
     # admitted doc still has postings in the store.
@@ -218,26 +220,96 @@ def test_fresh_checkpoint_restart_does_not_lose_docs(spark, dirs,
     assert {1, 2, 30} <= post_docs
 
 
-def test_partial_sizes_store_falls_back(spark, dirs, tmp_path):
-    """A sizes store that does not cover every posting increment is
-    IGNORED (full-aggregation fallback): using it would inner-join
-    away candidates whose corpus doc predates the store, silently
-    admitting their duplicates."""
-    sizes_dir = str(tmp_path / "sizes")
-    # Batch 0 without a sizes store...
+def test_partial_sizes_store_heals(spark, dirs):
+    """Posting tags with no sizes twin — a compacted run that
+    predates the sizes store and orphan increments left by a crash
+    under a lost checkpoint, one of them file-less — are healed by
+    the screen before it reads the sizes store: their docs stay dup
+    targets, and the sizes store covers every posting tag afterwards
+    (healed once, not re-derived from the postings on every batch)."""
+    from data_ingestion_challenge_spark.operators.dedup import _postings
+    from data_ingestion_challenge_spark.streaming.admission import (
+        _batch_tags, _write_postings_layout, store_bucket_mod,
+    )
+
+    mod = store_bucket_mod(dirs["postings"])  # stamp before any run
+    for tag, doc in (("-1", (1, LONG_A)), ("deadrun-7", (2, NOVEL))):
+        p = _postings(spark.createDataFrame(
+            [(*doc, "en", "web")], DOCS_SCHEMA), 3)
+        _write_postings_layout(
+            p, os.path.join(dirs["postings"], f"ingest_batch={tag}"),
+            mod, sort=False)
+        p.unpersist()
+    # ...and an orphan whose posting write died before any file landed
+    os.makedirs(os.path.join(dirs["postings"], "ingest_batch=deadrun-8",
+                             "_temporary", "0"))
+    assert not os.path.exists(dirs["sizes"])
     admit, table = document_admission_sink(
-        spark, dirs["table"], dirs["postings"], dirs["log"])
-    admit(spark.createDataFrame([(1, LONG_A, "en", "web")],
-                                DOCS_SCHEMA), 0)
-    # ...then the store is enabled mid-life.
-    admit2, table2 = document_admission_sink(
         spark, dirs["table"], dirs["postings"], dirs["log"],
-        sizes_dir=sizes_dir)
-    admit2(spark.createDataFrame(
-        [(9, LONG_A, "en", "web")], DOCS_SCHEMA), 1)
-    # Doc 9 duplicates doc 1, which has NO sizes row — the fallback
-    # must still reject it.
-    assert {r.doc_id for r in table2.read().collect()} == {1}
+        sizes_dir=dirs["sizes"])
+    admit(spark.createDataFrame(
+        [(9, LONG_A_NEAR, "en", "web"), (10, NOVEL_NEAR, "en", "web"),
+         (11, FRESH_3, "en", "web")], DOCS_SCHEMA), 0)
+    assert {r.doc_id for r in table.read().collect()} == {11}
+    log = {r.doc_id: r for r in spark.read.parquet(
+        os.path.join(dirs["log"], "ingest_batch=0")).collect()}
+    assert log[9].dup_of == 1 and log[10].dup_of == 2
+    assert _batch_tags(dirs["sizes"]) >= _batch_tags(dirs["postings"])
+    # The healed sizes are the docs' full posting counts.
+    post = (spark.read.option("basePath", dirs["postings"])
+            .parquet(dirs["postings"]).groupBy("doc_id").count())
+    sizes = (spark.read.option("basePath", dirs["sizes"])
+             .parquet(dirs["sizes"]).select("doc_id", "n"))
+    assert sorted(tuple(r) for r in post.collect()) \
+        == sorted(tuple(r) for r in sizes.collect())
+
+
+def test_one_corpus_size_source():
+    """Static check of streaming/admission.py: the sizes store is a
+    required part of every admission store, so no code compares
+    ``sizes_dir`` with None and the required writers take it without
+    a default; and no groupBy runs on the corpus store read (``raw``)
+    — corpus sizes come from the sizes store, never from aggregating
+    the posting store on every batch."""
+    import ast
+    import inspect
+
+    from data_ingestion_challenge_spark.api import Engine
+    from data_ingestion_challenge_spark.streaming import admission
+
+    with open(admission.__file__) as fh:
+        tree = ast.parse(fh.read())
+
+    def root(node):
+        # the name a call/attribute receiver chain starts from
+        while isinstance(node, (ast.Attribute, ast.Call, ast.Subscript)):
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return node
+
+    none_tests, raw_aggs = [], []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Compare):
+            sides = [node.left, *node.comparators]
+            if (any(isinstance(x, ast.Name) and x.id == "sizes_dir"
+                    for x in sides)
+                    and any(isinstance(x, ast.Constant)
+                            and x.value is None for x in sides)):
+                none_tests.append(node.lineno)
+        if (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "groupBy"):
+            r = root(node.func.value)
+            if isinstance(r, ast.Name) and r.id == "raw":
+                raw_aggs.append(node.lineno)
+    assert none_tests == [], none_tests
+    assert raw_aggs == [], raw_aggs
+    for fn in (admission.document_admission_sink,
+               admission.run_document_admission,
+               admission.compact_store_in_place,
+               Engine.ingest_documents,
+               Engine.compact_admission_in_place):
+        p = inspect.signature(fn).parameters["sizes_dir"]
+        assert p.default is inspect.Parameter.empty, fn.__name__
 
 
 def test_meta_less_bucketed_store_refused(spark, tmp_path):
@@ -292,12 +364,14 @@ def test_store_modulus_pinned_against_constant_change(spark, dirs,
     import data_ingestion_challenge_spark.streaming.admission as adm
 
     admit, table = document_admission_sink(
-        spark, dirs["table"], dirs["postings"], dirs["log"])
+        spark, dirs["table"], dirs["postings"], dirs["log"],
+        sizes_dir=dirs["sizes"])
     admit(spark.createDataFrame([(1, LONG_A, "en", "web")],
                                 DOCS_SCHEMA), 0)
     monkeypatch.setattr(adm, "N_SHINGLE_BUCKETS", 4096)
     admit2, table2 = document_admission_sink(
-        spark, dirs["table"], dirs["postings"], dirs["log"])
+        spark, dirs["table"], dirs["postings"], dirs["log"],
+        sizes_dir=dirs["sizes"])
     admit2(spark.createDataFrame([(9, LONG_A, "en", "web")],
                                  DOCS_SCHEMA), 1)
     assert {r.doc_id for r in table2.read().collect()} == {1}
@@ -321,11 +395,11 @@ def test_admission_lease_blocks_second_stream(spark, dirs, tmp_path):
     with pytest.raises(ConcurrentAdmissionError, match="already live"):
         run_document_admission(
             spark, dirs["watch"], dirs["table"], dirs["postings"],
-            dirs["log"], dirs["ckpt"])
+            dirs["log"], dirs["ckpt"], sizes_dir=dirs["sizes"])
     release_admission_lease(lease)
     table = run_document_admission(
         spark, dirs["watch"], dirs["table"], dirs["postings"],
-        dirs["log"], dirs["ckpt"])
+        dirs["log"], dirs["ckpt"], sizes_dir=dirs["sizes"])
     assert {r.doc_id for r in table.read().collect()} == {1}
     # The drain released its lease on exit...
     assert not os.path.exists(os.path.join(dirs["postings"], _LEASE))
@@ -338,7 +412,7 @@ def test_admission_lease_blocks_second_stream(spark, dirs, tmp_path):
     _drop(os.path.join(dirs["watch"], "d2.jsonl"), [_doc(2, NOVEL)])
     table = run_document_admission(
         spark, dirs["watch"], dirs["table"], dirs["postings"],
-        dirs["log"], dirs["ckpt"])
+        dirs["log"], dirs["ckpt"], sizes_dir=dirs["sizes"])
     assert {r.doc_id for r in table.read().collect()} == {1, 2}
 
 
@@ -506,7 +580,8 @@ def test_replay_with_missing_sizes_store_not_wedged(spark, dirs,
     """Crash window: batch 0 wrote its postings but died before the
     sizes write and the commit.  The replay sees a posting store
     whose ONLY tag is its own and a sizes_dir that does not exist —
-    it must fall back (not read the absent store) and admit."""
+    with no other tag there is no corpus to screen against, so it
+    must admit without reading the absent store."""
     from pyspark.sql import functions as F
 
     from data_ingestion_challenge_spark.operators.dedup import _postings
@@ -995,7 +1070,8 @@ def test_engine_compact_admission_in_place(spark, dirs, tmp_path):
     from tests.conftest import SF_DIR
 
     admit, table = document_admission_sink(
-        spark, dirs["table"], dirs["postings"], dirs["log"])
+        spark, dirs["table"], dirs["postings"], dirs["log"],
+        sizes_dir=dirs["sizes"])
     admit(spark.createDataFrame(
         [(1, LONG_A, "en", "web"), (2, NOVEL, "en", "web")],
         DOCS_SCHEMA), 0)
@@ -1003,10 +1079,12 @@ def test_engine_compact_admission_in_place(spark, dirs, tmp_path):
     lease = _acquire_admission_lease(dirs["postings"])
     with pytest.raises(ConcurrentAdmissionError):
         eng.compact_admission_in_place(dirs["postings"],
-                                       dirs["table"])
+                                       dirs["table"],
+                                       sizes_dir=dirs["sizes"])
     release_admission_lease(lease)
     assert eng.compact_admission_in_place(dirs["postings"],
-                                          dirs["table"]) == 1
+                                          dirs["table"],
+                                          sizes_dir=dirs["sizes"]) == 1
     tags = _batch_tags(dirs["postings"])
     assert tags and all(_is_base(t) for t in tags)
     admit(spark.createDataFrame(
@@ -1043,7 +1121,7 @@ def test_cascade_merges_violating_middle_pair(spark, dirs):
     _run("-3", 10000, 5000)    # mid: ≥ 0.5 × big → violates
     _run("-4", 20000, 5)       # small: < 0.5 × mid → compliant
     n = compact_store_in_place(spark, dirs["postings"], table,
-                               level="auto")
+                               sizes_dir=dirs["sizes"], level="auto")
     assert n == 0  # no increments — pure maintenance
     assert _batch_tags(dirs["postings"]) == {"-2", "-4"}
     merged = spark.read.parquet(
@@ -1094,13 +1172,13 @@ def test_posting_store_stats(spark, dirs):
           [_doc(1, LONG_A), _doc(2, NOVEL)])
     run_document_admission(
         spark, dirs["watch"], dirs["table"], dirs["postings"],
-        dirs["log"], dirs["ckpt"])
+        dirs["log"], dirs["ckpt"], sizes_dir=dirs["sizes"])
     _drop(os.path.join(dirs["watch"], "d2.jsonl"),
           [_doc(12, "fresh words never seen before in any prior "
                     "drop of this stats test corpus")])
     run_document_admission(
         spark, dirs["watch"], dirs["table"], dirs["postings"],
-        dirs["log"], dirs["ckpt"])
+        dirs["log"], dirs["ckpt"], sizes_dir=dirs["sizes"])
 
     eng = Engine(SF_DIR, spark=spark)
     stats = eng.posting_store_stats(dirs["postings"],

@@ -208,6 +208,16 @@ def test_ngram_novelty_matches_oracle(spark, cat, duck):
     assert len(vals) > 10 and max(vals) > 0.5
 
 
+def test_ngram_novelty_leaves_no_cached_frame(spark):
+    """The registered query materializes its result and releases the
+    postings it cached: a run leaves the cache manager empty."""
+    from data_ingestion_challenge_spark.plans import QUERIES
+
+    spark.catalog.clearCache()
+    QUERIES["ngram_novelty"](spark, SF_DIR).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_engine_check_all(spark):
     from data_ingestion_challenge_spark.api import Engine
     eng = Engine(SF_DIR, spark=spark)

@@ -229,6 +229,6 @@ def test_ingest_documents_maintains_ivf_index(spark, cat, split_engine,
         with pytest.raises(ValueError, match="ivf_table"):
             eng.ingest_documents(
                 d["watch"], d["corpus"], d["postings"], d["log"],
-                d["ckpt"], vectors_path=vecs_path)
+                d["ckpt"], sizes_dir=d["sizes"], vectors_path=vecs_path)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -275,7 +275,8 @@ def test_screen_scans_fewer_corpus_rows_with_sidecars(spark, tmp_path):
     filler = _postings_df(spark, 0, 50_000, "zzfill")
     _write_run(spark, base["postings"], "-9", filler, mod)
     adm._write_sizes_run(
-        spark, os.path.join(base["postings"], "ingest_batch=-9"),
+        spark.read.parquet(
+            os.path.join(base["postings"], "ingest_batch=-9")),
         os.path.join(base["sizes"], "ingest_batch=-9"))
     assert sc.build_run_sidecar(spark, base["postings"], "-9")
 
@@ -361,7 +362,8 @@ def test_unmatchable_tag_fails_open_to_scan(spark, tmp_path):
     odd = _postings_df(spark, 0, 300, "odd")
     _write_run(spark, base["postings"], "a%25b", odd, mod)
     adm._write_sizes_run(
-        spark, os.path.join(base["postings"], "ingest_batch=a%25b"),
+        spark.read.parquet(
+            os.path.join(base["postings"], "ingest_batch=a%25b")),
         os.path.join(base["sizes"], "ingest_batch=a%25b"))
     assert sc.build_run_sidecar(spark, base["postings"], "a%25b")
     # sanity: Spark's view of the partition value differs from the tag

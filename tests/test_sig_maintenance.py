@@ -160,7 +160,7 @@ def test_ingest_documents_missing_sig_table_raises_typed(
         spark, split_engine, tmp_path):
     eng, _, _ = split_engine
     d = {k: str(tmp_path / k) for k in
-         ("watch", "corpus", "postings", "log", "ckpt")}
+         ("watch", "corpus", "postings", "log", "ckpt", "sizes")}
     (spark.createDataFrame(
         [(1, "a lone document for the bootstrap error", "en", "t")],
         "doc_id long, text string, lang string, source string")
@@ -168,7 +168,8 @@ def test_ingest_documents_missing_sig_table_raises_typed(
     with pytest.raises(ValueError, match="materialize_signatures"):
         eng.ingest_documents(
             d["watch"], d["corpus"], d["postings"], d["log"],
-            d["ckpt"], sig_table="no_such_sig_table",
+            d["ckpt"], sizes_dir=d["sizes"],
+            sig_table="no_such_sig_table",
             sig_path=str(tmp_path / "nope"))
 
 

@@ -118,6 +118,32 @@ def test_commit_type_drift_refused(spark, tmp_path):
     assert dict(t.read().dtypes)["m"] == "int"
 
 
+def test_bucket_count_mismatch_refused(spark, tmp_path):
+    """create() records the bucket count: a handle opened with another
+    one would route a point read to the wrong bucket (an existing key
+    reads as absent) and stage commits under a second bucket
+    function, so every bucket computation refuses it — also once the
+    records below a checkpoint are expired."""
+    from data_ingestion_challenge_spark.serving import _murmur3_long
+
+    t = _mk(spark, tmp_path, [(k, k, 0) for k in range(20)])
+    # a key whose 32-bucket routing differs from its 4-bucket one
+    k = next(k for k in range(20) if _murmur3_long(k) % 32 >= 4)
+    other = TxnTable(spark, t.path, key="k")  # the default 32 buckets
+    with pytest.raises(ValueError, match="n_buckets"):
+        other.point_read(k)
+    row = spark.createDataFrame([(99, 1, 1)], "k long, n long, m int")
+    for commit in (other.append_run, other.merge_into):
+        with pytest.raises(ValueError, match="n_buckets"):
+            commit(row)
+    assert t.version() == 1
+    t.checkpoint()
+    t.expire_log()
+    with pytest.raises(ValueError, match="n_buckets"):
+        other.point_read(k)
+    assert [tuple(r) for r in t.point_read(k).collect()] == [(k, k, 0)]
+
+
 # --------------------------------------- base-less ladder escalation
 
 
